@@ -123,19 +123,20 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return assigned, percluster
 
-    # Collapse guard (ADVICE r15): materialize the 8-row per-cluster
-    # aggregate the declared grid consumes ANYWAY (persist + collect —
-    # the healthy path computes it exactly once, same as before, just
-    # eagerly), and refit with k-means|| seeding if random init left a
+    # Collapse guard (ADVICE r15): collect the 8-row per-cluster
+    # aggregate the declared grid consumes ANYWAY (computed exactly once,
+    # eagerly) and refit with k-means|| seeding if random init left a
     # cluster empty. Duplicate-seed collapse is data-dependent and
     # vanishingly rare, but silently flipping ``nonempty`` to false is
-    # the one failure the contract exists to catch.
+    # the one failure the contract exists to catch. The grid reads the
+    # collected rows back as a local relation, so no cache entry outlives
+    # the query.
     assigned, percluster = _fit_percluster("random")
-    percluster = percluster.persist()
-    if sum(1 for r in percluster.collect() if r.n_vecs > 0) < 8:
-        percluster.unpersist()
+    rows = percluster.collect()
+    if sum(1 for r in rows if r.n_vecs > 0) < 8:
         assigned, percluster = _fit_percluster("k-means||")
-        percluster = percluster.persist()
+        rows = percluster.collect()
+    percluster = spark.createDataFrame(rows, percluster.schema)
 
     # TSS = sum over dims of n * variance — one narrow 64-key shuffle
     # (posexplode -> per-dim variance), reduced to a single row and

@@ -4,62 +4,28 @@ Every declared query from SURVEY.md §2.2 registers itself here via the
 :func:`query` decorator. ``ORACLES`` holds the DuckDB-runnable ANSI SQL for
 the oracle-checked subset; rows-only queries register with ``oracle=None``.
 
-The registered callable first applies the runtime conf baseline
-(session.configure) so the driver's own SparkSession reads the fixtures
-correctly, then delegates to the implementation.
-
-Wide-state shapes additionally carry a ``sizing_hint`` — a callable
-``(sf_dir) -> widest-exchange byte estimate`` (usually
-``session.parquet_bytes`` of the shuffled fact table, times the fan-out
-for exploding plans). Before delegating, the wrapper routes the estimate
-through ``session.sized_shuffle_partitions`` (BASELINE.md rule 2) and
-sets ``spark.sql.shuffle.partitions`` for this execution; unhinted
-queries restore the session's baseline count, so a hint never leaks into
-the next query of a shared-session suite. Sub-GB estimates floor at the
-baseline, so fixture-scale plans are byte-identical with or without the
-hint — the hint only acts at real volume (the 1000x probes), where it
-reproduces the hand-tuned winners hands-free.
-
-Execution scoping: Spark reads ``spark.sql.shuffle.partitions`` when a
-job RUNS, not when the DataFrame is built, so a build-time conf.set alone
-would bind every interleaved execution to the LAST-built query's count
-(the r10 verdict's scope trap). The wrapper therefore also binds the
-resolved count to the returned DataFrame's own execution
-(:func:`_bind_execution_conf`): the frame is re-classed into a thin
-per-DataFrame-class subclass whose action entry points
-(collect/count/toPandas/... and the ``write``/``writeTo`` sinks)
-re-apply this query's count just before running, so building several
-declared queries from one session and executing them in any order runs
-each at its own sizing. The binding PROPAGATES through composition
-(VERDICT r11 task 5): DataFrame-returning transformations on a bound
-frame return bound frames carrying the same count; ``groupBy``/
-``rollup``/``cube`` route through a thin builder proxy so their
-aggregates inherit too; the ``write``/``writeTo`` sinks return proxied
-writers that re-apply the count at every builder/terminal call (so a
-writer held across another query's build still submits at its owner's
-sizing — the r11 ``writeTo`` escape). Temp-view consumers can close
-their escape: view registrations from a bound frame note the owner's
-count in a session-scoped registry, and :func:`bound_sql` re-binds a
-``spark.sql`` statement referencing such views to the largest owner's
-sizing (r12 task 8). Remaining escapes, documented as permanent: RAW
-``spark.sql`` (not routed through ``bound_sql``) and RDD round-trips
-produce unbound plans executing at whatever the conf then holds —
-sessions mixing those with hinted volume should add
-``session.adaptive_sizing_conf()`` (the runtime-adaptive complement;
-NOT applied per-hint here because its 16MB advisory is a measured
-1.2x loss on small-per-partition-state shapes like dedup_near_minhash
-at 1000x, BASELINE.md — static propagation is exact and side-effect
-free). ``SPARK_GRAFT_SIZING_HINTS=0`` disables hints (the A/B lever).
+Each registered callable applies the runtime conf baseline
+(``session.configure``), then resolves one conf dict for the query: its
+``extra_confs`` plus a ``spark.sql.shuffle.partitions`` count when its
+``sizing_hint`` estimate, routed through ``session.sized_shuffle_partitions``
+(BASELINE.md rule 2), sizes above the session's live count. The query
+function runs inside that scope, so eager build-time jobs see it; a
+non-empty scope is also re-entered by the returned frame's actions and by
+its ``write``/``writeTo`` sinks (Spark reads these confs at job
+submission, so queries built and run interleaved each execute at their
+own). Every scope restores on exit, so the live conf is the session's
+baseline. Frames derived from a declared query, its temp views and raw
+``spark.sql`` run at the session's own confs: every scoped conf is
+semantics-free (shuffle count, broadcast threshold, bloom gates), so
+only their plans can differ. Sub-GB estimates floor to the live count,
+so at fixture scale only ``join_runtime_bloom`` carries a scope and every
+other query returns Spark's own DataFrame untouched.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
-import re
-import threading
 from collections.abc import Callable
-from contextlib import contextmanager
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from multiomix_aws_emr_spark.session import (
     configure,
     executor_task_share_bytes,
+    scoped_confs,
     sized_shuffle_partitions,
 )
 
@@ -79,92 +46,37 @@ SIZING_HINTS: dict[str, Callable[[str], int]] = {}
 _SHUFFLE_CONF = "spark.sql.shuffle.partitions"
 
 
-@contextmanager
-def _scoped_confs(spark: SparkSession, extras: Optional[dict]):
-    """Apply ``extras`` (conf key -> value) for the duration of one action
-    and restore the prior values on exit — the per-query mechanism for
-    OPTIMIZER confs that must be live at job-submission time (runtime
-    bloom-filter injection, broadcast thresholds) without leaking into the
-    next query of a shared-session suite. Scoped around eager actions
-    only; ``toLocalIterator`` runs its incremental jobs after the scope
-    closes, so extras-carrying queries must not rely on it.
-
-    Threading contract (ADVICE r12): Spark confs are SESSION-GLOBAL, so
-    a concurrent thread's action can plan under this scope's values (or
-    the restore can clobber an interleaved scope). RESULTS stay correct
-    — every extras key shipped here is semantics-free (optimizer hints:
-    bloom injection, broadcast thresholds) — but plans and perf of
-    interleaved actions can flake. Extras-carrying queries therefore
-    assume single-threaded actions; suites that thread concurrent
-    actions (test_sketchcache.py's pattern) must keep extras-scoped
-    queries out of the threaded section or accept plan nondeterminism.
-    Serializing all bound actions behind one lock was considered and
-    rejected: it would penalize the common extras-free path to protect
-    a rare, correctness-neutral interleave."""
-    if not extras:
-        yield
-        return
-    saved: dict = {}
-    for key, value in extras.items():
-        try:
-            saved[key] = spark.conf.get(key)
-        except Exception:
-            saved[key] = None
-        spark.conf.set(key, value)
+def _query_confs(
+    spark: SparkSession,
+    hint: Optional[Callable[[str], int]],
+    extras: Optional[dict],
+    sf_dir: str,
+) -> dict:
+    """The confs one declared query runs under: ``extras`` plus a
+    rule-2-sized shuffle count when the hint clears the live count."""
+    confs = dict(extras or {})
+    if hint is None:
+        return confs
     try:
-        yield
-    finally:
-        for key, old in saved.items():
-            try:
-                if old is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, old)
-            except Exception:
-                pass
+        # Floor/wave on the session's configured parallelism, not the
+        # machine core count, so a sub-GB estimate yields exactly the
+        # live count. Per-task share comes from the executor sizing confs
+        # when set (multi-JVM masters), else the env driver heap.
+        live = int(spark.conf.get(_SHUFFLE_CONF))
+        n = sized_shuffle_partitions(
+            hint(sf_dir),
+            cores=live,
+            per_task_share_bytes=executor_task_share_bytes(spark),
+        )
+    except (OSError, ValueError):
+        return confs  # unreadable path / non-numeric count: keep the live one
+    if n > live:
+        confs[_SHUFFLE_CONF] = str(n)
+    return confs
 
 
-def _apply_sizing(
-    spark: SparkSession, hint: Optional[Callable[[str], int]], sf_dir: str
-) -> str:
-    """Set the execution-time shuffle partition count for one declared
-    query: rule-2-sized when a hint estimate clears the session baseline,
-    the baseline otherwise (which also un-does a previous query's hint).
-    Returns the resolved count (a string, conf-value form) so the wrapper
-    can re-bind it to the query's own actions."""
-    sc = spark.sparkContext
-    # The baseline is captured eagerly at session build/configure time
-    # (session.build_session / session.configure — ADVICE r10: a lazy
-    # first-execution capture could freeze in a caller's temporary conf
-    # override). The fallback below only serves direct _apply_sizing
-    # calls on sessions that never passed through either.
-    baseline = getattr(sc, "_maes_shuffle_baseline", None)
-    if baseline is None:
-        baseline = spark.conf.get(_SHUFFLE_CONF)
-        sc._maes_shuffle_baseline = baseline
-    n = None
-    if hint is not None and os.environ.get("SPARK_GRAFT_SIZING_HINTS") != "0":
-        try:
-            # Floor/wave on the SESSION's configured parallelism, not the
-            # machine core count: "sf0.1 plans unchanged" means a sub-GB
-            # estimate must yield exactly the baseline the session runs at.
-            # Per-task share comes from the executor sizing confs when set
-            # (multi-JVM masters), else the env driver heap (single-JVM).
-            n = sized_shuffle_partitions(
-                hint(sf_dir),
-                cores=int(baseline),
-                per_task_share_bytes=executor_task_share_bytes(spark),
-            )
-        except (OSError, ValueError):
-            n = None  # unreadable path / non-numeric baseline: keep baseline
-    target = str(n) if n is not None and n > int(baseline) else str(baseline)
-    if spark.conf.get(_SHUFFLE_CONF) != target:
-        spark.conf.set(_SHUFFLE_CONF, target)
-    return target
-
-
-#: DataFrame action entry points re-bound by :func:`_bind_execution_conf`;
-#: the ``write``/``writeTo`` sinks are re-bound separately.
+#: DataFrame action entry points that re-enter the owning query's scope.
+#: ``toLocalIterator`` runs its incremental jobs after the scope closes.
 _ACTION_METHODS = (
     "collect",
     "count",
@@ -180,414 +92,81 @@ _ACTION_METHODS = (
     "isEmpty",
 )
 
-#: sink entry points: ``write`` is a property (returns DataFrameWriter);
-#: ``writeTo`` is a PLAIN METHOD in PySpark 4.x returning a
-#: DataFrameWriterV2 (the r11 ADVICE escape: an isinstance(…, property)
-#: check silently skipped it). Both are detected by their actual
-#: descriptor kind at class-build time, and both return a
-#: :class:`_BoundWriter` proxy so the TERMINAL call (save/append/…)
-#: re-applies the owner's count even when the writer is held across
-#: another query's build.
-_SINK_ENTRY_POINTS = ("write", "writeTo")
-
-#: DataFrame -> DataFrame transformations through which the binding
-#: propagates: composing on a declared query keeps its sizing.
-_TRANSFORM_METHODS = (
-    "select",
-    "selectExpr",
-    "filter",
-    "where",
-    "withColumn",
-    "withColumns",
-    "withColumnRenamed",
-    "withColumnsRenamed",
-    "drop",
-    "dropDuplicates",
-    "drop_duplicates",
-    "dropDuplicatesWithinWatermark",
-    "dropna",
-    "fillna",
-    "replace",
-    "distinct",
-    "limit",
-    "offset",
-    "orderBy",
-    "sort",
-    "sortWithinPartitions",
-    "repartition",
-    "repartitionByRange",
-    "coalesce",
-    "alias",
-    "join",
-    "crossJoin",
-    "union",
-    "unionAll",
-    "unionByName",
-    "intersect",
-    "intersectAll",
-    "exceptAll",
-    "subtract",
-    "sample",
-    "toDF",
-    "hint",
-    "checkpoint",
-    "localCheckpoint",
-    "withWatermark",
-    "transform",
-)
-
-#: grouping builders (return GroupedData, not DataFrame): routed through
-#: :class:`_BoundBuilder` so ``.agg``/``.pivot(...).agg`` inherit.
-_GROUPING_METHODS = ("groupBy", "groupby", "rollup", "cube")
-
-#: view registrations from a bound frame NOTE the owner's sizing in a
-#: session-scoped registry so ``spark.sql`` consumers can re-bind via
-#: :func:`bound_sql` — the r12 temp-view escape, closed for callers who
-#: route through it (raw ``spark.sql`` stays documented + remedied with
-#: ``session.adaptive_sizing_conf``).
-_VIEW_METHODS = (
-    "createOrReplaceTempView",
-    "createTempView",
-    "createGlobalTempView",
-    "createOrReplaceGlobalTempView",
-)
-
-#: registration-order stamps + init lock for the per-session view
-#: registry (two threads registering a fresh session's first views must
-#: not each install a dict and drop the other's entry)
-_VIEW_REG_SEQ = itertools.count()
-_VIEW_REG_LOCK = threading.Lock()
-
-
-class _BoundBuilder:
-    """Thin proxy over an intermediate builder (GroupedData) produced by a
-    bound frame: DataFrames returned by its methods inherit the owning
-    query's execution binding; nested builders (``pivot``) re-wrap."""
-
-    __slots__ = ("_inner", "_conf", "_extras")
-
-    def __init__(self, inner, conf, extras=None):
-        object.__setattr__(self, "_inner", inner)
-        object.__setattr__(self, "_conf", conf)
-        object.__setattr__(self, "_extras", extras)
-
-    def __getattr__(self, name):
-        val = getattr(self._inner, name)
-        if not callable(val):
-            return val
-        conf = self._conf
-        extras = self._extras
-
-        def call(*args, **kwargs):
-            out = val(*args, **kwargs)
-            if isinstance(out, DataFrame):
-                return _bind_execution_conf(out, *conf, extras=extras)
-            if type(out) is type(self._inner):
-                return _BoundBuilder(out, conf, extras)
-            return out
-
-        return call
-
 
 class _BoundWriter:
-    """Thin proxy over a DataFrameWriter/DataFrameWriterV2 from a bound
-    frame: EVERY method call re-applies the owner's shuffle-partition
-    count first, so the terminal action (``save``/``parquet``/``append``/
-    ``create``/…) submits the job at the bound sizing no matter what was
-    built in between; builder-chaining calls (``mode``/``option``/
-    ``using``) re-wrap their returned writer."""
+    """Proxy over a DataFrameWriter/DataFrameWriterV2 from a scoped frame:
+    every call runs inside the owner's scope, so the terminal call
+    (``save``/``append``/``create``/…) submits at the owner's confs even
+    when the writer is held across another query's build; chained
+    builder calls (``mode``/``option``/``using``) re-wrap."""
 
-    __slots__ = ("_inner", "_conf", "_extras")
+    __slots__ = ("_inner", "_scope")
 
-    def __init__(self, inner, conf, extras=None):
-        object.__setattr__(self, "_inner", inner)
-        object.__setattr__(self, "_conf", conf)
-        object.__setattr__(self, "_extras", extras)
+    def __init__(self, inner, scope):
+        self._inner = inner
+        self._scope = scope
 
     def __getattr__(self, name):
         val = getattr(self._inner, name)
         if not callable(val):
             return val
-        conf = self._conf
-        extras = self._extras
 
         def call(*args, **kwargs):
-            spark, target = conf
-            if spark.conf.get(_SHUFFLE_CONF) != target:
-                spark.conf.set(_SHUFFLE_CONF, target)
-            with _scoped_confs(spark, extras):
+            with scoped_confs(*self._scope):
                 out = val(*args, **kwargs)
-            if out is self._inner or type(out) is type(self._inner):
-                return _BoundWriter(out, conf, extras)
+            if type(out) is type(self._inner):
+                return _BoundWriter(out, self._scope)
             return out
 
         return call
 
-#: one bound subclass per concrete DataFrame class, built lazily
+
+#: one scoped subclass per concrete DataFrame class, built lazily
 _BOUND_CLASSES: dict[type, type] = {}
 
 
 def _bound_class(base: type) -> type:
-    """A subclass of ``base`` whose action methods and sink entry points
-    re-apply the owning query's shuffle-partition count (read from the
-    instance's ``_maes_exec_conf``) just before delegating, and whose
-    transformations/grouping builders propagate the binding to derived
-    frames. Built once per concrete DataFrame class (classic vs connect
-    vs test doubles)."""
+    """A subclass of ``base`` whose actions run inside the instance's
+    ``_query_scope`` and whose ``write`` (a property) and ``writeTo`` (a
+    plain method in PySpark 4.x) return :class:`_BoundWriter` proxies."""
 
-    def _reapply(self) -> None:
-        spark, target = self._maes_exec_conf
-        if spark.conf.get(_SHUFFLE_CONF) != target:
-            spark.conf.set(_SHUFFLE_CONF, target)
-
-    ns: dict = {"_maes_reapply": _reapply}
-
-    def _make_action(name: str, method):
+    def action(method):
         def run(self, *args, **kwargs):
-            self._maes_reapply()
-            with _scoped_confs(
-                self._maes_exec_conf[0],
-                getattr(self, "_maes_extra_confs", None),
-            ):
+            with scoped_confs(*self._query_scope):
                 return method(self, *args, **kwargs)
 
-        run.__name__ = name
-        run.__doc__ = getattr(method, "__doc__", None)
+        run.__name__ = method.__name__
+        run.__doc__ = method.__doc__
         return run
 
-    for name in _ACTION_METHODS:
-        method = getattr(base, name, None)
-        if callable(method):
-            ns[name] = _make_action(name, method)
-
-    def _make_transform(name: str, method, eager: bool = False):
-        def run(self, *args, **kwargs):
-            if eager:  # checkpoint/localCheckpoint submit a job NOW
-                self._maes_reapply()
-            out = method(self, *args, **kwargs)
-            if isinstance(out, DataFrame) and out is not self:
-                return _bind_execution_conf(
-                    out,
-                    *self._maes_exec_conf,
-                    extras=getattr(self, "_maes_extra_confs", None),
-                )
-            return out
-
-        run.__name__ = name
-        run.__doc__ = getattr(method, "__doc__", None)
-        return run
-
-    for name in _TRANSFORM_METHODS:
-        method = getattr(base, name, None)
-        if callable(method):
-            ns[name] = _make_transform(
-                name, method, eager=name in ("checkpoint", "localCheckpoint")
-            )
-
-    def _make_grouping(name: str, method):
-        def run(self, *args, **kwargs):
-            return _BoundBuilder(
-                method(self, *args, **kwargs),
-                self._maes_exec_conf,
-                getattr(self, "_maes_extra_confs", None),
-            )
-
-        run.__name__ = name
-        run.__doc__ = getattr(method, "__doc__", None)
-        return run
-
-    for name in _GROUPING_METHODS:
-        method = getattr(base, name, None)
-        if callable(method):
-            ns[name] = _make_grouping(name, method)
-
-    def _make_view(name: str, method):
-        def run(self, *args, **kwargs):
-            out = method(self, *args, **kwargs)
-            view_name = args[0] if args else kwargs.get("name")
-            if not isinstance(view_name, str):
-                return out  # unexpected calling convention: stay unbound
-            spark = self._maes_exec_conf[0]
-            with _VIEW_REG_LOCK:  # two first-registrations must not race
-                reg = getattr(spark, "_maes_view_confs", None)
-                if reg is None:
-                    reg = {}
-                    try:
-                        spark._maes_view_confs = reg
-                    except Exception:
-                        return out  # session double refusing attributes
-                # SQL identifiers are case-insensitive; the registry key
-                # is folded so bound_sql's scan matches any casing. The
-                # seq stamps registration ORDER so conflicting extras
-                # resolve later-wins even when a name is re-registered.
-                reg[view_name.lower()] = (
-                    self._maes_exec_conf[1],
-                    getattr(self, "_maes_extra_confs", None),
-                    next(_VIEW_REG_SEQ),
-                )
-            return out
-
-        run.__name__ = name
-        run.__doc__ = getattr(method, "__doc__", None)
-        return run
-
-    for name in _VIEW_METHODS:
-        method = getattr(base, name, None)
-        if callable(method):
-            ns[name] = _make_view(name, method)
-
-    def _make_sink_property(name: str, prop):
-        def fget(self):
-            self._maes_reapply()
-            return _BoundWriter(
-                prop.__get__(self, type(self)),
-                self._maes_exec_conf,
-                getattr(self, "_maes_extra_confs", None),
-            )
-
-        return property(fget, doc=getattr(prop, "__doc__", None))
-
-    def _make_sink_method(name: str, method):
-        def run(self, *args, **kwargs):
-            self._maes_reapply()
-            return _BoundWriter(
-                method(self, *args, **kwargs),
-                self._maes_exec_conf,
-                getattr(self, "_maes_extra_confs", None),
-            )
-
-        run.__name__ = name
-        run.__doc__ = getattr(method, "__doc__", None)
-        return run
-
-    for name in _SINK_ENTRY_POINTS:
-        prop = getattr(base, name, None)
-        if isinstance(prop, property):
-            ns[name] = _make_sink_property(name, prop)
-        elif callable(prop):
-            # PySpark 4.x writeTo: a plain method, not a property — the
-            # isinstance(…, property) check alone skipped it (ADVICE r11)
-            ns[name] = _make_sink_method(name, prop)
-
+    ns: dict = {
+        name: action(getattr(base, name))
+        for name in _ACTION_METHODS
+        if callable(getattr(base, name, None))
+    }
+    write = getattr(base, "write", None)
+    if isinstance(write, property):
+        ns["write"] = property(
+            lambda self: _BoundWriter(write.fget(self), self._query_scope)
+        )
+    write_to = getattr(base, "writeTo", None)
+    if callable(write_to):
+        ns["writeTo"] = lambda self, *args, **kwargs: _BoundWriter(
+            write_to(self, *args, **kwargs), self._query_scope
+        )
     sub = type(base.__name__, (base,), ns)
     sub.__module__ = base.__module__
     return sub
 
 
-def _bind_execution_conf(
-    df: DataFrame,
-    spark: SparkSession,
-    target: str,
-    extras: Optional[dict] = None,
-) -> DataFrame:
-    """Bind this query's resolved shuffle-partition count to the returned
-    DataFrame's OWN execution: re-class the instance into a thin subclass
-    whose actions (and ``write``/``writeTo`` sinks) re-apply the count
-    just before running. Spark reads the conf at job submission, so the
-    set-at-action-time value is the one the exchange planner sees —
-    interleaved executions of several declared queries each run at their
-    own sizing (VERDICT r10 task 2). The instance stays a DataFrame for
-    isinstance/schema/explain/transformations; frames DERIVED from it
-    through the wrapped transformations/grouping builders inherit the
-    binding (VERDICT r11 task 5 — see the module docstring for the two
-    documented escapes: ``spark.sql`` over temp views, RDD round-trips)."""
-    if hasattr(df, "_maes_exec_conf"):
-        # already bound (a declared query composed from another's frame):
-        # retarget in place rather than stacking subclasses
-        df._maes_exec_conf = (spark, target)
-        df._maes_extra_confs = extras
-        return df
-    base = type(df)
-    sub = _BOUND_CLASSES.get(base)
+def _bind_scope(df: DataFrame, spark: SparkSession, confs: dict) -> DataFrame:
+    """Re-class ``df`` so its actions and sinks re-enter ``confs``."""
+    sub = _BOUND_CLASSES.get(type(df))
     if sub is None:
-        sub = _BOUND_CLASSES[base] = _bound_class(base)
-    try:
-        df.__class__ = sub
-        df._maes_exec_conf = (spark, target)
-        if extras:
-            df._maes_extra_confs = extras
-    except (AttributeError, TypeError):
-        pass  # slotted/frozen DataFrame variants: leave unbound
+        sub = _BOUND_CLASSES[type(df)] = _bound_class(type(df))
+    df._query_scope = (spark, confs)
+    df.__class__ = sub
     return df
-
-
-def bound_sql(spark: SparkSession, sql: str) -> DataFrame:
-    """``spark.sql`` with the temp-view sizing escape closed: when the
-    statement references a view that was registered FROM A BOUND FRAME
-    (the wrapped ``createOrReplaceTempView``/... note the owner's count
-    in a session-scoped registry), the returned frame is re-bound to the
-    largest referenced owner's shuffle-partition count (and the union of
-    their scoped extras, later registrations winning on key conflicts) —
-    so SQL over a hinted query's view executes at that query's sizing
-    instead of whatever the conf then holds. Statements referencing no
-    bound view return Spark's frame untouched.
-
-    Reference detection is a conservative identifier scan (any word in
-    the statement matching a registered view name, case-folded like SQL
-    identifiers) — run AFTER stripping string literals and comments
-    (single- and double-quoted, with ``\\``-escape and doubling per
-    Spark's default non-ANSI lexer), so a view name inside a literal,
-    ``-- line`` or ``/* block */`` comment can no longer raise the
-    count or drag in an unrelated view's extras, and an escaped quote
-    cannot open a phantom literal that swallows a real reference
-    (ADVICE r13; escape handling r14). Column aliases coinciding with a view name can
-    still match; two guards keep such false positives harmless: the bound
-    target is floored at the SESSION BASELINE (a statement whose only
-    "reference" is a column name coinciding with a small view's name can
-    never be re-bound BELOW the count it would have run at unbound), and
-    conflicting extras resolve by registration order, later wins.
-    Honest limits: raw ``spark.sql`` remains unbound (the documented
-    escape — remedy ``session.adaptive_sizing_conf``), and a bound
-    registration goes stale if the same name is later re-registered by
-    an UNBOUND frame (only bound frames can note themselves; clear
-    ``spark._maes_view_confs`` when recycling names across binding
-    regimes)."""
-    df = spark.sql(sql)
-    reg = getattr(spark, "_maes_view_confs", None)
-    if not reg:
-        return df
-    # scan identifiers on a literal/comment-stripped copy, matching the
-    # SESSION's lexer: single-quoted strings are always literals, a
-    # backslash escapes the next char inside either quote form (so
-    # 'it\'s' does not terminate early and open a phantom literal that
-    # swallows real references), '' / "" doubling re-enters, block
-    # comments are non-nesting. Double-quoted segments are literals
-    # under Spark's default lexer (quoted identifiers use backticks),
-    # but under spark.sql.ansi.doubleQuotedIdentifiers=true they are
-    # IDENTIFIERS — a view referenced as "view_name" must then keep its
-    # bound confs, so the scrub consults the live conf instead of
-    # assuming the default (ADVICE r15; escape handling r14)
-    dq_idents = (
-        str(
-            spark.conf.get("spark.sql.ansi.doubleQuotedIdentifiers", "false")
-        ).lower()
-        == "true"
-    )
-    scrub_re = (
-        r"'(?:\\.|''|[^'\\])*'"
-        + ("" if dq_idents else r"|\"(?:\\.|\"\"|[^\"\\])*\"")
-        + r"|--[^\n]*|/\*.*?\*/"
-    )
-    scrubbed = re.sub(scrub_re, " ", sql, flags=re.S)
-    idents = {
-        m.lower() for m in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", scrubbed)
-    }
-    hits = sorted(
-        (reg[n] for n in idents & set(reg)), key=lambda h: h[2]
-    )  # registration order: later registrations win extras conflicts
-    if not hits:
-        return df
-    baseline = getattr(
-        spark.sparkContext, "_maes_shuffle_baseline", None
-    ) or spark.conf.get(_SHUFFLE_CONF)
-    target = max((t for t, _, _ in hits), key=int)
-    if int(target) < int(baseline):
-        target = baseline
-    extras: dict = {}
-    for _, e, _ in hits:
-        if e:
-            extras.update(e)
-    return _bind_execution_conf(df, spark, target, extras=extras or None)
 
 
 def fact_bytes(table: str, fanout: float = 1.0) -> Callable[[str], int]:
@@ -612,22 +191,18 @@ def query(
     """Register a declared query (and its DuckDB oracle, if hash-checkable).
 
     ``sizing_hint``: optional ``(sf_dir) -> bytes`` estimate of the widest
-    exchange for wide-state shapes — see the module docstring.
-
-    ``extra_confs``: optional conf key -> value dict applied SCOPED around
-    each of the returned frame's actions (set -> run -> restore) for
-    optimizer behaviors read at job-submission time — e.g. runtime
-    bloom-filter injection thresholds. Never leaks: the prior values are
-    restored when the action returns, and the binding propagates through
-    derived frames/builders/writers exactly like the sizing count."""
+    exchange for wide-state shapes; ``extra_confs``: optional conf key ->
+    value dict for optimizer behaviour read at job submission (e.g.
+    runtime bloom-filter gates). Both are scoped to the query's own build,
+    actions and sinks — see the module docstring."""
 
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             configure(spark)
-            target = _apply_sizing(spark, sizing_hint, sf_dir)
-            return _bind_execution_conf(
-                fn(spark, sf_dir), spark, target, extras=extra_confs
-            )
+            confs = _query_confs(spark, sizing_hint, extra_confs, sf_dir)
+            with scoped_confs(spark, confs):
+                df = fn(spark, sf_dir)
+            return _bind_scope(df, spark, confs) if confs else df
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

@@ -311,10 +311,10 @@ def join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "s_suppkey")
 
 
-#: Optimizer confs for the runtime-bloom demonstration, applied SCOPED
-#: around the query's own actions (registry ``extra_confs`` — restored the
-#: moment the action returns). Each maps a fixture-scale stand-in to the
-#: 100 TB reality it reproduces:
+#: Optimizer confs for the runtime-bloom demonstration, scoped to the
+#: query's own build, actions and sinks (registry ``extra_confs`` —
+#: restored the moment each returns). Each maps a fixture-scale stand-in
+#: to the 100 TB reality it reproduces:
 _RUNTIME_BLOOM_CONFS = {
     # At 100 TB the ~1/5-selective orders slice is far beyond any broadcast
     # threshold, so the real plan is a shuffle join; fixtures would pick
@@ -331,8 +331,8 @@ _RUNTIME_BLOOM_CONFS = {
     # real scale a tighter dim predicate meets the stock default — and any
     # creationSideThreshold raise MUST be paired with expectedNumItems/
     # numBits raises: the stock 1M-item/1MB sketch saturates past ~1M
-    # creation-side keys and quietly halves the prune (measured at 100x,
-    # tools/bloom_probe.py "sized" variant; BASELINE.md NDV-sizing rule).
+    # creation-side keys and quietly halves the prune (measured at 100x;
+    # BASELINE.md NDV-sizing rule).
     "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "512MB",
 }
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -133,19 +134,6 @@ def configure(spark: SparkSession) -> SparkSession:
                 "spark.sql.shuffle.partitions",
                 str(spark.sparkContext.defaultParallelism),
             )
-        # Capture the sizing baseline HERE — the earliest point on every
-        # declared-query path (the registry wrapper calls configure before
-        # _apply_sizing) — not lazily at first query execution, where a
-        # caller's temporary conf override (bounded_state_partitions, a
-        # manual conf.set) would be frozen in as the permanent "restore"
-        # value (ADVICE r10). build_session overwrites this with the value
-        # it actually chose, which also re-keys the cache when a session
-        # is rebuilt in-process with a different shuffle_bytes.
-        sc = spark.sparkContext
-        if getattr(sc, "_maes_shuffle_baseline", None) is None:
-            sc._maes_shuffle_baseline = spark.conf.get(
-                "spark.sql.shuffle.partitions"
-            )
     except Exception:
         pass
     try:
@@ -192,15 +180,31 @@ def build_session(
     conf = assemble_conf(shuffle_partitions, extra_conf)
     for key, value in conf.items():
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
-    # The sizing baseline is whatever THIS build chose (caller overrides
-    # win per assemble_conf). Overwrite unconditionally: getOrCreate may
-    # have reused a SparkContext whose cached baseline reflects an older
-    # build's shuffle_bytes (ADVICE r10 / VERDICT r10 nit 2).
-    spark.sparkContext._maes_shuffle_baseline = conf[
-        "spark.sql.shuffle.partitions"
-    ]
-    return configure(spark)
+    return configure(builder.getOrCreate())
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str] | None):
+    """Set ``confs`` (key -> value) for the body and restore the prior
+    values on exit, unsetting keys that were unset before. Spark confs
+    are session-global, so concurrent actions in other threads see the
+    scoped values too; every caller scopes only semantics-free confs
+    (partition counts, optimizer gates), so results stay correct."""
+    if not confs:
+        yield
+        return
+    saved: dict[str, str | None] = {}
+    for key, value in confs.items():
+        saved[key] = spark.conf.get(key, None)
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, old in saved.items():
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 def parquet_bytes(*paths: str) -> int:

@@ -18,10 +18,11 @@ from __future__ import annotations
 
 import os
 import uuid
-from contextlib import contextmanager
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+from multiomix_aws_emr_spark.session import scoped_confs
 
 
 def stream_checkpoint_dir(spark: SparkSession, prefix: str) -> str:
@@ -190,26 +191,16 @@ _ROCKSDB_PROVIDER = (
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
-@contextmanager
 def bounded_state_partitions(spark: SparkSession, n: int | None = None):
-    """Temporarily size shuffle/state partitions (and, when
-    ``SPARK_GRAFT_STATE_STORE=rocksdb``, the state-store provider) for a
+    """Scope the shuffle/state partition count (and, when
+    ``SPARK_GRAFT_STATE_STORE=rocksdb``, the state-store provider) to a
     bounded stream run."""
     if n is None:
         n = max(4, spark.sparkContext.defaultParallelism // 4)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_provider = spark.conf.get(_PROVIDER_CONF, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    confs = {"spark.sql.shuffle.partitions": str(n)}
     if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        spark.conf.set(_PROVIDER_CONF, _ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        if old_provider is None:
-            spark.conf.unset(_PROVIDER_CONF)
-        else:
-            spark.conf.set(_PROVIDER_CONF, old_provider)
+        confs[_PROVIDER_CONF] = _ROCKSDB_PROVIDER
+    return scoped_confs(spark, confs)
 
 
 def await_bounded(q, what: str = "bounded streaming run") -> None:

@@ -452,6 +452,19 @@ def test_mlkmeans_invariants(spark, sf_dir):
     assert rows == again  # seeded fit on fixed data is deterministic
 
 
+def test_mlkmeans_leaves_no_cache_entry(spark, sf_dir):
+    """A run adds no CacheManager entry: the 8-row per-cluster aggregate
+    is read back from its collected rows, and the persisted vectorized
+    corpus is keyed on its plan, so every build shares one entry."""
+    from multiomix_aws_emr_spark.queries import QUERIES
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    QUERIES["ml_kmeans_embeddings"](spark, sf_dir).collect()
+    before = cache.numCachedEntries()
+    QUERIES["ml_kmeans_embeddings"](spark, sf_dir).collect()
+    assert cache.numCachedEntries() == before
+
+
 def test_temporal_join_matches_pandas_reference(spark):
     """Randomized differential test: the union+window temporal join must
     agree with pandas merge_asof (backward, inclusive) on every key."""

@@ -13,6 +13,7 @@ at 100 TB, asserted on the optimized plans so regressions fail loudly.
 import pytest
 
 from multiomix_aws_emr_spark.queries import QUERIES
+from multiomix_aws_emr_spark.session import scoped_confs
 
 
 def _plan(spark, sf_dir, qid: str) -> str:
@@ -332,14 +333,7 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, confs):
         fact = spark.range(0, 220000).select(
             F.when(F.col("id") < 200000, F.lit(0))
             .otherwise(F.col("id") % 100)
@@ -355,12 +349,6 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
         assert "isFinalPlan=true" in plan
         assert "skew=true" in plan, plan[:1500]
         assert "AQEShuffleRead skewed" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_runtime_bloom_filter_injected_on_selective_join(spark, sf_dir):
@@ -377,14 +365,7 @@ def test_runtime_bloom_filter_injected_on_selective_join(spark, sf_dir):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, confs):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         o = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
             F.col("o_orderpriority") == "1-URGENT"
@@ -396,12 +377,6 @@ def test_runtime_bloom_filter_injected_on_selective_join(spark, sf_dir):
         assert "bloom_filter_agg" in plan
         assert "might_contain" in plan
         assert j.count() > 0
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_observation_audits_pipeline_without_extra_jobs(spark, sf_dir):

@@ -14,13 +14,8 @@ Three contracts:
    autoBroadcastJoinThreshold=-1).
 """
 
-import pytest
-from pyspark.sql import functions as F
-
-from multiomix_aws_emr_spark.queries.registry import (
-    QUERIES,
-    _scoped_confs,
-)
+from multiomix_aws_emr_spark.queries.registry import QUERIES
+from multiomix_aws_emr_spark.session import scoped_confs
 
 BLOOM_QID = "join_runtime_bloom"
 _PROBE_CONFS = (
@@ -36,9 +31,9 @@ def _rows(df):
 
 def test_plan_has_injected_bloom_filter(spark, sf_dir):
     df = QUERIES[BLOOM_QID](spark, sf_dir)
-    extras = df._maes_extra_confs
-    assert extras, "declared query must carry its injection-gating confs"
-    with _scoped_confs(spark, extras):
+    scope = df._query_scope
+    assert scope[1], "declared query must carry its injection-gating confs"
+    with scoped_confs(*scope):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "bloom_filter_agg" in plan, plan
     assert "might_contain" in plan, plan
@@ -54,14 +49,14 @@ def test_no_injection_without_scoped_confs(spark, sf_dir):
 
 
 def test_bloom_filter_is_semantics_free(spark, sf_dir):
-    bound = QUERIES[BLOOM_QID](spark, sf_dir)
-    with_bloom = _rows(bound)  # action path applies the scoped confs
-    # rebuild the identical plan and run it with injection force-disabled
-    plain = QUERIES[BLOOM_QID](spark, sf_dir)
-    plain._maes_extra_confs = {
-        "spark.sql.optimizer.runtime.bloomFilter.enabled": "false"
-    }
-    assert with_bloom == _rows(plain)
+    scoped = QUERIES[BLOOM_QID](spark, sf_dir)
+    with_bloom = _rows(scoped)  # the action enters the query's scope
+    # a derived frame runs at the session's confs; disable injection too
+    plain = scoped.select("*")
+    assert type(plain) is type(spark.range(1))
+    off = {"spark.sql.optimizer.runtime.bloomFilter.enabled": "false"}
+    with scoped_confs(spark, off):
+        assert with_bloom == _rows(plain)
     assert len(with_bloom) > 0
 
 
@@ -69,19 +64,12 @@ def test_scoped_confs_restore_after_action(spark, sf_dir):
     before = {c: spark.conf.get(c) for c in _PROBE_CONFS}
     assert before["spark.sql.autoBroadcastJoinThreshold"] != "-1"
     df = QUERIES[BLOOM_QID](spark, sf_dir)
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == (
+        before["spark.sql.autoBroadcastJoinThreshold"]
+    )
     assert df.count() > 0
     after = {c: spark.conf.get(c) for c in _PROBE_CONFS}
     assert after == before
-
-
-def test_scope_propagates_through_derivation(spark, sf_dir):
-    # a frame DERIVED from the bound query inherits the scoped confs, so
-    # composing on the declared query still executes the injected plan
-    df = QUERIES[BLOOM_QID](spark, sf_dir).filter(F.col("n_items") > 0)
-    assert getattr(df, "_maes_extra_confs", None)
-    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    assert df.count() > 0
-    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before
 
 
 def test_oracle_parity(spark, sf_dir, duck):

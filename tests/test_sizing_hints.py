@@ -1,25 +1,62 @@
-"""Per-query rule-2 sizing hints (queries/registry._apply_sizing):
-wide-state declared shapes size their shuffle partition count from the
-widest-exchange byte estimate hands-free; fixture-scale estimates floor
-to the session baseline so plans are unchanged; hints never leak into
-the next (unhinted) query of a shared session."""
+"""Per-query rule-2 sizing hints (the ``@query`` wrapper in
+queries/registry.py): wide-state declared shapes size their shuffle
+partition count from the widest-exchange byte estimate hands-free, for
+their own build, actions and sinks only; fixture-scale estimates floor to
+the session's live count so those queries come back untouched; every
+scope restores, so the session reads its baseline between queries."""
 
-import os
+import pytest
 
 from multiomix_aws_emr_spark.queries import QUERIES
-from multiomix_aws_emr_spark.queries.registry import (
-    SIZING_HINTS,
-    _apply_sizing,
-    fact_bytes,
-)
+from multiomix_aws_emr_spark.queries import registry
+from multiomix_aws_emr_spark.queries.registry import SIZING_HINTS, fact_bytes
 
 CONF = "spark.sql.shuffle.partitions"
+BASE = "8"  # the local[8] test session's count
+#: a 14 GB estimate on the local[8] session with the default 8g heap:
+#: 14 GiB * 3 / (0.3 * 8g * 0.6 / 8) = 233.3 -> 240, whole waves of 8
+SIZED = "240"
 
 
-def _baseline(spark):
-    return getattr(spark.sparkContext, "_maes_shuffle_baseline", None) or (
-        spark.conf.get(CONF)
-    )
+def _14gb(_sf_dir):
+    return 14 << 30
+
+
+def _probe(spark):
+    """A one-task frame whose task adds the shuffle count its job was
+    submitted at (Spark ships the session's SQL confs to tasks as local
+    properties) to the returned accumulator."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def record(batches):
+        from pyspark import TaskContext
+
+        acc.add(int(TaskContext.get().getLocalProperty(CONF)))
+        yield from batches
+
+    return spark.range(0, 1, 1, 1).mapInPandas(record, "id long"), acc
+
+
+def _submitted_at(acc) -> str:
+    """The count the probe's last job ran at; resets the accumulator."""
+    seen, acc.value = acc.value, 0
+    return str(seen)
+
+
+@pytest.fixture
+def declare(spark, monkeypatch):
+    """Register scratch queries through the real ``@query`` wrapper
+    without touching the declared registry."""
+    monkeypatch.setattr(registry, "QUERIES", {})
+    monkeypatch.setattr(registry, "SIZING_HINTS", {})
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert spark.conf.get(CONF) == BASE
+
+    def _declare(fn, **kwargs):
+        return registry.query(fn.__name__, **kwargs)(fn)
+
+    yield _declare
+    assert spark.conf.get(CONF) == BASE
 
 
 def test_wide_shapes_carry_hints():
@@ -39,38 +76,44 @@ def test_wide_shapes_carry_hints():
 
 def test_fixture_scale_floors_to_baseline(spark, sf_dir):
     """Sub-GB estimates must leave the session count untouched — the
-    r8 lesson that raising the count on small state is a pure loss."""
-    before = spark.conf.get(CONF)
+    r8 lesson that raising the count on small state is a pure loss —
+    and the frame comes back as Spark's own DataFrame class."""
     df = QUERIES["sql_large_volume_customer"](spark, sf_dir)
-    assert spark.conf.get(CONF) == before
-    assert df.count() >= 0  # plan executes at the unchanged count
+    assert type(df) is type(spark.range(1))
+    assert spark.conf.get(CONF) == BASE
+    assert df.count() >= 0
+    assert spark.conf.get(CONF) == BASE
 
 
-def test_large_estimate_sizes_and_next_query_restores(spark, sf_dir):
-    base = _baseline(spark)
-    # 14 GB fact on the default heap -> well above the 8-core baseline
-    _apply_sizing(spark, lambda _sf: 14 << 30, sf_dir)
-    sized = int(spark.conf.get(CONF))
-    assert sized > int(base)
-    assert sized % 8 == 0  # whole waves of the local[8] test session
-    # an unhinted query must restore the baseline (no leak)
-    _apply_sizing(spark, None, sf_dir)
-    assert spark.conf.get(CONF) == base
+def test_large_estimate_sizes_and_next_query_restores(spark, sf_dir, declare):
+    seen = {}
+
+    def hinted(spark, sf_dir):
+        probe, acc = _probe(spark)
+        probe.collect()  # an eager build-time job
+        seen["build"] = _submitted_at(acc)
+        return spark.range(10)
+
+    def plain(spark, sf_dir):
+        seen["plain"] = spark.conf.get(CONF)
+        return spark.range(10)
+
+    declare(hinted, sizing_hint=_14gb)(spark, sf_dir)
+    assert seen["build"] == SIZED
+    assert spark.conf.get(CONF) == BASE
+    df = declare(plain)(spark, sf_dir)
+    assert seen["plain"] == BASE
+    assert type(df) is type(spark.range(1))
 
 
-def test_env_switch_disables_hints(spark, sf_dir, monkeypatch):
-    base = _baseline(spark)
-    monkeypatch.setenv("SPARK_GRAFT_SIZING_HINTS", "0")
-    _apply_sizing(spark, lambda _sf: 14 << 30, sf_dir)
-    assert spark.conf.get(CONF) == base
+def test_unreadable_hint_path_falls_back(spark, declare):
+    def unreadable(spark, sf_dir):
+        return spark.range(10)
 
-
-def test_unreadable_hint_path_falls_back(spark):
-    base = _baseline(spark)
-    _apply_sizing(
-        spark, fact_bytes("lineitem"), "/nonexistent/sf_dir"
+    df = declare(unreadable, sizing_hint=fact_bytes("lineitem"))(
+        spark, "/nonexistent/sf_dir"
     )
-    assert spark.conf.get(CONF) == base
+    assert type(df) is type(spark.range(1))
 
 
 def test_fact_bytes_applies_fanout(tmp_path):
@@ -95,88 +138,55 @@ def test_hint_engages_at_volume_math():
     )
 
 
-def test_registry_rejects_nothing_extra(monkeypatch):
-    # hints are a strict subset of declared queries; neutralize the A/B
-    # disable lever rather than asserting on the ambient shell (ADVICE r10)
-    monkeypatch.delenv("SPARK_GRAFT_SIZING_HINTS", raising=False)
+def test_registry_rejects_nothing_extra():
+    # hints are a strict subset of declared queries
     assert set(SIZING_HINTS) <= set(QUERIES)
 
 
-def test_interleaved_execution_binds_per_query(spark, sf_dir):
-    """The r10 scope trap, closed: build a hinted query, then an unhinted
-    one, then execute them in the WRONG order — each action must run at
-    its own resolved count, not the last-built query's."""
-    from multiomix_aws_emr_spark.queries.registry import _bind_execution_conf
+def test_interleaved_execution_binds_per_query(spark, sf_dir, declare):
+    """Build a hinted query, then an unhinted one, then execute them in
+    the WRONG order — each action runs at its own count, not the
+    last-built query's, and the session reads its baseline after each."""
+    probes = {}
 
-    base = _baseline(spark)
-    sized = _apply_sizing(spark, lambda _sf: 14 << 30, sf_dir)  # build #1
-    df_hinted = _bind_execution_conf(spark.range(100).toDF("x"), spark, sized)
-    plain = _apply_sizing(spark, None, sf_dir)  # build #2 restores baseline
-    df_plain = _bind_execution_conf(spark.range(50).toDF("y"), spark, plain)
-    assert plain == base and int(sized) > int(base)
-    assert spark.conf.get(CONF) == base  # last build wrote the baseline
+    def hinted(spark, sf_dir):
+        df, probes["hinted"] = _probe(spark)
+        return df
 
-    # executing the HINTED frame after the plain build re-applies its count
-    assert df_hinted.count() == 100
-    assert spark.conf.get(CONF) == sized
-    # and the plain frame re-applies the baseline
-    assert df_plain.count() == 50
-    assert spark.conf.get(CONF) == base
-    # any further action re-binds again (not first-action-only)
-    assert len(df_hinted.collect()) == 100
-    assert spark.conf.get(CONF) == sized
-    spark.conf.set(CONF, base)
+    def plain(spark, sf_dir):
+        df, probes["plain"] = _probe(spark)
+        return df
+
+    df_hinted = declare(hinted, sizing_hint=_14gb)(spark, sf_dir)
+    df_plain = declare(plain)(spark, sf_dir)
+    assert df_hinted.count() == 1
+    assert _submitted_at(probes["hinted"]) == SIZED
+    assert spark.conf.get(CONF) == BASE
+    assert df_plain.count() == 1
+    assert _submitted_at(probes["plain"]) == BASE
+    # every action re-enters the scope, not only the first
+    assert len(df_hinted.collect()) == 1
+    assert _submitted_at(probes["hinted"]) == SIZED
+    assert spark.conf.get(CONF) == BASE
 
 
-def test_declared_query_rebinds_at_action(spark, sf_dir):
-    """End-to-end through the registry wrapper: a declared frame is bound
-    (re-classed), stays a DataFrame, and a conf overwrite between build
-    and action (another query's build, a caller's conf.set) is undone at
-    action time — including through the .write sink property."""
-    from pyspark.sql import DataFrame
+def test_declared_query_rebinds_at_action(spark, sf_dir, declare):
+    """A hinted frame's count() and its noop ``write`` sink both submit
+    at the hinted count, and the session reads its baseline after."""
+    probes = {}
 
-    df = QUERIES["sql_large_volume_customer"](spark, sf_dir)
-    assert isinstance(df, DataFrame)
-    assert hasattr(df, "_maes_exec_conf")
-    base = _baseline(spark)
-    spark.conf.set(CONF, "7")  # simulate an interleaved build's leak
-    assert df.count() >= 0
-    assert spark.conf.get(CONF) == base  # fixture scale floors to baseline
-    # the .write sink re-binds too (the scale_probe consumption shape)
-    spark.conf.set(CONF, "7")
+    def hinted(spark, sf_dir):
+        df, probes["acc"] = _probe(spark)
+        return df
+
+    df = declare(hinted, sizing_hint=_14gb)(spark, sf_dir)
+    acc = probes["acc"]
+    assert df.count() == 1
+    assert _submitted_at(acc) == SIZED
+    assert spark.conf.get(CONF) == BASE
     df.write.mode("overwrite").format("noop").save()
-    assert spark.conf.get(CONF) == base
-
-
-def test_rebinding_retargets_in_place(spark, sf_dir):
-    """Binding an already-bound frame retargets it without stacking
-    subclasses (the composed-query path)."""
-    from multiomix_aws_emr_spark.queries.registry import _bind_execution_conf
-
-    df = _bind_execution_conf(spark.range(10).toDF("x"), spark, "9")
-    cls1 = type(df)
-    df = _bind_execution_conf(df, spark, "11")
-    assert type(df) is cls1
-    assert df.count() == 10
-    assert spark.conf.get(CONF) == "11"
-    spark.conf.set(CONF, _baseline(spark))
-
-
-def test_rebuilt_session_rekeys_baseline(spark):
-    """A session rebuilt in-process with a different sizing must not
-    serve the previous build's cached baseline (VERDICT r10 nit 2)."""
-    from multiomix_aws_emr_spark.session import build_session
-
-    sc = spark.sparkContext
-    orig = sc._maes_shuffle_baseline
-    try:
-        s2 = build_session(master="local[8]", shuffle_partitions=12)
-        assert s2.sparkContext._maes_shuffle_baseline == "12"
-        assert s2.conf.get(CONF) == "12"
-    finally:
-        build_session(master="local[8]", shuffle_partitions=int(orig))
-    assert sc._maes_shuffle_baseline == orig
-    assert spark.conf.get(CONF) == orig
+    assert _submitted_at(acc) == SIZED
+    assert spark.conf.get(CONF) == BASE
 
 
 def test_memory_fraction_respected():
@@ -263,258 +273,41 @@ def test_executor_share_picks_cluster_true_count():
     assert by_driver_proxy == 896  # ~6x over-split vs the true share
 
 
-def test_derived_frames_inherit_binding(spark, sf_dir):
-    """VERDICT r11 task 5: frames DERIVED from a bound frame carry the
-    binding — composing on a hinted query keeps its sizing even when
-    another query's build rewrites the session conf in between."""
-    from multiomix_aws_emr_spark.queries.registry import _bind_execution_conf
+def test_writer_held_across_build_rebinds(spark, sf_dir, declare):
+    """The writer proxy scopes the TERMINAL call, so a writer held across
+    another query's build still submits at its owner's count."""
+    probes = {}
 
-    base = _baseline(spark)
-    sized = _apply_sizing(spark, lambda _sf: 14 << 30, sf_dir)
-    assert int(sized) > int(base)
-    df = _bind_execution_conf(spark.range(100).toDF("x"), spark, sized)
-    derived = (
-        df.select("x")
-        .filter("x >= 0")
-        .withColumn("y", df.x * 2)
-        .join(df.select(df.x.alias("k")), df.x == 0, "left_semi")
-        .limit(100)
-    )
-    assert getattr(derived, "_maes_exec_conf", None) == (spark, sized)
-    # grouping builders propagate through the proxy too
-    agged = df.groupBy("x").count()
-    assert getattr(agged, "_maes_exec_conf", None) == (spark, sized)
-    # an unhinted build (the interleave) rewrites the conf...
-    _apply_sizing(spark, None, sf_dir)
-    assert spark.conf.get(CONF) == base
-    # ...but the derived frames still execute at their owner's count
-    assert derived.count() >= 0
-    assert spark.conf.get(CONF) == sized
-    assert agged.count() == 100
-    assert spark.conf.get(CONF) == sized
-    spark.conf.set(CONF, base)
+    def hinted(spark, sf_dir):
+        df, probes["acc"] = _probe(spark)
+        return df
 
+    def plain(spark, sf_dir):
+        return spark.range(10)
 
-def test_derived_from_declared_query_at_fixture_scale(spark, sf_dir):
-    """sf-fixture guard: deriving from a declared hinted query floors to
-    the baseline (plans unchanged), and the derived frame is bound."""
-    base = _baseline(spark)
-    df = QUERIES["sql_large_volume_customer"](spark, sf_dir)
-    derived = df.selectExpr("*")
-    assert getattr(derived, "_maes_exec_conf", None) == (spark, base)
-    spark.conf.set(CONF, "7")
-    assert derived.count() >= 0
-    assert spark.conf.get(CONF) == base
-
-
-def test_writer_held_across_build_rebinds(spark, sf_dir):
-    """The writer proxy re-applies the owner's count at the TERMINAL
-    call, so a writer held across another query's build still submits
-    at its owner's sizing."""
-    from multiomix_aws_emr_spark.queries.registry import _bind_execution_conf
-
-    base = _baseline(spark)
-    sized = _apply_sizing(spark, lambda _sf: 14 << 30, sf_dir)
-    df = _bind_execution_conf(spark.range(10).toDF("x"), spark, sized)
-    w = df.write  # held...
-    _apply_sizing(spark, None, sf_dir)  # ...across an unhinted build
-    assert spark.conf.get(CONF) == base
+    w = declare(hinted, sizing_hint=_14gb)(spark, sf_dir).write  # held...
+    declare(plain)(spark, sf_dir)  # ...across an unhinted build
     w.mode("overwrite").format("noop").save()
-    assert spark.conf.get(CONF) == sized
-    spark.conf.set(CONF, base)
+    assert _submitted_at(probes["acc"]) == SIZED
+    assert spark.conf.get(CONF) == BASE
 
 
-def test_writeto_sink_rebinds(spark, sf_dir, tmp_path):
-    """ADVICE r11: PySpark 4.x ``writeTo`` is a plain method (not a
-    property) — it must still return a re-applying proxy."""
-    from multiomix_aws_emr_spark.queries.registry import _bind_execution_conf
+def test_writeto_sink_rebinds(spark, sf_dir, declare):
+    """PySpark 4.x ``writeTo`` is a plain method (not a property); it
+    must still return a scoping proxy."""
+    probes = {}
 
-    base = _baseline(spark)
-    sized = _apply_sizing(spark, lambda _sf: 14 << 30, sf_dir)
-    df = _bind_execution_conf(spark.range(10).toDF("x"), spark, sized)
-    _apply_sizing(spark, None, sf_dir)
-    assert spark.conf.get(CONF) == base
+    def hinted(spark, sf_dir):
+        df, probes["acc"] = _probe(spark)
+        return df
+
+    df = declare(hinted, sizing_hint=_14gb)(spark, sf_dir)
     tbl = "maes_writeto_rebind_test"
     try:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         df.writeTo(tbl).using("parquet").create()
-        assert spark.conf.get(CONF) == sized
-        assert spark.table(tbl).count() == 10
+        assert _submitted_at(probes["acc"]) == SIZED
+        assert spark.conf.get(CONF) == BASE
+        assert spark.table(tbl).count() == 1
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.conf.set(CONF, base)
-
-
-def test_bound_view_registration_and_bound_sql(spark, sf_dir):
-    """VERDICT r12 task 8: view registrations from a bound frame note
-    the owner's count, and bound_sql re-binds spark.sql statements that
-    reference them — SQL over a hinted query's view executes at that
-    query's sizing even after an interleaved build rewrote the conf."""
-    from multiomix_aws_emr_spark.queries.registry import (
-        _bind_execution_conf,
-        bound_sql,
-    )
-
-    base = _baseline(spark)
-    sized = _apply_sizing(spark, lambda _sf: 14 << 30, sf_dir)
-    assert int(sized) > int(base)
-    df = _bind_execution_conf(spark.range(50).toDF("x"), spark, sized)
-    df.createOrReplaceTempView("bound_view_t8")
-    assert spark._maes_view_confs["bound_view_t8"][0] == sized
-
-    # an interleaved unhinted build restores the session conf...
-    _apply_sizing(spark, None, sf_dir)
-    assert spark.conf.get(CONF) == base
-
-    # ...but SQL routed through bound_sql re-binds to the view's owner
-    # (case-insensitively, like SQL identifiers)
-    out = bound_sql(spark, "SELECT COUNT(*) AS n FROM BOUND_VIEW_T8")
-    assert getattr(out, "_maes_exec_conf", None) == (spark, sized)
-    assert out.collect()[0].n == 50
-    assert spark.conf.get(CONF) == sized  # the action ran at the binding
-    spark.conf.set(CONF, base)
-
-    # statements referencing no bound view come back untouched
-    plain = bound_sql(spark, "SELECT 1 AS one")
-    assert not hasattr(plain, "_maes_exec_conf")
-
-    # largest-owner-wins when several bound views are referenced
-    small = str(int(base))
-    df2 = _bind_execution_conf(spark.range(5).toDF("y"), spark, small)
-    df2.createOrReplaceTempView("bound_view_t8b")
-    both = bound_sql(
-        spark,
-        "SELECT a.x FROM bound_view_t8 a JOIN bound_view_t8b b ON a.x = b.y",
-    )
-    assert getattr(both, "_maes_exec_conf", None) == (spark, sized)
-    spark.catalog.dropTempView("bound_view_t8")
-    spark.catalog.dropTempView("bound_view_t8b")
-    spark._maes_view_confs.clear()
-
-
-def test_bound_sql_false_positive_never_lowers_sizing(spark, sf_dir):
-    """A statement whose only 'reference' to a bound view is a column
-    name coincidence must not be re-bound BELOW the session baseline
-    (the identifier scan is conservative by design; the floor makes its
-    false positives harmless)."""
-    from multiomix_aws_emr_spark.queries.registry import (
-        _bind_execution_conf,
-        bound_sql,
-    )
-
-    base = _baseline(spark)
-    tiny = str(max(1, int(base) // 4))
-    df = _bind_execution_conf(spark.range(3).toDF("data"), spark, tiny)
-    df.createOrReplaceTempView("data")
-    spark.range(100).toDF("x").createOrReplaceTempView("big_table_t8c")
-    # 'data' here is a COLUMN of big_table? No — just a word collision:
-    out = bound_sql(spark, "SELECT x AS data FROM big_table_t8c")
-    assert getattr(out, "_maes_exec_conf", None) == (spark, base)  # floored
-    spark.catalog.dropTempView("data")
-    spark.catalog.dropTempView("big_table_t8c")
-    spark._maes_view_confs.clear()
-
-
-def test_bound_sql_extras_conflict_later_registration_wins(spark, sf_dir):
-    from multiomix_aws_emr_spark.queries.registry import (
-        _bind_execution_conf,
-        bound_sql,
-    )
-
-    base = _baseline(spark)
-    a = _bind_execution_conf(spark.range(2).toDF("x"), spark, base)
-    a._maes_extra_confs = {"spark.sql.maes.test.flag": "first"}
-    a.createOrReplaceTempView("zz_view_t8d")  # registered FIRST
-    b = _bind_execution_conf(spark.range(2).toDF("y"), spark, base)
-    b._maes_extra_confs = {"spark.sql.maes.test.flag": "second"}
-    b.createOrReplaceTempView("aa_view_t8d")  # registered LATER
-    out = bound_sql(
-        spark,
-        "SELECT a.x FROM zz_view_t8d a JOIN aa_view_t8d b ON a.x = b.y",
-    )
-    assert out._maes_extra_confs["spark.sql.maes.test.flag"] == "second"
-    spark.catalog.dropTempView("zz_view_t8d")
-    spark.catalog.dropTempView("aa_view_t8d")
-    spark._maes_view_confs.clear()
-
-
-def test_bound_sql_ignores_view_names_in_literals_and_comments(spark, sf_dir):
-    """ADVICE r13: a bound view's name appearing only inside a string
-    literal, line comment, or block comment is NOT a reference — the
-    statement must come back unbound (no raised count, no dragged-in
-    extras). A real FROM-position reference in the same statement still
-    binds, decoy comment and all."""
-    from multiomix_aws_emr_spark.queries.registry import (
-        _bind_execution_conf,
-        bound_sql,
-    )
-
-    base = _baseline(spark)
-    big = str(int(base) * 4)
-    df = _bind_execution_conf(spark.range(5).toDF("x"), spark, big)
-    df._maes_extra_confs = {"spark.sql.maes.test.flag": "owner"}
-    df.createOrReplaceTempView("ghost_view_t14")
-    for stmt in (
-        "SELECT 'ghost_view_t14' AS s",
-        "SELECT 1 AS one -- ghost_view_t14",
-        "SELECT /* ghost_view_t14 */ 1 AS one",
-        "SELECT 'it''s ghost_view_t14 quoted' AS s",
-        # r14: double-quoted strings are literals in Spark's default
-        # (non-ANSI) lexer, and a backslash-escaped quote must not
-        # terminate the literal early
-        'SELECT "ghost_view_t14 mentioned" AS s',
-        r"SELECT 'it\'s ghost_view_t14 escaped' AS s",
-    ):
-        out = bound_sql(spark, stmt)
-        assert not hasattr(out, "_maes_exec_conf"), stmt
-    out = bound_sql(
-        spark, "SELECT COUNT(*) AS n FROM ghost_view_t14 -- decoy"
-    )
-    assert getattr(out, "_maes_exec_conf", None) == (spark, big)
-    assert out._maes_extra_confs["spark.sql.maes.test.flag"] == "owner"
-    # r14 (the phantom-literal escape): an escaped quote inside one
-    # literal must not scrub away a REAL reference that follows it
-    out = bound_sql(
-        spark,
-        r"SELECT COUNT(*) AS n FROM ghost_view_t14 WHERE 'it\'s' <> 'y'",
-    )
-    assert getattr(out, "_maes_exec_conf", None) == (spark, big)
-    spark.catalog.dropTempView("ghost_view_t14")
-    spark._maes_view_confs.clear()
-
-
-def test_bound_sql_double_quoted_identifiers_conf(spark, sf_dir):
-    """ADVICE r15: under spark.sql.ansi.doubleQuotedIdentifiers=true a
-    double-quoted segment is an IDENTIFIER, so a view referenced as
-    "view_name" must keep its bound confs (the scrub consults the live
-    conf instead of assuming the default lexer); under the default the
-    same statement stays unbound."""
-    from multiomix_aws_emr_spark.queries.registry import (
-        _bind_execution_conf,
-        bound_sql,
-    )
-
-    base = _baseline(spark)
-    big = str(int(base) * 4)
-    df = _bind_execution_conf(spark.range(5).toDF("x"), spark, big)
-    df.createOrReplaceTempView("dqid_view_t15")
-    stmt = 'SELECT COUNT(*) AS n FROM dqid_view_t15 WHERE \'x\' <> "dqid_view_t15"'
-    # default lexer: the double-quoted segment is a literal -> the only
-    # scannable reference is the FROM position (still binds)
-    out = bound_sql(spark, stmt)
-    assert getattr(out, "_maes_exec_conf", None) == (spark, big)
-    # a statement whose ONLY mention is quoted stays unbound by default
-    out = bound_sql(spark, "SELECT 'dqid_view_t15' AS s")
-    assert not hasattr(out, "_maes_exec_conf")
-    spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        out = bound_sql(
-            spark, "SELECT COUNT(*) AS n FROM \"dqid_view_t15\""
-        )
-        assert getattr(out, "_maes_exec_conf", None) == (spark, big)
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "false")
-        spark.catalog.dropTempView("dqid_view_t15")
-        spark._maes_view_confs.clear()

@@ -93,8 +93,8 @@ TIER_QUERIES = {
         "join_multiway",
         "agg_groupby",
         # runtime-bloom join (r12): the injected fact-side prune must keep
-        # paying for itself as volume grows (tools/bloom_probe.py measures
-        # the on/off delta; this entry guards linearity of the on-path)
+        # paying for itself as volume grows (BASELINE.md records the on/off
+        # delta; this entry guards linearity of the on-path)
         "join_runtime_bloom",
     ),
     "events": (
@@ -400,23 +400,22 @@ def probe_tier(
     # warm codegen/scan paths once per scale so ratios compare steady-state
     time_queries(spark, tier, src_dir)
     small = time_queries(spark, tier, src_dir)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if sized:
-        from multiomix_aws_emr_spark.session import (
-            parquet_bytes,
-            sized_shuffle_partitions,
-        )
+    from multiomix_aws_emr_spark.session import (
+        parquet_bytes,
+        scoped_confs,
+        sized_shuffle_partitions,
+    )
 
+    confs = None
+    if sized:
         n_parts = sized_shuffle_partitions(
             parquet_bytes(os.path.join(big_dir, f"{anchor}.parquet"))
         )
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        confs = {"spark.sql.shuffle.partitions": str(n_parts)}
         print(json.dumps({"tier": tier, "sized_shuffle_partitions": n_parts}))
-    try:
+    with scoped_confs(spark, confs):
         time_queries(spark, tier, big_dir)
         big = time_queries(spark, tier, big_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
     ratios = {
         q: round(big[q] / max(small[q], 0.01), 2) for q in TIER_QUERIES[tier]

@@ -90,7 +90,7 @@ def main() -> int:
     args = ap.parse_args()
     counts = [int(c) for c in args.counts.split(",")]
 
-    from multiomix_aws_emr_spark.session import build_session
+    from multiomix_aws_emr_spark.session import build_session, scoped_confs
     from tools.scale_probe import synthesize
 
     spark = build_session(app_name="smallfiles_probe")
@@ -143,12 +143,8 @@ def main() -> int:
 
     # isolate the packing lever at the worst layout: openCostInBytes=0
     worst = max(counts)
-    old = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    try:
+    with scoped_confs(spark, {"spark.sql.files.openCostInBytes": "0"}):
         zero_cost = measure_layout(spark, layouts[worst])
-    finally:
-        spark.conf.set("spark.sql.files.openCostInBytes", old)
     rec = {k: v for k, v in zero_cost.items() if not k.startswith("_")}
     print(
         json.dumps({"layout": worst, "openCostInBytes": 0, **rec}), flush=True

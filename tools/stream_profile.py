@@ -80,6 +80,9 @@ def main() -> None:
         df.write.mode("overwrite").format("noop").save()
 
     # bench-equivalent warm (tables + python pool + streaming runtime)
+    from multiomix_aws_emr_spark.sources.pydatasource import (
+        prewarm_datasource_api,
+    )
     from multiomix_aws_emr_spark.sources.tables import TABLE_NAMES, load
     from multiomix_aws_emr_spark.streaming.util import (
         prewarm_streaming_runtime,
@@ -100,12 +103,7 @@ def main() -> None:
         _identity, schema="id long"
     ).write.mode("overwrite").format("noop").save()
     prewarm_streaming_runtime(spark, sf_dir)
-    try:
-        from bench import prewarm_datasource_api  # type: ignore
-
-        prewarm_datasource_api(spark)
-    except Exception:
-        pass
+    prewarm_datasource_api(spark)
 
     for qid in qids:
         for rep in range(reps):
