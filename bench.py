@@ -3,8 +3,11 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
 JSON line: {"metric", "value", "unit", "queries", "sf"}.
 
-Each query is forced with a noop-format write (full computation, no
-driver-side collect, no disk) — the closest local analog to a cluster
+The session is warmed and each query timed by the shared
+``session.warm_session`` / ``session.time_query`` pair (the same two
+calls tools/solo_time.py and tools/stream_profile.py make): each query is
+forced with a noop-format write (full computation, no driver-side
+collect, no disk) — the closest local analog to a cluster
 materialization. Protocol details in BASELINE.md §B.
 """
 
@@ -18,83 +21,34 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def _force(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).removeprefix("sf")
 
     from multiomix_aws_emr_spark.queries import QUERIES
-    from multiomix_aws_emr_spark.session import build_session
+    from multiomix_aws_emr_spark.session import (
+        build_session,
+        time_query,
+        warm_session,
+    )
 
     spark = build_session(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm the JVM/codegen paths and every table's first scan (file
-    # listing, footer reads) once before timing, so per-query numbers
-    # measure the query, not cold-FS noise on whichever query sorts first.
-    try:
-        _force(QUERIES["flagship_revenue_by_region"](spark, sf_dir))
-    except Exception:
-        pass
-    from multiomix_aws_emr_spark.sources.tables import TABLE_NAMES, load
-
-    for t in TABLE_NAMES:
-        try:
-            load(spark, sf_dir, t).write.mode("overwrite").format("noop").save()
-        except Exception:
-            pass
-
-    # Warm the Python-UDF worker pool (one worker per core imports
-    # pandas/numpy/pyarrow on first use — otherwise the alphabetically
-    # first applyInPandas query absorbs the whole spin-up).
-    import pandas as _pd
-
-    def _identity(it):
-        for pdf in it:
-            yield pdf
-
-    spark.range(0, 10_000, 1, spark.sparkContext.defaultParallelism).mapInPandas(
-        _identity, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
-
-    # Warm the Structured Streaming runtime once (micro-batch engine,
-    # offset/commit logs, state store, streaming codegen): the session's
-    # FIRST streaming run is ~2-3.5x its steady state, and without this
-    # it lands on whichever streaming query sorts first.
-    from multiomix_aws_emr_spark.streaming.util import prewarm_streaming_runtime
-
-    prewarm_streaming_runtime(spark, sf_dir)
-
-    # Warm the Python Data Source API machinery (r15, declared in
-    # OPTIMIZATION_r15.md): the first read/write/stream through a
-    # spark.dataSource connector initializes per-session plan classes,
-    # the dedicated datasource worker modules, and the driver-side
-    # source-runner process — 4-7 s of per-APPLICATION engine init that
-    # otherwise lands on whichever datasource query sorts first
-    # (source_python_datasource), same first-run class as the UDF-pool
-    # and streaming warms above. 1-2-row throwaway jobs.
-    from multiomix_aws_emr_spark.sources.pydatasource import (
-        prewarm_datasource_api,
-    )
-
-    prewarm_datasource_api(spark)
-
-    # Failure-isolated: one broken query loses its own number, never the
-    # whole artifact (r3 lesson — a single loader bug zeroed the round's
-    # only performance signal).
+    # Failure-isolated: a broken warm-up or query loses its own number,
+    # never the whole artifact (r3 lesson — a single loader bug zeroed
+    # the round's only performance signal).
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    try:
+        warm_session(spark, sf_dir)
+    except Exception as exc:  # noqa: BLE001 - record and continue
+        errors["_warmup"] = f"{type(exc).__name__}: {exc}"[:200]
     for qid in sorted(QUERIES):
-        start = time.perf_counter()
         try:
-            _force(QUERIES[qid](spark, sf_dir))
+            timings[qid] = round(time_query(spark, qid, sf_dir), 2)
         except Exception as exc:  # noqa: BLE001 - record and continue
             errors[qid] = f"{type(exc).__name__}: {exc}"[:200]
-            continue
-        timings[qid] = round(time.perf_counter() - start, 2)
 
     total = round(sum(timings.values()), 2)
     # Host-load probe (BASELINE.md §B): a fixed 30M-iteration pure-Python

@@ -243,8 +243,8 @@ def incremental_assign(
 
     Index-side cost: the join scans the compact (band, bucket, rep)
     table, never the historical TEXT — re-shingling history is what this
-    operator exists to avoid (measured at 5M docs,
-    tools/incremental_dedup_probe.py: 2.6x faster per ingest than a full
+    operator exists to avoid (measured at 5M docs, BASELINE.md round-11
+    incremental dedup probe: 2.6x faster per ingest than a full
     re-dedup at a 25% batch, 4.5x at 1%, checksum parity both). As
     written the index side does shuffle on (band, bucket); at warehouse
     scale store the index bucketed/sorted on exactly that key so the
@@ -507,8 +507,8 @@ def substring_spans(
     word spans — ``(id_col, span_start, span_end, n_grams)``, 1-based
     inclusive positions.
 
-    Plan shape (the 100 TB argument, measured to 1000x in
-    tools/substring_probe.py): (1) row-local gram explode via one
+    Plan shape (the 100 TB argument, measured to 1000x in BASELINE.md's
+    round-13 substring probe): (1) row-local gram explode via one
     ``transform(sequence) -> slice`` projection — no window, no
     self-join; (2) one two-level hash-agg for the >= min_docs inventory
     (map-side combinable, hot grams absorbed by partial aggregation);

@@ -224,8 +224,8 @@ def unigram_rarity(
     Use this for corpus-scale scans where executors are busy and total
     work dominates; the declared query keeps three independent subtrees
     because at fixture scale the redundant scans are free on idle cores
-    and the critical path is shorter — the measured A/B is in BASELINE.md
-    (r15) and tools/rarity_shape_probe.py."""
+    and the critical path is shorter — the measured A/B, fixture shape
+    and volume, is BASELINE.md's r15 unigram-rarity shape A/B."""
     tok = docs.select(id_col, F.explode(_tokens(text_col)).alias("tok"))
     per_doc = tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
     freq = per_doc.groupBy("tok").agg(F.sum("c").alias("n_tok"))

@@ -84,8 +84,8 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the k-means|| default spends initSteps=2 extra distributed passes
     # plus a driver-local finishing k-means picking seeds, then BOTH init
     # modes still run the full maxIter=10 Lloyd rounds on this corpus
-    # (A/B in tools/kmeans_init_probe.py: numIter=10 either way; fit wall
-    # 5.59 -> 1.55 s min-of-3 at sf0.1). The declared OUTPUT — the
+    # (A/B in BASELINE.md, r15 k-means init: numIter=10 either way; fit
+    # wall 5.59 -> 1.55 s min-of-3 at sf0.1). The declared OUTPUT — the
     # invariant grid below — is init-independent as long as no cluster
     # collapses; oracle parity (rows+schema+hash) re-proven at sf0.001,
     # sf0.01 and sf0.1 after the swap, and the seeded fit stays

@@ -985,7 +985,7 @@ def text_unigram_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (full type-table) vs 0.822 s (total-from-freq hybrid) — unlike the
     LM case the saved pass is a cheap count scan, and chaining it
     behind the freq exchange lengthens the broadcast dependency
-    (BASELINE.md r15 A/B; tools/rarity_shape_probe.py holds the volume
+    (BASELINE.md r15 unigram-rarity shape A/B, which also holds the volume
     regime where the type-table shape wins). The production component
     for corpus-scale scans is :func:`multiomix_aws_emr_spark.operators.
     quality.unigram_rarity` (single-pass type table, contract-tested

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 import zipfile
 from contextlib import contextmanager
 
@@ -35,8 +36,9 @@ RUNTIME_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Write-path codec: zstd dominates the snappy default on every axis
-    # measured (tools/codec_probe.py — 28% smaller, 38% faster writes,
-    # scan within noise; at 100 TB the byte saving IS read bandwidth).
+    # measured (BASELINE.md, "Round-9 CODEC probe" — 28% smaller, 38%
+    # faster writes, scan within noise; at 100 TB the byte saving IS read
+    # bandwidth).
     # Read paths are codec-agnostic, so this only shapes what we write.
     "spark.sql.parquet.compression.codec": "zstd",
 }
@@ -181,6 +183,68 @@ def build_session(
     for key, value in conf.items():
         builder = builder.config(key, value)
     return configure(builder.getOrCreate())
+
+
+def _force(df) -> None:
+    """Run ``df`` to completion through the noop sink: full computation,
+    no driver-side collect, no disk (BASELINE.md §B)."""
+    df.write.mode("overwrite").format("noop").save()
+
+
+def warm_session(spark: SparkSession, sf_dir: str) -> None:
+    """Pay a session's first-use costs before any query is timed, so a
+    number measures the query, not whichever engine path it hits first.
+
+    The one warm-up behind ``bench.py``, ``tools/solo_time.py`` and
+    ``tools/stream_profile.py``, in this order: the flagship query (JVM
+    and codegen paths), a scan of every table (file listing, footer
+    reads), the Python worker pool (one worker per core imports
+    pandas/numpy/pyarrow on first use), the Structured Streaming runtime
+    and the Python Data Source API. Errors from the first three
+    propagate; callers that must keep going catch them. The memory-sink
+    temp views the two stream warms register are dropped, so the warm-up
+    leaves no catalog state behind."""
+    from multiomix_aws_emr_spark.queries import QUERIES
+    from multiomix_aws_emr_spark.sources.pydatasource import prewarm_datasource_api
+    from multiomix_aws_emr_spark.sources.tables import TABLE_NAMES, load
+    from multiomix_aws_emr_spark.streaming.util import prewarm_streaming_runtime
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    views = temp_views()
+    _force(QUERIES["flagship_revenue_by_region"](spark, sf_dir))
+    for t in TABLE_NAMES:
+        _force(load(spark, sf_dir, t))
+
+    def _identity(it):
+        yield from it
+
+    _force(
+        spark.range(0, 10_000, 1, spark.sparkContext.defaultParallelism)
+        .mapInPandas(_identity, schema="id long")
+    )
+    prewarm_streaming_runtime(spark, sf_dir)
+    prewarm_datasource_api(spark)
+    for name in temp_views() - views:
+        spark.catalog.dropTempView(name)
+
+
+def time_query(spark: SparkSession, qid: str, sf_dir: str) -> float:
+    """Seconds to build declared query ``qid`` and force it through the
+    noop sink, by ``time.perf_counter``. Its Spark jobs run under the job
+    description ``qid``; the caller's description is restored after."""
+    from multiomix_aws_emr_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(qid)
+    try:
+        t0 = time.perf_counter()
+        _force(QUERIES[qid](spark, sf_dir))
+        return time.perf_counter() - t0
+    finally:
+        sc.setJobDescription(previous)
 
 
 @contextmanager

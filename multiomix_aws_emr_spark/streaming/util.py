@@ -25,6 +25,11 @@ from pyspark.sql import SparkSession
 from multiomix_aws_emr_spark.session import scoped_confs
 
 
+#: /dev/shm holds a bounded run's checkpoint only with this much free: one
+#: run's state reaches ~66 MB, so Docker's default 64 MiB tmpfs hits ENOSPC.
+_SHM_MIN_FREE_BYTES = 256 << 20
+
+
 def stream_checkpoint_dir(spark: SparkSession, prefix: str) -> str:
     """A ``checkpointLocation`` every node of the session's topology can
     reach.
@@ -54,7 +59,8 @@ def stream_checkpoint_dir(spark: SparkSession, prefix: str) -> str:
 
     Local-master medium (r16, guide §6): with no durable root set, the
     per-run checkpoint is provisioned on the fastest writable local
-    medium — ``/dev/shm`` when present, else the OS tmpdir. A bounded
+    medium — ``/dev/shm`` when present with at least
+    ``_SHM_MIN_FREE_BYTES`` free, else the OS tmpdir. A bounded
     run's auto-provisioned checkpoint is swept on success and has no
     recovery value past the run (resumable runs pass a caller-owned
     ``checkpointLocation`` instead), but its offset/commit-log and
@@ -73,7 +79,9 @@ def stream_checkpoint_dir(spark: SparkSession, prefix: str) -> str:
 
             shm = "/dev/shm"
             if os.path.isdir(shm) and os.access(shm, os.W_OK):
-                return tempfile.mkdtemp(prefix=f"{prefix}_", dir=shm)
+                st = os.statvfs(shm)
+                if st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES:
+                    return tempfile.mkdtemp(prefix=f"{prefix}_", dir=shm)
             return tempfile.mkdtemp(prefix=f"{prefix}_")
     from multiomix_aws_emr_spark.session import shared_scratch_dir
 

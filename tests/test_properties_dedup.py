@@ -327,7 +327,7 @@ def test_ngram_contamination_replication_linearity(spark, sf_dir):
     split scales contaminated docs and hit positions EXACTLY linearly —
     every copy of a contaminated doc collides identically — while the
     eval inventory is untouched. Pins the invariant the 1000x probe
-    measures (tools/decontam_probe.py, BASELINE.md)."""
+    measured (BASELINE.md, "Decontamination scale probe")."""
     from multiomix_aws_emr_spark.operators.dedup import ngram_contamination
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(

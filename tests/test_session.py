@@ -1,4 +1,5 @@
-"""Session conf assembly — pure-dict tests (no JVM).
+"""Session conf assembly — pure-dict tests (no JVM) — plus the shared
+warm-up and timer on the test session.
 
 The one behavioral contract worth pinning here is override ORDER:
 ``assemble_conf`` layers harness sizing, then RUNTIME_CONF, then caller
@@ -8,6 +9,8 @@ RUNTIME_CONF); a refactor that reorders the layers would make executors
 silently launch at the 1g default and OOM mid-stage — exactly the
 failure the round-8 probe hit before the hook existed.
 """
+
+import pytest
 
 from multiomix_aws_emr_spark.session import RUNTIME_CONF, assemble_conf
 
@@ -152,3 +155,53 @@ def test_adaptive_sizing_conf_pairs_ceiling_with_advisory():
         conf2["spark.sql.adaptive.coalescePartitions.initialPartitionNum"]
         == "1024"
     )
+
+
+# ---------------------------------------------------------------------------
+# warm_session / time_query: the one warm-up and timer of bench.py,
+# tools/solo_time.py and tools/stream_profile.py
+# ---------------------------------------------------------------------------
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_warm_session_leaves_the_session_as_it_found_it(spark, sf_dir):
+    from multiomix_aws_emr_spark.session import warm_session
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    views, entries = _temp_views(spark), cache.numCachedEntries()
+    warm_session(spark, sf_dir)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+    assert spark.streams.active == []
+    assert _temp_views(spark) == views
+    assert cache.numCachedEntries() == entries
+    with pytest.raises(Exception):
+        warm_session(spark, "/nonexistent")
+
+
+def test_time_query_names_its_jobs_and_restores_description(
+    spark, sf_dir, monkeypatch
+):
+    from multiomix_aws_emr_spark.queries import QUERIES
+    from multiomix_aws_emr_spark.session import time_query
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def record(batches):
+        from pyspark import TaskContext
+
+        desc = TaskContext.get().getLocalProperty("spark.job.description")
+        acc.add(int(desc == "timed_probe"))
+        yield from batches
+
+    monkeypatch.setitem(
+        QUERIES,
+        "timed_probe",
+        lambda s, _sf: s.range(0, 1, 1, 1).mapInPandas(record, "id long"),
+    )
+    assert time_query(spark, "timed_probe", sf_dir) > 0
+    assert acc.value == 1
+    assert spark.sparkContext.getLocalProperty("spark.job.description") is None

@@ -373,25 +373,23 @@ def test_directory_layout_matches_single_file(spark, sf_dir, tmp_path):
     )
 
 
-def test_static_and_stream_state_sizing(spark, sf_dir, tmp_path):
+def test_static_and_stream_state_sizing(spark, sf_dir, tmp_path, monkeypatch):
     """Single-file layout derives state instances from SOURCE BYTES (one
     per ~16 MB of parquet, floor 4, cap cores — r16); a 4-part directory
     sizes state to the part count floored at cores/4 and capped at the
-    core count."""
-    import math
+    core count. Values are for the local[8] test session."""
     import os
 
-    from multiomix_aws_emr_spark.streaming.util import (
-        _BATCH_TARGET_BYTES,
-        static_and_stream,
-    )
+    from multiomix_aws_emr_spark.streaming.util import static_and_stream
 
-    _, _, n_single = static_and_stream(spark, sf_dir, "events.parquet")
-    cores0 = spark.sparkContext.defaultParallelism
-    fbytes = os.path.getsize(os.path.join(sf_dir, "events.parquet"))
-    assert n_single == max(
-        4, min(math.ceil(fbytes / (_BATCH_TARGET_BYTES // 4)), cores0)
-    )
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    # the 2 MB sf0.1 events.parquet is under one 16 MB instance: floor 4
+    assert static_and_stream(spark, sf01, "events.parquet")[2] == 4
+    # 100 MiB -> ceil(100 / 16) = 7; 1 GiB -> 64, capped at the 8 cores
+    for size, want in ((100 << 20, 7), (1 << 30, 8)):
+        with monkeypatch.context() as m:
+            m.setattr(os.path, "getsize", lambda _path, size=size: size)
+            assert static_and_stream(spark, sf_dir, "events.parquet")[2] == want
 
     dir_sf = tmp_path / "sfdir2"
     dir_sf.mkdir()
@@ -402,8 +400,25 @@ def test_static_and_stream_state_sizing(spark, sf_dir, tmp_path):
         .write.parquet(str(dir_sf / "events.parquet"))
     )
     _, _, n_dir = static_and_stream(spark, str(dir_sf), "events.parquet")
-    cores = spark.sparkContext.defaultParallelism
-    assert n_dir == max(cores // 4, min(4, cores))
+    assert n_dir == 4
+
+
+def test_stream_checkpoint_dir_skips_small_tmpfs(spark, monkeypatch):
+    """Bounded-run checkpoints go to /dev/shm only when it has room: a
+    Docker-default 64 MiB tmpfs falls back to the OS temp dir, 1 GiB free
+    keeps the tmpfs."""
+    import shutil
+    import types
+
+    from multiomix_aws_emr_spark.streaming.util import stream_checkpoint_dir
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_DIR", raising=False)
+    for free, on_shm in ((64 << 20, False), (1 << 30, True)):
+        stat = types.SimpleNamespace(f_bavail=free // 4096, f_frsize=4096)
+        monkeypatch.setattr(os, "statvfs", lambda _path, stat=stat: stat)
+        path = stream_checkpoint_dir(spark, "shm_guard")
+        shutil.rmtree(path)
+        assert path.startswith("/dev/shm/") is on_shm, path
 
 
 def test_prewarm_streaming_runtime(spark, sf_dir):

@@ -34,6 +34,15 @@ def _norm(v):
     return v
 
 
+def _key(row: tuple) -> tuple:
+    """NULL-safe sort key for a normalized row: python cannot order None
+    against ints (outer-join results carry NULLs, also inside arrays and
+    structs), so mirror SQL NULLS-FIRST at every nesting level."""
+    return tuple(
+        (v is not None, _key(v) if isinstance(v, tuple) else v) for v in row
+    )
+
+
 def main() -> None:
     args = sys.argv[1:]
     sfs = ["sf0.001", "sf0.01"]
@@ -58,11 +67,6 @@ def main() -> None:
             p = os.path.join(sf_dir, f"{t}.parquet")
             if os.path.exists(p):
                 con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-        # NULL-safe sort key: python cannot order None against ints
-        # (outer-join results carry NULLs), mirror SQL NULLS-FIRST
-        def _key(row):
-            return tuple((v is not None, v) for v in row)
-
         for qid in qids:
             try:
                 s_rows = sorted(

@@ -83,7 +83,8 @@ TIER_QUERIES = {
         # pass builds the session-shared two-batch store, so the timed
         # pass measures the as-of-v1 read (manifest lookup + index scan,
         # scales with the index). Build linearity at volume is
-        # tools/ingest_txn_probe.py's measurement, not this one.
+        # BASELINE.md's round-12 transactional-store measurement, not
+        # this one.
         "dedup_store_time_travel",
     ),
     "relational": (

@@ -3,18 +3,17 @@
 
 Usage: python tools/solo_time.py <qid> [qid ...] [--reps N]
 
-Builds the bench session, warms the JVM exactly like bench.py (flagship +
-table scans + Python worker pool + streaming runtime), then times each qid
-``--reps`` times build+force (the bench's methodology) and prints
-min/median per qid. Use for targeted A/B while optimizing; the recorded
-numbers live in BENCH_BANDS.json via tools/bench_bands.py.
+Builds the bench session, warms it with ``session.warm_session`` and times
+each qid ``--reps`` times with ``session.time_query`` — the same two calls
+bench.py makes — then prints min/median per qid. Use for targeted A/B
+while optimizing; the recorded numbers live in BENCH_BANDS.json via
+tools/bench_bands.py.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,51 +28,18 @@ def main() -> None:
     qids = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from multiomix_aws_emr_spark.queries import QUERIES
-    from multiomix_aws_emr_spark.session import build_session
+    from multiomix_aws_emr_spark.session import (
+        build_session,
+        time_query,
+        warm_session,
+    )
 
     spark = build_session(app_name="solo-time")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def force(df):
-        df.write.mode("overwrite").format("noop").save()
-
-    # same warm-up as bench.py
-    try:
-        force(QUERIES["flagship_revenue_by_region"](spark, sf_dir))
-    except Exception:
-        pass
-    from multiomix_aws_emr_spark.sources.tables import TABLE_NAMES, load
-
-    for t in TABLE_NAMES:
-        try:
-            force(load(spark, sf_dir, t))
-        except Exception:
-            pass
-
-    def _identity(it):
-        for pdf in it:
-            yield pdf
-
-    spark.range(0, 10_000, 1, spark.sparkContext.defaultParallelism).mapInPandas(
-        _identity, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
-
-    if any(q.startswith(("stream", "source_python_stream")) for q in qids):
-        from multiomix_aws_emr_spark.streaming.util import (
-            prewarm_streaming_runtime,
-        )
-
-        prewarm_streaming_runtime(spark, sf_dir)
+    warm_session(spark, sf_dir)
 
     for qid in qids:
-        times = []
-        for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"solo:{qid}")
-            t0 = time.perf_counter()
-            force(QUERIES[qid](spark, sf_dir))
-            times.append(round(time.perf_counter() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
+        times = [round(time_query(spark, qid, sf_dir), 3) for _ in range(reps)]
         times_sorted = sorted(times)
         print(
             f"{qid}: min={times_sorted[0]} med={times_sorted[len(times)//2]} "

@@ -3,13 +3,14 @@
 
 Usage: python tools/stream_profile.py [qid ...] [--reps N]
 
-Runs each streaming qid in a bench-warmed session with a
-StreamingQueryListener attached and prints, per run: the query wall
-(build+force, bench methodology), the number of micro-batches, and the
-per-batch durationMs breakdown (triggerExecution, queryPlanning,
-getBatch, latestOffset, addBatch, walCommit, commitOffsets) plus
-state-store commit/total times — i.e. where the micro-batch engine's
-fixed runtime actually goes, which the SQL-plan dumps cannot show.
+Runs each streaming qid in a session warmed by ``session.warm_session``
+with a StreamingQueryListener attached and prints, per run: the query
+wall (``session.time_query``, the bench's timer), the number of
+micro-batches, and the per-batch durationMs breakdown (triggerExecution,
+queryPlanning, getBatch, latestOffset, addBatch, walCommit,
+commitOffsets) plus state-store commit/total times — i.e. where the
+micro-batch engine's fixed runtime actually goes, which the SQL-plan
+dumps cannot show.
 """
 
 from __future__ import annotations
@@ -47,17 +48,22 @@ def main() -> None:
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from multiomix_aws_emr_spark.queries import QUERIES
-    from multiomix_aws_emr_spark.session import build_session
+    from multiomix_aws_emr_spark.session import (
+        build_session,
+        time_query,
+        warm_session,
+    )
 
     spark = build_session(app_name="stream-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
+    # timestamps on time_query's clock (perf_counter): the seg breakdown
+    # below subtracts them from t0
     events: list[dict] = []
 
     class Capture(StreamingQueryListener):
         def onQueryStarted(self, e):
-            events.append({"kind": "start", "t": time.monotonic()})
+            events.append({"kind": "start", "t": time.perf_counter()})
 
         def onQueryProgress(self, e):
             try:
@@ -65,53 +71,24 @@ def main() -> None:
             except Exception:
                 p = {}
             events.append(
-                {"kind": "progress", "t": time.monotonic(), "p": p}
+                {"kind": "progress", "t": time.perf_counter(), "p": p}
             )
 
         def onQueryIdle(self, e):
-            events.append({"kind": "idle", "t": time.monotonic()})
+            events.append({"kind": "idle", "t": time.perf_counter()})
 
         def onQueryTerminated(self, e):
-            events.append({"kind": "term", "t": time.monotonic()})
+            events.append({"kind": "term", "t": time.perf_counter()})
 
     spark.streams.addListener(Capture())
 
-    def force(df):
-        df.write.mode("overwrite").format("noop").save()
-
-    # bench-equivalent warm (tables + python pool + streaming runtime)
-    from multiomix_aws_emr_spark.sources.pydatasource import (
-        prewarm_datasource_api,
-    )
-    from multiomix_aws_emr_spark.sources.tables import TABLE_NAMES, load
-    from multiomix_aws_emr_spark.streaming.util import (
-        prewarm_streaming_runtime,
-    )
-
-    for t in TABLE_NAMES:
-        try:
-            force(load(spark, sf_dir, t))
-        except Exception:
-            pass
-    import pandas as _pd  # noqa: F401
-
-    def _identity(it):
-        for pdf in it:
-            yield pdf
-
-    spark.range(0, 10_000, 1, spark.sparkContext.defaultParallelism).mapInPandas(
-        _identity, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
-    prewarm_streaming_runtime(spark, sf_dir)
-    prewarm_datasource_api(spark)
+    warm_session(spark, sf_dir)
 
     for qid in qids:
         for rep in range(reps):
             events.clear()
-            spark.sparkContext.setJobDescription(f"profile:{qid}")
-            t0 = time.monotonic()
-            force(QUERIES[qid](spark, sf_dir))
-            wall = time.monotonic() - t0
+            t0 = time.perf_counter()
+            wall = time_query(spark, qid, sf_dir)
             progs = [e for e in events if e["kind"] == "progress"]
             batches = [
                 p
