@@ -280,12 +280,9 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     every micro-batch, no stream state). Complete-mode aggregate over a
     bounded availableNow run must equal the batch join — which is the
     oracle, so this streaming query is hash-checked, not rows-only."""
-    import uuid
-
     from multiomix_aws_emr_spark.session import configure
     from multiomix_aws_emr_spark.streaming.util import (
-        await_bounded,
-        bounded_state_partitions,
+        bounded_result,
         static_and_stream,
     )
 
@@ -302,17 +299,9 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    name = f"streamstatic_{uuid.uuid4().hex[:8]}"
-    with bounded_state_partitions(spark, n_state):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_bounded(q, "stream-static join run")
-    return spark.table(name)
+    return bounded_result(
+        spark, agg, "streamstatic", n_state=n_state, mode="complete"
+    )[0]
 
 
 _OUTER_JOIN_ORACLE = with_events_v(

@@ -199,7 +199,6 @@ def run_event_feed_rollup(
     )
     name = f"feed_{_uuid.uuid4().hex[:8]}"
     # one-shot replay: checkpoint removed on success, kept on failure
-    # (same policy as streaming/util.bounded_result)
     ckpt = stream_checkpoint_dir(spark, "ck_feed")
     # state sizing is volume-derived like static_and_stream's single-file
     # branch (r16): the feed's volume is KNOWN (n_total closed-form rows,
@@ -271,7 +270,9 @@ def run_event_feed_rollup(
             f"within {timeout_sec}s (last offset seen: {off})"
         )
     cleanup_stream_checkpoint(ckpt, spark)
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)  # the frame still reads the sink
+    return result
 
 
 # ---------------------------------------------------------------------------

@@ -63,4 +63,4 @@ def run_streaming_dedup(
     out = dedup_plan(stream)
     return bounded_result(
         spark, out, "dedup", n_state=n_state, sink_dir=sink_dir
-    )
+    )[0]

@@ -25,11 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from multiomix_aws_emr_spark.streaming.util import (
-    await_bounded,
-    cleanup_stream_checkpoint,
-    stream_checkpoint_dir,
-)
+from multiomix_aws_emr_spark.streaming.util import bounded_result
 
 
 def run_stream_ingest(
@@ -51,7 +47,7 @@ def run_stream_ingest(
     and swept on success (the bounded-runner policy). Empty micro-batches
     commit nothing (no store version burned).
 
-    Deliberately NOT wrapped in ``bounded_state_partitions``: the stream
+    Runs with ``n_state=None`` (the session's partition count): the stream
     side is a stateless passthrough into ``foreachBatch`` (no streaming
     aggregate, no state-store instances to right-size), and the work
     that DOES shuffle — each micro-batch's sketch build and index join —
@@ -77,18 +73,12 @@ def run_stream_ingest(
             **params,
         )
 
-    ckpt = checkpoint or stream_checkpoint_dir(spark, "ck_ingest")
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    bounded_result(
+        spark,
+        stream,
+        "ingest",
+        n_state=None,
+        for_each_batch=_ingest,
+        checkpoint=checkpoint,
     )
-    await_bounded(q, "streaming transactional ingest")
-    if checkpoint is None:
-        # success-only sweep (the stream_checkpoint_dir policy); a
-        # caller-owned checkpoint is the caller's to keep — it IS the
-        # resume handle
-        cleanup_stream_checkpoint(ckpt, spark)
     return read_all_assignments(spark, root)

@@ -104,4 +104,4 @@ def run_stream_interval_join(
     configure(spark)
     _, stream, n_state = static_and_stream(spark, sf_dir, glob)
     out = interval_join_plan(stream, how=how)
-    return bounded_result(spark, out, "ssj", n_state=n_state, sink_dir=sink_dir)
+    return bounded_result(spark, out, "ssj", n_state=n_state, sink_dir=sink_dir)[0]

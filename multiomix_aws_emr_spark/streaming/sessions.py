@@ -75,4 +75,4 @@ def run_streaming_sessions(
     out = session_window_plan(stream)
     return bounded_result(
         spark, out, "sessions", n_state=n_state, sink_dir=sink_dir
-    )
+    )[0]

@@ -19,7 +19,6 @@ explicit ``GroupState``:
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -29,10 +28,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from multiomix_aws_emr_spark.session import configure
 from multiomix_aws_emr_spark.streaming.util import (
-    bounded_state_partitions,
-    cleanup_stream_checkpoint,
+    bounded_result,
     static_and_stream,
-    stream_checkpoint_dir,
 )
 
 _OUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
@@ -84,61 +81,22 @@ def run_running_totals(
     caught by the directory-layout parity sweep, round 5.)
 
     Emitted updates are row-proportional to (users x active batches), so
-    big replays need a durable sink — but FILE sinks reject update mode,
-    so the scale path (``sink_dir`` / ``SPARK_GRAFT_STREAM_SINK_DIR``) is
-    ``foreachBatch`` appending each batch's updates to parquet: duplicate
-    keys across batches are exactly what the reduction already handles.
+    big replays need ``sink_dir`` / ``SPARK_GRAFT_STREAM_SINK_DIR`` (see
+    :func:`~.util.bounded_result`): duplicate keys across batches are
+    exactly what the reduction already handles.
     """
-    import os
+    from pyspark.sql import functions as F
 
     configure(spark)
     _, stream, n_state = static_and_stream(spark, sf_dir, glob)
-    out = running_totals_plan(stream)
-    sink_dir = sink_dir or os.environ.get("SPARK_GRAFT_STREAM_SINK_DIR") or None
-    table = f"st_{uuid.uuid4().hex[:8]}"
-    from multiomix_aws_emr_spark.streaming.util import await_bounded
-
-    ckpt = stream_checkpoint_dir(spark, "ck_st")
-    with bounded_state_partitions(spark, n_state):
-        w = (
-            out.writeStream.outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        if sink_dir is None:
-            q = w.format("memory").queryName(table).start()
-        else:
-            out_path = os.path.join(sink_dir, table)
-
-            def _append(batch_df: DataFrame, batch_id: int) -> None:
-                batch_df.write.mode("append").parquet(out_path)
-
-            q = w.foreachBatch(_append).start()
-        await_bounded(q, table)
-    # SUCCESS-ONLY sweep (the stream_checkpoint_dir policy): a failed run
-    # keeps its checkpoint for diagnosis; the durable root's TTL janitor
-    # is the backstop for leftovers.
-    cleanup_stream_checkpoint(ckpt, spark)
-    from pyspark.sql import functions as F
-
-    if sink_dir is None:
-        result = spark.table(table)
-        result.count()
-    else:
-        # Zero batches emitted => foreachBatch never created out_path.
-        # Probe by attempting the read and catching exactly PATH_NOT_FOUND
-        # (same fix as util.bounded_result, ADVICE r7): an os.path.exists
-        # check is always False for hdfs://"/"s3a:// sink dirs and would
-        # silently discard committed results on a non-local durable sink.
-        from pyspark.errors import AnalysisException
-
-        try:
-            result = spark.read.schema(out.schema).parquet(out_path)
-            result.schema  # force eager path resolution
-        except AnalysisException as exc:
-            if (exc.getCondition() or "") != "PATH_NOT_FOUND":
-                raise
-            result = spark.createDataFrame([], out.schema)
+    result, _ = bounded_result(
+        spark,
+        running_totals_plan(stream),
+        "st",
+        n_state=n_state,
+        mode="update",
+        sink_dir=sink_dir,
+    )
     final = result.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("sum_value", "n_events").alias("sum_value"),

@@ -3,8 +3,8 @@
 The production sink pattern when no transactional table format is
 available: an UPDATE-mode windowed aggregate feeds ``foreachBatch``, and
 each micro-batch overwrites exactly the (window, type) partitions it
-updated — ``spark.sql.sources.partitionOverwriteMode=dynamic`` scopes the
-``overwrite`` to the partitions present in the batch. Because update mode
+updated — the writer's ``partitionOverwriteMode=dynamic`` option scopes
+the ``overwrite`` to the partitions present in the batch. Because update mode
 emits the CURRENT total for every changed key and the partition key
 equals the aggregate key, re-processing a batch after a failure rewrites
 the same partitions with the same content: idempotent, so an
@@ -24,11 +24,8 @@ from pyspark.sql import functions as F
 from multiomix_aws_emr_spark.session import configure
 from multiomix_aws_emr_spark.sources.tables import ts_ms_expr
 from multiomix_aws_emr_spark.streaming.util import (
-    await_bounded,
-    bounded_state_partitions,
-    cleanup_stream_checkpoint,
+    bounded_result,
     static_and_stream,
-    stream_checkpoint_dir,
 )
 
 
@@ -70,33 +67,26 @@ def run_rollup_upsert(
     as a partitioned parquet table via per-batch dynamic-partition
     overwrite; returns the final table."""
     configure(spark)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     _, stream, n_state = static_and_stream(spark, sf_dir, glob)
-    out = rollup_plan(stream)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        # a writer option, not the session conf: the conf would turn every
+        # later partitioned overwrite in the session into a dynamic one
         (
             batch_df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("window_start_ms", "event_type")
             .parquet(out_dir)
         )
 
-    # one-shot bounded run: the checkpoint is deleted on success (at big
-    # replays it holds GBs of state deltas), kept on failure for
-    # diagnosis; restart recovery uses a caller-owned checkpoint
-    # (tests/test_streaming_recovery.py drives this runner's plan with
-    # its own persistent checkpointLocation).
-    ckpt = stream_checkpoint_dir(spark, "ck_upsert")
-    with bounded_state_partitions(spark, n_state):
-        q = (
-            out.writeStream.foreachBatch(upsert)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_bounded(q, "rollup upsert run")
-    cleanup_stream_checkpoint(ckpt, spark)
+    bounded_result(
+        spark,
+        rollup_plan(stream),
+        "upsert",
+        n_state=n_state,
+        mode="update",
+        for_each_batch=upsert,
+    )
     return spark.read.parquet(out_dir).select(
         "window_start_ms", "event_type", "n", "sum_value"
     )

@@ -45,17 +45,16 @@ def stream_checkpoint_dir(spark: SparkSession, prefix: str) -> str:
     driver-local temp dir when the master is local/local-cluster
     (same host — shared by construction), else raise with the recipe.
 
-    Durable-root lifecycle: bounded runners delete their per-run subdir
-    on success (``cleanup_stream_checkpoint`` with the session handle —
-    Hadoop-FS delete for URI roots) and KEEP it on failure for
-    diagnosis — every runner site sweeps on the success path only
-    (ADVICE r11 made this uniform), with ONE deliberate exception:
-    :func:`prewarm_streaming_runtime` sweeps unconditionally, because
-    its checkpoint warms a 5-row throwaway stream whose failures are
-    swallowed by design — there is nothing to diagnose. The root's
-    owner should still attach a TTL/janitor policy (e.g. an S3
-    lifecycle rule on the prefix): failure leftovers and runs killed
-    before cleanup are the owner's to expire.
+    Lifecycle: :func:`bounded_result` is the one sweep site. It deletes
+    the per-run subdir on success (``cleanup_stream_checkpoint`` with the
+    session handle — Hadoop-FS delete for URI roots) and KEEPS it on
+    failure for diagnosis, except under ``/dev/shm/``, where a kept
+    checkpoint would hold RAM until reboot, so a failed run sweeps it
+    there too. :func:`prewarm_streaming_runtime` sweeps unconditionally:
+    its 5-row throwaway stream swallows failures by design, so there is
+    nothing to diagnose. The durable root's owner should still attach a
+    TTL/janitor policy (e.g. an S3 lifecycle rule on the prefix): failure
+    leftovers and runs killed before cleanup are the owner's to expire.
 
     Local-master medium (r16, guide §6): with no durable root set, the
     per-run checkpoint is provisioned on the fastest writable local
@@ -200,12 +199,10 @@ _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
 def bounded_state_partitions(spark: SparkSession, n: int | None = None):
-    """Scope the shuffle/state partition count (and, when
-    ``SPARK_GRAFT_STATE_STORE=rocksdb``, the state-store provider) to a
-    bounded stream run."""
-    if n is None:
-        n = max(4, spark.sparkContext.defaultParallelism // 4)
-    confs = {"spark.sql.shuffle.partitions": str(n)}
+    """Scope the shuffle/state partition count (``None`` keeps the
+    session's) and, when ``SPARK_GRAFT_STATE_STORE=rocksdb``, the
+    state-store provider to a bounded stream run."""
+    confs = {} if n is None else {"spark.sql.shuffle.partitions": str(n)}
     if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
         confs[_PROVIDER_CONF] = _ROCKSDB_PROVIDER
     return scoped_confs(spark, confs)
@@ -240,62 +237,85 @@ def bounded_result(
     name_prefix: str,
     *,
     n_state: int | None,
+    mode: str = "append",
     sink_dir: str | None = None,
+    for_each_batch=None,
+    checkpoint: str | None = None,
 ):
-    """Run an append-mode bounded stream and return its full result.
+    """Run ``plan`` as a bounded (availableNow) stream named
+    ``<name_prefix>_<8 hex>`` and return ``(result, recentProgress)``.
 
-    ``sink_dir=None`` (and ``SPARK_GRAFT_STREAM_SINK_DIR`` unset) uses the
-    memory sink — right for fixture replays and the driver contract, where
-    emitted rows are few. For big replays the memory sink IS the scale
-    bug: it materializes every emitted row as driver-heap objects (the
-    1000x events replay emits ~100M sessions — OOM before the first batch
-    commits). With a sink directory the stream writes parquet — the
-    durable-sink shape a production stream uses — and the returned
-    DataFrame reads it back lazily.
+    The run is scoped to :func:`bounded_state_partitions` with
+    ``n_state`` (``None`` keeps the session's count) and waits through
+    :func:`await_bounded`. Sinks, in order:
+
+    - ``for_each_batch``: the callback owns the output; result is None.
+    - ``sink_dir`` (or ``SPARK_GRAFT_STREAM_SINK_DIR``): each batch is
+      written as parquet under ``<sink_dir>/<name>`` through foreachBatch
+      — file sinks reject update and complete mode — and read back
+      lazily. Complete mode overwrites, since each of its batches is the
+      whole table. Big replays need this: the memory sink materializes
+      every emitted row on the driver heap (the 1000x events replay emits
+      ~100M sessions — OOM before the first batch commits).
+    - else the memory sink; its temp view is dropped once the frame is
+      captured (the frame still reads the sink).
+
+    ``checkpoint`` is a caller-owned resume handle and is never touched.
+    Otherwise a per-run checkpoint is provisioned and swept as
+    :func:`stream_checkpoint_dir` describes: on success, and on failure
+    only under ``/dev/shm/``.
     """
     sink_dir = sink_dir or os.environ.get("SPARK_GRAFT_STREAM_SINK_DIR") or None
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    # A one-shot bounded replay's checkpoint has no recovery value once
-    # the result is returned, and at big replays it holds GBs of
-    # state-store deltas (a 100M-row sessionization leaves ~6 GB) — so it
-    # is deleted on SUCCESS and kept on failure for diagnosis. Restart
-    # recovery is a different surface with a caller-owned checkpoint
-    # (tests/test_streaming_recovery.py).
-    ckpt = stream_checkpoint_dir(spark, f"ck_{name}")
-    with bounded_state_partitions(spark, n_state):
-        w = (
-            plan.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        if sink_dir is None:
-            q = w.format("memory").queryName(name).start()
+    ckpt = checkpoint or stream_checkpoint_dir(spark, f"ck_{name}")
+    out_path = None
+    if for_each_batch is None and sink_dir is not None:
+        out_path = os.path.join(sink_dir, name)
+        write_mode = "overwrite" if mode == "complete" else "append"
+
+        def for_each_batch(batch_df, batch_id: int) -> None:
+            batch_df.write.mode(write_mode).parquet(out_path)
+
+    try:
+        with bounded_state_partitions(spark, n_state):
+            w = (
+                plan.writeStream.queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+            )
+            if for_each_batch is None:
+                w = w.format("memory")
+            else:
+                w = w.foreachBatch(for_each_batch)
+            q = w.start()
             await_bounded(q, name)
-            result = spark.table(name)
-        else:
-            out_path = os.path.join(sink_dir, name)
-            q = w.format("parquet").option("path", out_path).start()
-            await_bounded(q, name)
-            # The parquet sink only creates its directory at the first
-            # batch COMMIT; a bounded stream that emits zero rows (all
-            # input late-dropped, empty source dir) terminates cleanly
-            # without ever creating it, and reading it would raise
-            # PATH_NOT_FOUND. Attempt the read and catch exactly that
-            # error class — NOT an os.path.exists probe, which is always
-            # False for hdfs://"/"s3a:// sink dirs and would silently
-            # discard committed results on any non-local durable sink
-            # (ADVICE r7). On the miss, mirror the memory-sink branch
-            # (an empty in-memory table) with an empty DataFrame of the
-            # plan's schema — same contract stateful.py already applies.
-            try:
-                result = spark.read.schema(plan.schema).parquet(out_path)
-                result.schema  # force eager path resolution
-            except AnalysisException as exc:
-                if (exc.getCondition() or "") != "PATH_NOT_FOUND":
-                    raise
-                result = spark.createDataFrame([], plan.schema)
-    cleanup_stream_checkpoint(ckpt, spark)
-    return result
+    except BaseException:
+        spark.catalog.dropTempView(name)
+        if checkpoint is None and ckpt.startswith("/dev/shm/"):
+            cleanup_stream_checkpoint(ckpt)
+        raise
+    if checkpoint is None:
+        cleanup_stream_checkpoint(ckpt, spark)
+    if for_each_batch is None:
+        result = spark.table(name)
+        spark.catalog.dropTempView(name)
+    elif out_path is None:
+        result = None
+    else:
+        # out_path only exists once a batch ran; a run over an empty
+        # source has none. Catch exactly PATH_NOT_FOUND — an
+        # os.path.exists probe is always False for hdfs://"/"s3a:// sinks
+        # and would discard committed results (ADVICE r7) — and return an
+        # empty frame of the plan's schema, as the memory sink would.
+        try:
+            result = spark.read.schema(plan.schema).parquet(out_path)
+            result.schema  # force eager path resolution
+        except AnalysisException as exc:
+            if (exc.getCondition() or "") != "PATH_NOT_FOUND":
+                raise
+            result = spark.createDataFrame([], plan.schema)
+    return result, q.recentProgress
 
 
 def static_and_stream(spark, sf_dir: str, table_file: str):
@@ -342,11 +362,11 @@ def static_and_stream(spark, sf_dir: str, table_file: str):
             .option("maxFilesPerTrigger", "1")
             .parquet(sf_dir)
         )
+        cores = spark.sparkContext.defaultParallelism
         try:
             fbytes = os.path.getsize(path)
         except OSError:
-            return static, stream, None
-        cores = spark.sparkContext.defaultParallelism
+            return static, stream, max(4, cores // 4)
         n_state = max(4, min(math.ceil(fbytes / (_BATCH_TARGET_BYTES // 4)), cores))
         return static, stream, n_state
     static = spark.read.parquet(path)

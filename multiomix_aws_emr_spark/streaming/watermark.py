@@ -18,15 +18,13 @@ Execution model notes:
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from multiomix_aws_emr_spark.session import configure
 from multiomix_aws_emr_spark.sources.tables import ts_ms_expr
 from multiomix_aws_emr_spark.streaming.util import (
-    bounded_state_partitions,
+    bounded_result,
     cleanup_stream_checkpoint,
     static_and_stream,
     stream_checkpoint_dir,
@@ -72,30 +70,14 @@ def run_watermarked_tumbling_with_drop_count(
     inferred from missing output)."""
     configure(spark)
     _, stream, n_state = static_and_stream(spark, sf_dir, glob)
-    out = watermarked_tumbling_plan(stream)
-    table = f"wm_{uuid.uuid4().hex[:8]}"
-    ckpt = stream_checkpoint_dir(spark, "ck_wm")
-    with bounded_state_partitions(spark, n_state):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        dropped = 0
-        for progress in q.recentProgress:
-            for op in progress.get("stateOperators", []):
-                dropped += int(op.get("numRowsDroppedByWatermark", 0))
-    # Materialize before the checkpoint dir disappears.
-    result = spark.table(table)
-    result.count()
-    # SUCCESS-ONLY sweep (the stream_checkpoint_dir policy): a failed run
-    # keeps its checkpoint for diagnosis; the durable root's TTL janitor
-    # is the backstop for leftovers.
-    cleanup_stream_checkpoint(ckpt, spark)
+    result, progress = bounded_result(
+        spark, watermarked_tumbling_plan(stream), "wm", n_state=n_state
+    )
+    dropped = sum(
+        int(op.get("numRowsDroppedByWatermark", 0))
+        for p in progress
+        for op in p.get("stateOperators", [])
+    )
     return result, dropped
 
 

@@ -306,11 +306,9 @@ def test_bounded_state_partitions_restores_conf(spark):
     from multiomix_aws_emr_spark.streaming.util import bounded_state_partitions
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
+    # no count given: the session's own count stays in force
     with bounded_state_partitions(spark):
-        inside = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        assert inside >= 4
-        assert inside <= max(4, spark.sparkContext.defaultParallelism)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
     # restored even when the body raises
     try:
         with bounded_state_partitions(spark, 5):
@@ -470,11 +468,92 @@ def test_bounded_result_zero_commit_returns_empty(spark, tmp_path):
         .parquet(str(src))
         .select((F.col("v") * 2).alias("v2"))
     )
-    out = bounded_result(
+    out, _ = bounded_result(
         spark, plan, "zero_commit", n_state=2, sink_dir=str(tmp_path / "sink")
     )
     assert out.collect() == []
     assert [f.name for f in out.schema.fields] == ["v2"]
+
+
+def test_bounded_result_complete_mode_parquet_sink(spark, tmp_path):
+    """Complete mode re-emits the whole table every batch, so the parquet
+    sink keeps only the last one: a three-batch replay reads back the
+    batch aggregate, not three stacked copies."""
+    from multiomix_aws_emr_spark.streaming.util import bounded_result
+
+    src = tmp_path / "src"
+    spark.range(30).selectExpr("id % 3 AS k").repartition(3).write.parquet(str(src))
+    plan = (
+        spark.readStream.schema("k bigint")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+        .groupBy("k")
+        .count()
+    )
+    out, progress = bounded_result(
+        spark,
+        plan,
+        "complete_sink",
+        n_state=2,
+        mode="complete",
+        sink_dir=str(tmp_path / "sink"),
+    )
+    assert len(progress) == 3
+    assert sorted(map(tuple, out.collect())) == [(0, 10), (1, 10), (2, 10)]
+
+
+def test_bounded_result_failure_sweeps_only_tmpfs(spark, tmp_path, monkeypatch):
+    """A bounded run whose Python UDF raises re-raises the error. Its
+    checkpoint is swept when it sits on /dev/shm (a kept one would hold RAM
+    until reboot) and kept for diagnosis when the small-tmpfs guard puts it
+    in the OS temp dir."""
+    import shutil
+    import tempfile
+    import types
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from multiomix_aws_emr_spark.streaming.util import bounded_result
+
+    def _fail(v):
+        raise ValueError("injected udf failure")
+
+    src = tmp_path / "src"
+    spark.range(3).write.parquet(str(src))
+    plan = (
+        spark.readStream.schema("id bigint")
+        .parquet(str(src))
+        .select(F.udf(_fail, LongType())("id").alias("boom"))
+    )
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_CKPT_DIR", raising=False)
+    roots = ("/dev/shm", tempfile.gettempdir())
+
+    def _left():
+        return {
+            os.path.join(r, e)
+            for r in roots
+            if os.path.isdir(r)
+            for e in os.listdir(r)
+            if e.startswith("ck_failing_")
+        }
+
+    for free, on_shm in ((1 << 30, True), (64 << 20, False)):
+        if on_shm and not os.access("/dev/shm", os.W_OK):
+            continue
+        stat = types.SimpleNamespace(f_bavail=free // 4096, f_frsize=4096)
+        monkeypatch.setattr(os, "statvfs", lambda _path, stat=stat: stat)
+        before = _left()
+        with pytest.raises(Exception, match="injected udf failure"):
+            bounded_result(spark, plan, "failing", n_state=2)
+        kept = _left() - before
+        views = [t.name for t in spark.catalog.listTables()]
+        assert not [v for v in views if v.startswith("failing_")]
+        if on_shm:
+            assert kept == set()
+        else:
+            assert len(kept) == 1 and not next(iter(kept)).startswith("/dev/shm/")
+            shutil.rmtree(kept.pop())
 
 
 def test_bounded_rocksdb_state_store_matches_default(spark, sf_dir, monkeypatch):
