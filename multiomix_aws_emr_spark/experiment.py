@@ -31,20 +31,17 @@ import argparse
 import functools
 import json
 import os
+import sys
 import time as _time
 
 import numpy as np
 
 from pyspark.sql import SparkSession
 
-
-def _cox_fitness(folds: int, seed: int):
-    from multiomix_aws_emr_spark.fs.fitness import cv_linear_cox_fitness
-
-    return functools.partial(cv_linear_cox_fitness, folds=folds, seed=seed)
+from multiomix_aws_emr_spark.fs import fitness as _fitness
 
 
-def _svm_or_rf_fitness(model: str, folds: int, seed: int, args=None):
+def _svm_or_rf_fitness(model: str, folds: int, seed: int, args):
     """R26 (`scripts/main.py:29-42,114-135`): prefer the real sksurv
     estimators when the library is installed; otherwise the
     dependency-free same-family implementations (fs/survival_models.py)
@@ -64,52 +61,94 @@ def _svm_or_rf_fitness(model: str, folds: int, seed: int, args=None):
     record them without branching."""
     from multiomix_aws_emr_spark.fs import sksurv_backend
 
-    kernel = getattr(args, "svm_kernel", "linear")
-    optimizer = getattr(args, "svm_optimizer", "avltree")
-    max_iter = getattr(args, "svm_max_iterations", 1000)
-    is_regression = getattr(args, "svm_is_regression", False)
-    n_estimators = getattr(args, "rf_n_estimators", 10)
-    tree_n_jobs = getattr(args, "tree_n_jobs", -1)
-
     if sksurv_backend.available():
         return sksurv_backend.make_fitness(
             model,
             folds=folds,
             seed=seed,
-            kernel=kernel,
-            optimizer=optimizer,
-            max_iter=max_iter,
-            is_regression=is_regression,
-            n_estimators=n_estimators,
-            n_jobs=tree_n_jobs,
+            kernel=args.svm_kernel,
+            optimizer=args.svm_optimizer,
+            max_iter=args.svm_max_iterations,
+            is_regression=args.svm_is_regression,
+            n_estimators=args.rf_n_estimators,
+            n_jobs=args.tree_n_jobs,
         )
-    from multiomix_aws_emr_spark.fs.fitness import (
-        cv_rank_svm_fitness,
-        cv_survival_forest_fitness,
-    )
-
     if model == "svm":
-        if kernel != "linear":
+        if args.svm_kernel != "linear":
             raise ValueError(
-                f"--svm-kernel {kernel} needs the scikit-survival backend "
+                f"--svm-kernel {args.svm_kernel} needs the scikit-survival backend "
                 "(the dependency-free ranking SVM is linear); install "
                 "sksurv or use --svm-kernel linear"
             )
-        if is_regression:
+        if args.svm_is_regression:
             raise ValueError(
                 "--svm-is-regression true needs the scikit-survival "
                 "backend (the dependency-free fallback implements the "
                 "ranking objective, rank_ratio=1.0)"
             )
         return functools.partial(
-            cv_rank_svm_fitness, folds=folds, seed=seed, max_iter=max_iter
+            _fitness.cv_rank_svm_fitness,
+            folds=folds,
+            seed=seed,
+            max_iter=args.svm_max_iterations,
         )
     return functools.partial(
-        cv_survival_forest_fitness,
+        _fitness.cv_survival_forest_fitness,
         folds=folds,
         seed=seed,
-        n_estimators=n_estimators,
+        n_estimators=args.rf_n_estimators,
     )
+
+
+def _model_fitness(args: argparse.Namespace) -> tuple[_fitness.FitnessFn, float]:
+    """``--model`` -> (fitness function, empty-subset sentinel), the
+    reference's model switch (`scripts/main.py:29-42`).
+
+    The sentinel is -1.0 for every bounded-in-[0,1] fitness and the
+    reference's NEG_INF for the unbounded-below clustering
+    ``log_likelihood`` scoring — otherwise a valid subset with LL < -1
+    ranks below the empty one."""
+    folds, seed = args.cv_folds, args.random_state
+    if args.model in ("svm", "rf"):
+        fitness = _svm_or_rf_fitness(args.model, folds, seed, args)
+    elif args.model == "cox":
+        fitness = functools.partial(
+            _fitness.cv_linear_cox_fitness, folds=folds, seed=seed
+        )
+    elif args.model == "coxph":
+        # the model-faithful R27 tier: Newton-fit Cox partial likelihood
+        fitness = functools.partial(_fitness.cv_coxph_fitness, folds=folds, seed=seed)
+    else:  # clustering (`scripts/main.py:79-112`): dependency-free
+        # k-means or spectral + survival separation fitness (R27;
+        # algorithm enum mirrors `scripts/main.py:49,83-84`, accepting
+        # the reference spelling 'k_means'; --number-of-clusters and
+        # --clustering-scoring-method plumb through,
+        # parameters.py:126-135)
+        if args.clustering_scoring_method == "logrank":
+            # Deliberate default deviation: the reference defaults to
+            # 'log_likelihood' (`scripts/parameters.py:126-135`); this
+            # engine defaults to the bounded squashed-logrank that its
+            # declared queries/oracles pin. Say so once, loudly, so a
+            # reference spark-submit line that omits the flag is not
+            # silently rescored.
+            print(
+                "[experiment] clustering scoring is 'logrank' (this "
+                "engine's default); note the reference defaults to "
+                "'log_likelihood' — pass --clustering-scoring-method "
+                "log_likelihood for reference-default semantics",
+                file=sys.stderr,
+            )
+        fitness = functools.partial(
+            _fitness.cv_clustering_logrank_fitness,
+            folds=folds,
+            seed=seed,
+            algorithm=args.clustering_algorithm.replace("k_means", "kmeans"),
+            n_clusters=args.number_of_clusters,
+            scoring=args.clustering_scoring_method,
+        )
+        if args.clustering_scoring_method == "log_likelihood":
+            return fitness, _fitness.NEG_INF_FITNESS
+    return fitness, _fitness.WORST_FITNESS
 
 
 def _tf(value: str) -> bool:
@@ -232,7 +271,7 @@ def build_arg_parser() -> argparse.ArgumentParser:
 
 def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     """Ingest -> clean -> BBHA -> write artifacts. Returns result dict."""
-    from multiomix_aws_emr_spark.fs.bbha import run_bbha
+    from multiomix_aws_emr_spark.fs import bbha
     from multiomix_aws_emr_spark.sources.sinks import (
         write_model_artifact,
         write_parquet,
@@ -245,63 +284,7 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     )
 
     t0 = _time.perf_counter()
-    # Empty-subset / error sentinel for the metaheuristic: -1.0 for every
-    # bounded-in-[0,1] fitness; the reference's NEG_INF for the
-    # unbounded-below clustering log_likelihood scoring (ADVICE r7 —
-    # otherwise a valid subset with LL < -1 ranks below the empty one).
-    worst_fitness = None
-    if args.model == "cox":
-        fitness = _cox_fitness(args.cv_folds, args.random_state)
-    elif args.model == "coxph":
-        # the model-faithful R27 tier: Newton-fit Cox partial likelihood
-        from multiomix_aws_emr_spark.fs.fitness import cv_coxph_fitness
-
-        fitness = functools.partial(
-            cv_coxph_fitness, folds=args.cv_folds, seed=args.random_state
-        )
-    elif args.model in ("svm", "rf"):
-        fitness = _svm_or_rf_fitness(
-            args.model, args.cv_folds, args.random_state, args
-        )
-    else:  # clustering (`scripts/main.py:79-112`): dependency-free
-        # k-means or spectral + log-rank separation fitness (fs/fitness.py
-        # R27; algorithm enum mirrors `scripts/main.py:49,83-84`, accepting
-        # the reference spelling 'k_means'; --number-of-clusters and
-        # --clustering-scoring-method plumb through, parameters.py:126-135)
-        import functools as _ft
-
-        from multiomix_aws_emr_spark.fs.fitness import (
-            cv_clustering_logrank_fitness,
-        )
-
-        algo = getattr(args, "clustering_algorithm", "kmeans")
-        scoring = getattr(args, "clustering_scoring_method", "logrank")
-        if scoring == "logrank":
-            # Deliberate default deviation: the reference defaults to
-            # 'log_likelihood' (`scripts/parameters.py:126-135`); this
-            # engine defaults to the bounded squashed-logrank that its
-            # declared queries/oracles pin. Say so once, loudly, so a
-            # reference spark-submit line that omits the flag is not
-            # silently rescored.
-            print(
-                "[experiment] clustering scoring is 'logrank' (this "
-                "engine's default); note the reference defaults to "
-                "'log_likelihood' — pass --clustering-scoring-method "
-                "log_likelihood for reference-default semantics",
-                file=__import__("sys").stderr,
-            )
-        fitness = _ft.partial(
-            cv_clustering_logrank_fitness,
-            folds=args.cv_folds,
-            seed=args.random_state,
-            algorithm="kmeans" if algo == "k_means" else algo,
-            n_clusters=getattr(args, "number_of_clusters", 2),
-            scoring=scoring,
-        )
-        if scoring == "log_likelihood":
-            from multiomix_aws_emr_spark.fs.fitness import NEG_INF_FITNESS
-
-            worst_fitness = NEG_INF_FITNESS
+    fitness, worst_fitness = _model_fitness(args)
 
     molecules = read_molecules_tsv(spark, args.molecules_dataset)
     wide = clean_wide(long_to_wide(molecules))
@@ -315,10 +298,8 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     time_col = pdf.pop("time").to_numpy(dtype=np.float64)
     event_col = pdf.pop("event").to_numpy(dtype=bool)
 
-    if getattr(args, "algorithm", "bbha") == "blind_search":
-        from multiomix_aws_emr_spark.fs.blind import run_blind_search
-
-        result = run_blind_search(
+    if args.algorithm == "blind_search":
+        result = bbha.run_blind_search(
             spark,
             pdf,
             time_col,
@@ -326,11 +307,11 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
             n_subsets=args.n_stars,
             random_state=args.random_state,
             fitness_fn=fitness,
-            use_broadcast=getattr(args, "use_broadcast", True),
+            use_broadcast=args.use_broadcast,
             worst_fitness=worst_fitness,
         )
     else:
-        result = run_bbha(
+        result = bbha.run_bbha(
             spark,
             pdf,
             time_col,
@@ -339,19 +320,17 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
             n_iterations=args.bbha_iterations,
             random_state=args.random_state,
             fitness_fn=fitness,
-            variant=getattr(args, "bbha_variant", "classic"),
-            coeff_1=getattr(args, "coeff_1", 2.2),
-            coeff_2=getattr(args, "coeff_2", 0.1),
-            use_load_balancer=getattr(args, "use_load_balancer", True),
-            use_broadcast=getattr(args, "use_broadcast", True),
-            **({"worst_fitness": worst_fitness} if worst_fitness is not None else {}),
+            variant=args.bbha_variant,
+            coeff_1=args.coeff_1,
+            coeff_2=args.coeff_2,
+            use_load_balancer=args.use_load_balancer,
+            use_broadcast=args.use_broadcast,
+            worst_fitness=worst_fitness,
         )
 
-    if getattr(args, "debug", False):
+    if args.debug:
         # the reference's --debug logs every star's value in the terminal
         # (`scripts/parameters.py:105-107`, metaheuristics star logging)
-        import sys
-
         for row in result.history:
             print(
                 f"[debug] iteration={row['iteration']} star={row['star_id']} "
@@ -374,7 +353,7 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     model_path = write_model_artifact(
         {
             "model": args.model,
-            "algorithm": getattr(args, "algorithm", "bbha"),
+            "algorithm": args.algorithm,
             "mask": result.best_mask.tolist(),
             "features": result.selected_features,
             "best_fitness": result.best_fitness,
@@ -401,7 +380,7 @@ def main(argv: list[str] | None = None) -> dict:
     from multiomix_aws_emr_spark.session import build_session
 
     spark = build_session(
-        app_name=args.app_name, master=getattr(args, "master", None)
+        app_name=args.app_name, master=args.master
     )
     try:
         summary = run_experiment(spark, args)

@@ -64,10 +64,9 @@ from multiomix_aws_emr_spark.fs.costmodel import (
 )
 from multiomix_aws_emr_spark.fs.fitness import (
     WORST_FITNESS,
+    FitnessFn,
     cv_linear_cox_fitness,
 )
-
-FitnessFn = Callable[[np.ndarray, np.ndarray, np.ndarray, np.ndarray], float]
 
 
 def random_mask(n_features: int, rng: np.random.RandomState) -> np.ndarray:
@@ -200,6 +199,19 @@ _EVAL_SCHEMA = (
 )
 
 
+def _evaluate(spark: SparkSession, evaluator, iteration: int, rows: list) -> list[dict]:
+    """One grouped-Arrow pass over ``(star_id, bin_id, mask)`` rows: one
+    Spark job, one bounded collect (P7). Returns the history rows
+    (``iteration`` plus the :data:`_EVAL_SCHEMA` fields) sorted by star
+    id."""
+    sdf = spark.createDataFrame(rows, schema="star_id int, bin_id int, mask array<int>")
+    res = sdf.groupBy("bin_id").applyInPandas(evaluator, _EVAL_SCHEMA).collect()
+    return [
+        {"iteration": iteration, **r.asDict()}
+        for r in sorted(res, key=lambda r: r.star_id)
+    ]
+
+
 def evaluate_all_features_baseline(
     spark: SparkSession, evaluator, n_features: int
 ) -> dict:
@@ -210,19 +222,8 @@ def evaluate_all_features_baseline(
     identical CV folds, seeding, and executor placement. One 1-row Spark
     job; returned as a history-row dict with the reserved coordinates
     ``iteration=-1, star_id=-1``."""
-    sdf = spark.createDataFrame(
-        [(-1, 0, [1] * n_features)],
-        schema="star_id int, bin_id int, mask array<int>",
-    )
-    row = sdf.groupBy("bin_id").applyInPandas(evaluator, _EVAL_SCHEMA).collect()[0]
-    return {
-        "iteration": -1,
-        "star_id": -1,
-        "fitness": float(row.fitness),
-        "n_features": int(row.n_features),
-        "exec_time": float(row.exec_time),
-        "hostname": row.hostname,
-    }
+    [row] = _evaluate(spark, evaluator, -1, [(-1, 0, [1] * n_features)])
+    return row
 
 
 #: Admissible improved-variant coefficients (`metaheuristics.py:358-367`,
@@ -326,28 +327,6 @@ def run_bbha(
 
     cost_model = RuntimeCostModel() if use_load_balancer else None
 
-    def evaluate_all(iteration: int) -> list[tuple[int, float, int, float, str]]:
-        star_ids = list(range(n_stars))
-        bins, _ = plan_star_bins(
-            masks,
-            n_bins,
-            cost_fn=cost_fn if use_load_balancer else None,
-            cost_model=cost_model,
-        )
-        rows = [(i, bins[i], [int(b) for b in masks[i]]) for i in star_ids]
-        sdf = spark.createDataFrame(
-            rows, schema="star_id int, bin_id int, mask array<int>"
-        )
-        res = (
-            sdf.groupBy("bin_id")
-            .applyInPandas(evaluator, _EVAL_SCHEMA)
-            .collect()  # bounded: n_stars rows (P7)
-        )
-        return sorted(
-            (r.star_id, r.fitness, r.n_features, r.exec_time, r.hostname)
-            for r in res
-        )
-
     history: list[dict] = [baseline]
     bh_idx, bh_fitness = -1, -np.inf
     # improved variant: per-star personal bests (`metaheuristics.py:371-374`)
@@ -355,21 +334,23 @@ def run_bbha(
     best_fitnesses = np.full(n_stars, -np.inf)
 
     for iteration in range(n_iterations):
-        results = evaluate_all(iteration)
-        fitnesses = np.array([r[1] for r in results])
-        for sid, fit, nf, dt, host in results:
-            if cost_model is not None:
-                cost_model.observe(nf, dt)  # R30: train the width->time curve
-            history.append(
-                {
-                    "iteration": iteration,
-                    "star_id": sid,
-                    "fitness": fit,
-                    "n_features": nf,
-                    "exec_time": dt,
-                    "hostname": host,
-                }
-            )
+        bins, _ = plan_star_bins(
+            masks,
+            n_bins,
+            cost_fn=cost_fn if use_load_balancer else None,
+            cost_model=cost_model,
+        )
+        rows = _evaluate(
+            spark,
+            evaluator,
+            iteration,
+            [(i, bins[i], [int(b) for b in masks[i]]) for i in range(n_stars)],
+        )
+        history.extend(rows)
+        fitnesses = np.array([r["fitness"] for r in rows])
+        if cost_model is not None:
+            for r in rows:  # R30: train the width->time curve
+                cost_model.observe(r["n_features"], r["exec_time"])
         improved = fitnesses > best_fitnesses
         for i in np.nonzero(improved)[0]:
             best_fitnesses[i] = fitnesses[i]
@@ -381,9 +362,8 @@ def run_bbha(
             range(n_stars),
             key=lambda i: (-fitnesses[i], int(masks[i].sum()), i),
         )
-        if fitnesses[order[0]] > bh_fitness or (
+        if bh_idx < 0 or fitnesses[order[0]] > bh_fitness or (
             fitnesses[order[0]] == bh_fitness
-            and bh_idx >= 0
             and masks[order[0]].sum() < masks[bh_idx].sum()
         ):
             bh_idx, bh_fitness = order[0], float(fitnesses[order[0]])
@@ -428,31 +408,23 @@ def run_bbha(
                 thr = binarization_threshold
             masks[i] = (np.abs(np.tanh(x_new)) > thr).astype(np.int32)
 
-            dist = float(np.linalg.norm(bh_mask - masks[i]))
-            if variant == "improved":
+            captured = float(np.linalg.norm(bh_mask - masks[i])) < horizon
+            if variant == "improved" and captured:
                 # Improvement 2: capture toggles ONE random dimension
-                # (`:449-451`); an all-zero mask still re-randomizes (the
-                # zero subset is invalid by R13).
-                if dist < horizon:
-                    flip = loop_rng.randint(0, n_features)
-                    masks[i][flip] ^= 1
-                if masks[i].sum() == 0:
-                    masks[i] = random_mask(
-                        n_features,
-                        np.random.RandomState(
-                            random_state * (i + 1) + 1000 * (iteration + 1)
-                        ),
-                    )
-            else:
-                # Event-horizon capture -> seeded re-initialization
-                # (metaheuristics.py:683-694, R16/R18).
-                if dist < horizon or masks[i].sum() == 0:
-                    masks[i] = random_mask(
-                        n_features,
-                        np.random.RandomState(
-                            random_state * (i + 1) + 1000 * (iteration + 1)
-                        ),
-                    )
+                # (`:449-451`) instead of re-initializing the star.
+                masks[i][loop_rng.randint(0, n_features)] ^= 1
+                captured = False
+            # Classic event-horizon capture -> seeded re-initialization
+            # (metaheuristics.py:683-694, R16/R18); an all-zero mask
+            # re-randomizes in both variants (the zero subset is invalid
+            # by R13).
+            if captured or masks[i].sum() == 0:
+                masks[i] = random_mask(
+                    n_features,
+                    np.random.RandomState(
+                        random_state * (i + 1) + 1000 * (iteration + 1)
+                    ),
+                )
 
     best_mask = masks[bh_idx]
     return BBHAResult(
@@ -465,4 +437,46 @@ def run_bbha(
         execution_time=_time.perf_counter() - t_start,
         history=history,
         baseline_fitness=baseline["fitness"],
+    )
+
+
+def run_blind_search(
+    spark: SparkSession,
+    x: pd.DataFrame,
+    time_col: np.ndarray,
+    event_col: np.ndarray,
+    *,
+    n_subsets: int = 30,
+    random_state: int = 42,
+    n_bins: Optional[int] = None,
+    fitness_fn: FitnessFn = cv_linear_cox_fitness,
+    use_broadcast: bool = True,
+    worst_fitness: float = WORST_FITNESS,
+) -> BBHAResult:
+    """Blind (random) search: evaluate ``n_subsets`` seeded random feature
+    subsets in one pass and keep the best.
+
+    The reference declares BLIND_SEARCH as its second algorithm
+    (`src/emr.py:10-14`) but never implements it (a TODO, SURVEY.md
+    §7.6). Its semantics are the degenerate BBHA, so this is exactly a
+    one-iteration :func:`run_bbha`: the stars are seeded like BBHA's
+    (subset i from ``random_state * (i + 1)``,
+    `scripts/metaheuristics.py:524-527`), iteration 0's black hole is the
+    arg-best with the fewer-features tie-break (`:670-681`, R15), and the
+    loop ends before any position update. The all-features baseline
+    (R34) is reported as for BBHA. The load balancer is off — there is no
+    iteration history to train it on — so bins are sequential."""
+    return run_bbha(
+        spark,
+        x,
+        time_col,
+        event_col,
+        n_stars=n_subsets,
+        n_iterations=1,
+        random_state=random_state,
+        n_bins=n_bins,
+        fitness_fn=fitness_fn,
+        use_load_balancer=False,
+        use_broadcast=use_broadcast,
+        worst_fitness=worst_fitness,
     )

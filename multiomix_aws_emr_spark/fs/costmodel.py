@@ -7,20 +7,19 @@ builds exactly that feature row; `scripts/model_parameters.py:12-23`
 declares the categorical SVMParameters; `:156-166` bins; `src/emr.py`
 ships the .pkl models). This engine has no out-of-band model files, so the
 regressor is SELF-FITTED from the observations the BBHA loop already
-produces: every evaluated star yields an (n_features, n_samples, kernel,
-optimizer, exec_time) row, and after the first iteration the model is fit
-closed-form and starts steering `greedy_bin_assignment` — the same
-predict -> pack -> pin flow, minus the joblib artifacts.
+produces: every evaluated star yields an (n_features, exec_time) row, and
+after the first iteration the model is fit closed-form and starts steering
+`greedy_bin_assignment` — the same predict -> pack -> pin flow, minus the
+joblib artifacts.
 
-Model: one ridge polynomial curve time ~ [1, f, f^2, s, s*f^2] per
-(kernel, optimizer) group (fitness cost is super-linear in feature count
-and linear in sample count for fixed width: the lstsq/Newton inside the
-Cox fitness is O(n p^2 + p^3)), plus a pooled fallback curve over ALL
-observations for groups not yet seen. Per-kernel curves matter because
-the reference's domain shows order-of-magnitude gaps between kernel
-families — a pooled width-only curve mispacks as soon as two kernels mix.
-Solved by normal equations on the driver — a few dozen observations,
-microseconds to fit, no dependencies.
+Model: one ridge quadratic width curve time ~ [1, f, f^2] (fitness cost
+is super-linear in feature count at fixed data: the lstsq/Newton inside
+the Cox fitness is O(n p^2 + p^3)), solved by normal equations on the
+driver — a few dozen observations, microseconds to fit, no dependencies.
+The reference's other features (n_samples, kernel, optimizer) are not
+modelled: ``run_bbha`` trains a fresh model per run, and within one run
+they are constant, so they could only shift every prediction alike and
+never change a packing.
 """
 
 from __future__ import annotations
@@ -38,115 +37,42 @@ from multiomix_aws_emr_spark.plans.binpack import (
 #: >= 3 distinct feature counts so the quadratic is determined.
 MIN_OBSERVATIONS = 6
 
-#: A (kernel, optimizer) group additionally needs this many rows spanning
-#: >= 3 widths before it earns its own curve; below that it uses the
-#: pooled fallback.
-MIN_GROUP_OBSERVATIONS = 6
+#: Ridge added to the normal equations' diagonal.
+RIDGE = 1e-6
 
 
 class RuntimeCostModel:
-    """Online-fitted predictor of per-star fitness wall time.
+    """Online-fitted predictor of per-star fitness wall time from the
+    star's subset width."""
 
-    ``observe``/``predict`` accept optional ``n_samples``/``kernel``/
-    ``optimizer`` context mirroring the reference's SVMParameters feature
-    row; width-only callers (the dependency-free fitness families, whose
-    cost depends only on subset width at fixed data) keep working
-    unchanged — they train and read the pooled curve.
-    """
+    def __init__(self):
+        self._widths: list[float] = []
+        self._seconds: list[float] = []
 
-    def __init__(self, ridge: float = 1e-6):
-        self._ridge = ridge
-        # rows: (n_features, n_samples, kernel, optimizer, seconds)
-        self._rows: list[tuple[float, float, str, str, float]] = []
-        self._pooled: np.ndarray | None = None
-        self._by_group: dict[tuple[str, str], np.ndarray] = {}
-        self._dirty = False
-
-    def observe(
-        self,
-        n_features: int,
-        seconds: float,
-        *,
-        n_samples: int = 0,
-        kernel: str = "",
-        optimizer: str = "",
-    ) -> None:
-        """Record one completed star evaluation (with optional model
-        context — the reference's categorical features)."""
+    def observe(self, n_features: int, seconds: float) -> None:
+        """Record one completed star evaluation."""
         if seconds >= 0:
-            self._rows.append(
-                (
-                    float(n_features),
-                    float(n_samples),
-                    str(kernel),
-                    str(optimizer),
-                    float(seconds),
-                )
-            )
-            self._dirty = True
-
-    @property
-    def n_observations(self) -> int:
-        return len(self._rows)
+            self._widths.append(float(n_features))
+            self._seconds.append(float(seconds))
 
     def ready(self) -> bool:
         """Enough signal to fit: MIN_OBSERVATIONS rows spanning >= 3
         distinct feature counts (a constant-width population can't train
         a width->time curve — sequential packing is correct there)."""
-        widths = {r[0] for r in self._rows}
-        return len(self._rows) >= MIN_OBSERVATIONS and len(widths) >= 3
+        return len(self._widths) >= MIN_OBSERVATIONS and len(set(self._widths)) >= 3
 
-    @staticmethod
-    def _design(f: np.ndarray, s: np.ndarray) -> np.ndarray:
-        return np.column_stack([np.ones_like(f), f, f * f, s, s * f * f])
-
-    def _solve(self, rows: list[tuple[float, float, str, str, float]]) -> np.ndarray:
-        f = np.array([r[0] for r in rows])
-        s = np.array([r[1] for r in rows])
-        t = np.array([r[4] for r in rows])
-        a = self._design(f, s)
-        gram = a.T @ a + self._ridge * np.eye(a.shape[1])
-        return np.linalg.solve(gram, a.T @ t)
-
-    def fit(self) -> "RuntimeCostModel":
-        self._pooled = self._solve(self._rows)
-        self._by_group = {}
-        groups: dict[tuple[str, str], list] = {}
-        for r in self._rows:
-            groups.setdefault((r[2], r[3]), []).append(r)
-        for g, rows in groups.items():
-            if (
-                len(rows) >= MIN_GROUP_OBSERVATIONS
-                and len({r[0] for r in rows}) >= 3
-            ):
-                self._by_group[g] = self._solve(rows)
-        self._dirty = False
-        return self
-
-    def predict(
-        self,
-        n_features: int,
-        *,
-        n_samples: int = 0,
-        kernel: str = "",
-        optimizer: str = "",
-    ) -> float:
-        """Predicted seconds for a star of the given width under the given
-        model context: the (kernel, optimizer) group's own curve when that
-        group has trained one, else the pooled curve. Clamped to a small
-        positive floor (greedy_bin_assignment treats negative predictions
-        as a broken model and aborts, mirroring the reference's R32 guard
-        — the clamp keeps an extrapolating quadratic from tripping it on
-        tiny widths)."""
-        if self._pooled is None or self._dirty:
-            self.fit()
-        beta = self._by_group.get((str(kernel), str(optimizer)), self._pooled)
-        row = self._design(
-            np.array([float(n_features)]), np.array([float(n_samples)])
-        )
-        # row is (1, d): take the scalar explicitly — max(array, float)
-        # returns a 0-d-convertible array NumPy >= 1.25 deprecates casting
-        return max(float((row @ beta)[0]), 1e-6)
+    def predict(self, n_features: int) -> float:
+        """Predicted seconds for a star of the given width. Clamped to a
+        small positive floor (greedy_bin_assignment treats negative
+        predictions as a broken model and aborts, mirroring the
+        reference's R32 guard — the clamp keeps an extrapolating quadratic
+        from tripping it on tiny widths)."""
+        f = np.array(self._widths)
+        a = np.column_stack([np.ones_like(f), f, f * f])
+        gram = a.T @ a + RIDGE * np.eye(3)
+        beta = np.linalg.solve(gram, a.T @ np.array(self._seconds))
+        w = float(n_features)
+        return max(float(beta @ [1.0, w, w * w]), 1e-6)
 
 
 def plan_star_bins(
@@ -155,29 +81,18 @@ def plan_star_bins(
     *,
     cost_fn=None,
     cost_model: RuntimeCostModel | None = None,
-    model_context: Mapping[str, object] | None = None,
 ) -> tuple[dict[int, int], Mapping[int, float] | None]:
     """Choose the bin for every star: explicit ``cost_fn`` first (the
     injected-predictor seam), else the self-fitted ``cost_model`` once it
     is ready, else the reference's sequential fallback partitioner (R8).
-    ``model_context`` carries the experiment-constant prediction features
-    (n_samples/kernel/optimizer — constant across stars within one run,
-    exactly as the reference passes one SVMParameters for all stars).
     Returns (assignment, predicted costs or None)."""
     star_ids = list(range(len(masks)))
     if cost_fn is not None:
         costs = {i: float(cost_fn(masks[i])) for i in star_ids}
         return greedy_bin_assignment(costs, n_bins), costs
     if cost_model is not None and cost_model.ready():
-        ctx = dict(model_context or {})
-        kwargs = {
-            "n_samples": int(ctx.get("n_samples", 0)),
-            "kernel": str(ctx.get("kernel", "")),
-            "optimizer": str(ctx.get("optimizer", "")),
-        }
         costs = {
-            i: cost_model.predict(int(np.asarray(masks[i]).sum()), **kwargs)
-            for i in star_ids
+            i: cost_model.predict(int(np.asarray(masks[i]).sum())) for i in star_ids
         }
         return greedy_bin_assignment(costs, n_bins), costs
     return sequential_bin_assignment(star_ids, n_bins), None

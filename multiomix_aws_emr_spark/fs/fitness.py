@@ -8,9 +8,10 @@ index. Those model libraries (scikit-survival, lifelines) are not part of
 this engine's baked environment, so the built-in fitness is a
 dependency-free equivalent with the same contract: deterministic k-fold CV
 -> fit a risk model on train -> concordance index on test -> mean across
-folds. Heavier model backends plug in behind the same signature (gated by
-import-try, mirroring the reference's pluggable ``--model`` switch,
-`scripts/main.py:29-42`).
+folds. That loop is written once, :func:`cv_mean_score`; each family
+supplies only its per-fold scorer. Heavier model backends plug in behind
+the same signature (gated by import-try, mirroring the reference's
+pluggable ``--model`` switch, `scripts/main.py:29-42`).
 
 Determinism notes (SURVEY.md §4.2.2): CV folds are assigned by
 ``crc32(sample_id) % k`` — stable across engines, partitions, and runs,
@@ -20,6 +21,7 @@ unlike ``randomSplit`` or sklearn's internal shuffling.
 from __future__ import annotations
 
 import zlib
+from collections.abc import Callable
 
 import numpy as np
 
@@ -36,6 +38,11 @@ WORST_FITNESS = -1.0
 #: The reference's NEG_INF error/empty sentinel (`scripts/core.py:17`),
 #: required whenever the scoring is unbounded below.
 NEG_INF_FITNESS = float("-inf")
+
+#: A fitness function: ``(x[:, subset], time, event, sample_ids) ->
+#: score``, higher is better. Every ``cv_*`` family below and
+#: ``sksurv_backend.make_fitness`` produce one.
+FitnessFn = Callable[[np.ndarray, np.ndarray, np.ndarray, np.ndarray], float]
 
 
 def concordance_index(
@@ -73,6 +80,55 @@ def deterministic_folds(sample_ids: np.ndarray, k: int, seed: int) -> np.ndarray
     )
 
 
+def cv_mean_score(
+    x: np.ndarray,
+    time: np.ndarray,
+    event: np.ndarray,
+    sample_ids: np.ndarray,
+    score_fold: Callable[[np.ndarray, np.ndarray, np.ndarray, np.ndarray], float],
+    *,
+    folds: int,
+    seed: int,
+    min_train: int = 2,
+    standardize: bool = True,
+    worst: float = WORST_FITNESS,
+) -> float:
+    """The CV loop every fitness family shares: the empty-subset guard
+    (R13), ``deterministic_folds``, a skip for folds with fewer than
+    ``min_train`` train or 2 test rows, float features standardized on
+    the train fold (when ``standardize``), then
+    ``score_fold(train, test, xtr, xte)`` per fold (boolean row masks and
+    the fold's feature blocks). Returns the mean fold score — the
+    reference's mean ``cross_validate`` test score
+    (`scripts/main.py:130-135`) — or ``worst`` when no fold scored."""
+    if x.ndim != 2 or x.shape[1] == 0:
+        return worst
+    fold_of = deterministic_folds(sample_ids, folds, seed)
+    scores = []
+    for f in range(folds):
+        train, test = fold_of != f, fold_of == f
+        if train.sum() < min_train or test.sum() < 2:
+            continue
+        xtr, xte = x[train].astype(float), x[test].astype(float)
+        if standardize:
+            mu, sigma = xtr.mean(axis=0), xtr.std(axis=0)
+            sigma[sigma == 0] = 1.0
+            xtr, xte = (xtr - mu) / sigma, (xte - mu) / sigma
+        scores.append(score_fold(train, test, xtr, xte))
+    return float(np.mean(scores)) if scores else worst
+
+
+def _linear_risk_cv(x, time, event, sample_ids, fit, *, folds, seed) -> float:
+    """CV of a linear risk model: ``fit(xtr, time, event) -> weights`` on
+    the standardized train fold, test C-index of ``xte @ weights``."""
+
+    def score(train, test, xtr, xte):
+        w = fit(xtr, time[train], event[train])
+        return concordance_index(xte @ w, time[test], event[test])
+
+    return cv_mean_score(x, time, event, sample_ids, score, folds=folds, seed=seed)
+
+
 def cv_linear_cox_fitness(
     x: np.ndarray,
     time: np.ndarray,
@@ -91,29 +147,15 @@ def cv_linear_cox_fitness(
     'mean cross_validate test score' contract as the reference
     (`scripts/main.py:130-135`).
     """
-    if x.ndim != 2 or x.shape[1] == 0:
-        return WORST_FITNESS
-    fold_of = deterministic_folds(sample_ids, folds, seed)
-    scores = []
-    for f in range(folds):
-        train, test = fold_of != f, fold_of == f
-        if train.sum() < 2 or test.sum() < 2:
-            continue
-        xtr, xte = x[train], x[test]
-        mu, sigma = xtr.mean(axis=0), xtr.std(axis=0)
-        sigma[sigma == 0] = 1.0
-        xtr = (xtr - mu) / sigma
-        xte = (xte - mu) / sigma
+
+    def ridge(xtr, t, e):
         # ridge via augmented lstsq: [X; sqrt(lam) I] beta = [-t; 0]
         lam = 1e-3
         aug = np.vstack([xtr, np.sqrt(lam) * np.eye(xtr.shape[1])])
-        target = np.concatenate([-time[train], np.zeros(xtr.shape[1])])
-        beta, *_ = np.linalg.lstsq(aug, target, rcond=None)
-        risk = xte @ beta
-        scores.append(concordance_index(risk, time[test], event[test]))
-    if not scores:
-        return WORST_FITNESS
-    return float(np.mean(scores))
+        target = np.concatenate([-t, np.zeros(xtr.shape[1])])
+        return np.linalg.lstsq(aug, target, rcond=None)[0]
+
+    return _linear_risk_cv(x, time, event, sample_ids, ridge, folds=folds, seed=seed)
 
 
 def cv_coxph_fitness(
@@ -133,25 +175,9 @@ def cv_coxph_fitness(
     BBHA inner loops; this one is the model-faithful tier."""
     from multiomix_aws_emr_spark.fs.survival_models import cox_ph_fit
 
-    if x.ndim != 2 or x.shape[1] == 0:
-        return WORST_FITNESS
-    fold_of = deterministic_folds(sample_ids, folds, seed)
-    scores = []
-    for f in range(folds):
-        train, test = fold_of != f, fold_of == f
-        if train.sum() < 2 or test.sum() < 2:
-            continue
-        xtr, xte = x[train].astype(float), x[test].astype(float)
-        mu, sigma = xtr.mean(axis=0), xtr.std(axis=0)
-        sigma[sigma == 0] = 1.0
-        xtr = (xtr - mu) / sigma
-        xte = (xte - mu) / sigma
-        beta = cox_ph_fit(xtr, time[train], event[train])
-        risk = xte @ beta
-        scores.append(concordance_index(risk, time[test], event[test]))
-    if not scores:
-        return WORST_FITNESS
-    return float(np.mean(scores))
+    return _linear_risk_cv(
+        x, time, event, sample_ids, cox_ph_fit, folds=folds, seed=seed
+    )
 
 
 def cv_rank_svm_fitness(
@@ -173,27 +199,10 @@ def cv_rank_svm_fitness(
     :mod:`multiomix_aws_emr_spark.fs.sksurv_backend`."""
     from multiomix_aws_emr_spark.fs.survival_models import rank_svm_fit
 
-    if x.ndim != 2 or x.shape[1] == 0:
-        return WORST_FITNESS
-    fold_of = deterministic_folds(sample_ids, folds, seed)
-    scores = []
-    for f in range(folds):
-        train, test = fold_of != f, fold_of == f
-        if train.sum() < 2 or test.sum() < 2:
-            continue
-        xtr, xte = x[train].astype(float), x[test].astype(float)
-        mu, sigma = xtr.mean(axis=0), xtr.std(axis=0)
-        sigma[sigma == 0] = 1.0
-        xtr = (xtr - mu) / sigma
-        xte = (xte - mu) / sigma
-        w = rank_svm_fit(
-            xtr, time[train], event[train], alpha=alpha, max_iter=max_iter
-        )
-        risk = xte @ w
-        scores.append(concordance_index(risk, time[test], event[test]))
-    if not scores:
-        return WORST_FITNESS
-    return float(np.mean(scores))
+    def fit(xtr, t, e):
+        return rank_svm_fit(xtr, t, e, alpha=alpha, max_iter=max_iter)
+
+    return _linear_risk_cv(x, time, event, sample_ids, fit, folds=folds, seed=seed)
 
 
 def cv_survival_forest_fitness(
@@ -213,25 +222,19 @@ def cv_survival_forest_fitness(
     reference's min_samples_leaf=15."""
     from multiomix_aws_emr_spark.fs.survival_models import SurvivalForest
 
-    if x.ndim != 2 or x.shape[1] == 0:
-        return WORST_FITNESS
-    fold_of = deterministic_folds(sample_ids, folds, seed)
-    scores = []
-    for f in range(folds):
-        train, test = fold_of != f, fold_of == f
-        # a forest needs enough rows to split; tiny folds score as skipped
-        if train.sum() < 2 * min_samples_leaf or test.sum() < 2:
-            continue
+    def score(train, test, xtr, xte):
         forest = SurvivalForest(
             n_estimators=n_estimators,
             min_samples_leaf=min_samples_leaf,
             random_state=seed,
-        ).fit(x[train].astype(float), time[train], event[train])
-        risk = forest.predict_risk(x[test].astype(float))
-        scores.append(concordance_index(risk, time[test], event[test]))
-    if not scores:
-        return WORST_FITNESS
-    return float(np.mean(scores))
+        ).fit(xtr, time[train], event[train])
+        return concordance_index(forest.predict_risk(xte), time[test], event[test])
+
+    # a forest needs enough rows to split; tiny folds score as skipped
+    return cv_mean_score(
+        x, time, event, sample_ids, score, folds=folds, seed=seed,
+        min_train=2 * min_samples_leaf, standardize=False,
+    )
 
 
 def _kmeans_deterministic(
@@ -422,22 +425,11 @@ def cv_clustering_logrank_fitness(
     """
     if scoring not in ("logrank", "concordance_index", "log_likelihood"):
         raise ValueError(f"unknown clustering scoring method: {scoring!r}")
-    worst = NEG_INF_FITNESS if scoring == "log_likelihood" else WORST_FITNESS
-    if x.ndim != 2 or x.shape[1] == 0:
-        return worst
     if algorithm not in ("kmeans", "spectral"):
         raise ValueError(f"unknown clustering algorithm: {algorithm!r}")
-    fold_of = deterministic_folds(sample_ids, folds, seed)
-    scores = []
-    for f in range(folds):
-        train, test = fold_of != f, fold_of == f
-        if train.sum() < n_clusters or test.sum() < 2:
-            continue
-        xtr, xte = x[train].astype(float), x[test].astype(float)
-        mu, sigma = xtr.mean(axis=0), xtr.std(axis=0)
-        sigma[sigma == 0] = 1.0
-        xtr = (xtr - mu) / sigma
-        xte = (xte - mu) / sigma
+    from multiomix_aws_emr_spark.fs.survival_models import cox_ph_fit
+
+    def score(train, test, xtr, xte):
         if algorithm == "spectral":
             lab_tr = _spectral_labels(xtr, sample_ids[train], n_clusters)
             nn = ((xte[:, None, :] - xtr[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
@@ -446,24 +438,20 @@ def cv_clustering_logrank_fitness(
             cent = _kmeans_deterministic(xtr, sample_ids[train], n_clusters)
             d = ((xte[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             lab = d.argmin(axis=1)
+        t, e = time[test], event[test]
         if scoring == "logrank":
-            chi2 = logrank_chi2(lab, time[test], event[test])
-            scores.append(chi2 / (chi2 + 1.0))
-        else:
-            # the reference's shape: the cluster label is the ONE numeric
-            # covariate of a Cox PH fit+scored on the same clustered rows
-            from multiomix_aws_emr_spark.fs.survival_models import cox_ph_fit
+            chi2 = logrank_chi2(lab, t, e)
+            return chi2 / (chi2 + 1.0)
+        # the reference's shape: the cluster label is the ONE numeric
+        # covariate of a Cox PH fit+scored on the same clustered rows
+        xg = lab.astype(np.float64)[:, None]
+        beta = cox_ph_fit(xg, t, e)
+        if scoring == "concordance_index":
+            return concordance_index((xg @ beta).ravel(), t, e)
+        return _cox_partial_loglik_mean(beta, xg, t, e)
 
-            xg = lab.astype(np.float64)[:, None]
-            beta = cox_ph_fit(xg, time[test], event[test])
-            if scoring == "concordance_index":
-                scores.append(
-                    concordance_index((xg @ beta).ravel(), time[test], event[test])
-                )
-            else:
-                scores.append(
-                    _cox_partial_loglik_mean(beta, xg, time[test], event[test])
-                )
-    if not scores:
-        return worst
-    return float(np.mean(scores))
+    return cv_mean_score(
+        x, time, event, sample_ids, score, folds=folds, seed=seed,
+        min_train=n_clusters,
+        worst=NEG_INF_FITNESS if scoring == "log_likelihood" else WORST_FITNESS,
+    )

@@ -21,13 +21,11 @@ from __future__ import annotations
 
 import multiprocessing as mp
 import queue as _queue
-from typing import Callable, Optional
+from typing import Optional
 
 import numpy as np
 
-from multiomix_aws_emr_spark.fs.fitness import WORST_FITNESS
-
-FitnessFn = Callable[[np.ndarray, np.ndarray, np.ndarray, np.ndarray], float]
+from multiomix_aws_emr_spark.fs.fitness import WORST_FITNESS, FitnessFn
 
 
 def _child(fn: FitnessFn, args: tuple, q: mp.Queue) -> None:

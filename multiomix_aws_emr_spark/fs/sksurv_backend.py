@@ -8,11 +8,13 @@ and ``RandomSurvivalForest(n_estimators=..., min_samples_split=10,
 min_samples_leaf=15, max_features="sqrt", random_state=...)``, scored as
 mean test C-index across CV folds (`:114-135`, ``cross_validate`` there).
 
-Differences kept deliberate and documented: folds come from this
-engine's deterministic ``crc32(sample_id) % k`` assignment rather than
-sklearn's index-order KFold, so fitness is invariant to row order and
-partitioning (SURVEY.md §4.2.2); scoring calls ``estimator.score``,
-which for sksurv estimators IS Harrell's C-index.
+Differences kept deliberate and documented: the fold loop is the
+engine's shared :func:`~multiomix_aws_emr_spark.fs.fitness.cv_mean_score`,
+whose folds come from the deterministic ``crc32(sample_id) % k``
+assignment rather than sklearn's index-order KFold, so fitness is
+invariant to row order and partitioning (SURVEY.md §4.2.2); scoring
+calls ``estimator.score``, which for sksurv estimators IS Harrell's
+C-index.
 
 Import this module only behind :func:`available` — it raises ImportError
 otherwise (the engine's baked environment does not carry sksurv).
@@ -22,10 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from multiomix_aws_emr_spark.fs.fitness import (
-    WORST_FITNESS,
-    deterministic_folds,
-)
+from multiomix_aws_emr_spark.fs.fitness import cv_mean_score
 
 
 def available() -> bool:
@@ -73,8 +72,9 @@ def make_estimator(model: str, *, random_state: int = 42, **params):
 
 
 def make_fitness(model: str, *, folds: int = 3, seed: int = 42, **params):
-    """A ``FitnessFn`` evaluating the sksurv estimator with deterministic
-    k-fold CV; mean test C-index, the reference's
+    """A ``FitnessFn`` evaluating the sksurv estimator through
+    :func:`~multiomix_aws_emr_spark.fs.fitness.cv_mean_score` on raw
+    (unstandardized) features; mean test C-index, the reference's
     ``cv_res['test_score'].mean()`` (`scripts/main.py:130`)."""
 
     def fitness(
@@ -83,21 +83,14 @@ def make_fitness(model: str, *, folds: int = 3, seed: int = 42, **params):
         event: np.ndarray,
         sample_ids: np.ndarray,
     ) -> float:
-        if x.ndim != 2 or x.shape[1] == 0:
-            return WORST_FITNESS
-        fold_of = deterministic_folds(sample_ids, folds, seed)
-        scores = []
-        for f in range(folds):
-            train, test = fold_of != f, fold_of == f
-            if train.sum() < 2 or test.sum() < 2:
-                continue
+        def score(train, test, xtr, xte):
             est = make_estimator(model, random_state=seed, **params)
-            est.fit(x[train], _structured_y(time[train], event[train]))
-            scores.append(
-                float(est.score(x[test], _structured_y(time[test], event[test])))
-            )
-        if not scores:
-            return WORST_FITNESS
-        return float(np.mean(scores))
+            est.fit(xtr, _structured_y(time[train], event[train]))
+            return float(est.score(xte, _structured_y(time[test], event[test])))
+
+        return cv_mean_score(
+            x, time, event, sample_ids, score,
+            folds=folds, seed=seed, standardize=False,
+        )
 
     return fitness

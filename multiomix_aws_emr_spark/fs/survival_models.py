@@ -22,10 +22,13 @@ Harrell's C-index):
   (`scripts/main.py:30-35`: min_samples_split=10, min_samples_leaf=15,
   max_features="sqrt").
 
-When scikit-survival IS importable, :mod:`multiomix_aws_emr_spark.fs
-.sksurv_backend` wires the real library through the same ``FitnessFn``
-seam and takes precedence (reference parity); these implementations keep
-``--model svm|rf`` runnable everywhere.
+These are model code only: ``cv_rank_svm_fitness`` and
+``cv_survival_forest_fitness`` score them through the shared CV loop,
+:func:`multiomix_aws_emr_spark.fs.fitness.cv_mean_score`. When
+scikit-survival IS importable, :mod:`multiomix_aws_emr_spark.fs
+.sksurv_backend` wires the real library through the same loop and
+``FitnessFn`` seam and takes precedence (reference parity); these
+implementations keep ``--model svm|rf`` runnable everywhere.
 """
 
 from __future__ import annotations

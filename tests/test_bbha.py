@@ -125,7 +125,7 @@ def test_improved_variant_rejects_bad_coeffs(spark, dataset):
 
 
 def test_blind_search_one_pass(spark, dataset):
-    from multiomix_aws_emr_spark.fs.blind import run_blind_search
+    from multiomix_aws_emr_spark.fs.bbha import run_blind_search
 
     x, time_col, event_col = dataset
     r1 = run_blind_search(
@@ -147,3 +147,26 @@ def test_blind_search_one_pass(spark, dataset):
     assert r1.best_fitness == best["fitness"]
     # with informative features planted, random search still beats chance
     assert r1.best_fitness > 0.5
+    # exact values, recorded at the commit before blind search became a
+    # one-iteration run_bbha (it had its own evaluation loop then)
+    assert r1.best_fitness == 1.0
+    assert r1.selected_features == [
+        "GENE_0000", "GENE_0001", "GENE_0002", "GENE_0003", "GENE_0004",
+        "GENE_0006",
+    ]
+
+
+def test_blind_search_picks_fewest_features_when_every_star_is_worst(spark, dataset):
+    # every subset scores the NEG_INF sentinel: the black hole is still the
+    # arg-best under the fewer-features tie-break, not an unset index
+    from multiomix_aws_emr_spark.fs.bbha import run_blind_search
+
+    x, time_col, event_col = dataset
+    r = run_blind_search(
+        spark, x, time_col, event_col, n_subsets=5, random_state=42,
+        fitness_fn=lambda *a: float("-inf"), worst_fitness=float("-inf"),
+    )
+    # star widths are [7, 2, 7, 6, 8]: star 1 (seed 42 * 2) is the best
+    assert r.best_fitness == float("-inf")
+    assert (r.best_mask == random_mask(10, np.random.RandomState(84))).all()
+    assert len(r.selected_features) == 2

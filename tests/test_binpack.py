@@ -124,74 +124,3 @@ def test_bbha_auto_cost_model_engages_after_first_iteration(spark):
     assert [h["fitness"] for h in r_auto.history] == [
         h["fitness"] for h in r_onebin.history
     ]
-
-
-def test_cost_model_per_kernel_curves_recovered():
-    """R30 parity with the reference's categorical features
-    (`scripts/model_parameters.py:12-23`): two kernels whose true curves
-    differ by 10x train separate per-(kernel, optimizer) curves; each is
-    recovered within tolerance, and a never-seen kernel falls back to the
-    pooled curve (a finite positive prediction)."""
-    from multiomix_aws_emr_spark.fs.costmodel import RuntimeCostModel
-
-    def t_linear(f, s):
-        return 0.001 * (1 + f * f) + 0.0001 * s
-
-    def t_rbf(f, s):
-        return 0.01 * (1 + f * f) + 0.001 * s
-
-    model = RuntimeCostModel()
-    for f in (2, 5, 9, 14, 20, 27, 33, 40):
-        model.observe(f, t_linear(f, 100), n_samples=100,
-                      kernel="linear", optimizer="avltree")
-        model.observe(f, t_rbf(f, 100), n_samples=100,
-                      kernel="rbf", optimizer="rbtree")
-    for f in (10, 25, 35):
-        p_lin = model.predict(f, n_samples=100, kernel="linear",
-                              optimizer="avltree")
-        p_rbf = model.predict(f, n_samples=100, kernel="rbf",
-                              optimizer="rbtree")
-        assert abs(p_lin - t_linear(f, 100)) < 0.05 * t_rbf(f, 100)
-        assert abs(p_rbf - t_rbf(f, 100)) < 0.05 * t_rbf(f, 100)
-        # the 10x family gap must survive prediction
-        assert p_rbf > 5 * p_lin
-    # unseen group -> pooled fallback, still positive and finite
-    p_unseen = model.predict(20, n_samples=100, kernel="poly",
-                             optimizer="avltree")
-    assert p_unseen > 0
-
-
-def test_plan_star_bins_with_model_context_beats_sequential():
-    """Greedy packing steered by the kernel-aware model still beats the
-    sequential partitioner on makespan when the experiment runs the
-    expensive kernel."""
-    import numpy as np
-
-    from multiomix_aws_emr_spark.fs.costmodel import (
-        RuntimeCostModel,
-        plan_star_bins,
-    )
-    from multiomix_aws_emr_spark.plans.binpack import bin_loads
-
-    model = RuntimeCostModel()
-    for f in (2, 5, 9, 14, 20, 27, 33, 40):
-        model.observe(f, 0.001 * f * f, n_samples=50, kernel="linear",
-                      optimizer="avltree")
-        model.observe(f, 0.01 * f * f, n_samples=50, kernel="rbf",
-                      optimizer="avltree")
-
-    rng = np.random.RandomState(3)
-    widths = [2, 3, 4, 5, 8, 10, 15, 20, 30, 40, 40, 40]
-    masks = [
-        np.array([1] * w + [0] * (40 - w), dtype=bool)[rng.permutation(40)]
-        for w in widths
-    ]
-    ctx = {"n_samples": 50, "kernel": "rbf", "optimizer": "avltree"}
-    greedy_bins, pred = plan_star_bins(
-        masks, 4, cost_model=model, model_context=ctx
-    )
-    seq_bins, _ = plan_star_bins(masks, 4, cost_model=None)
-    true_costs = {i: 0.01 * w * w for i, w in enumerate(widths)}
-    g = bin_loads(true_costs, greedy_bins, 4)
-    s = bin_loads(true_costs, seq_bins, 4)
-    assert max(g) < max(s)

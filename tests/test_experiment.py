@@ -1,7 +1,6 @@
 """End-to-end experiment runner: TSV ingest -> BBHA -> artifacts
 (the `scripts/main.py` + `core.py:80-291` slice, SURVEY.md §7.3)."""
 
-import argparse
 import json
 import os
 
@@ -41,19 +40,22 @@ def tsvs(tmp_path_factory):
 
 def _args(tsvs, results_dir, **over):
     mol, clin = tsvs
-    base = dict(
-        app_name="test-exp",
-        molecules_dataset=mol,
-        clinical_dataset=clin,
-        results_dir=str(results_dir),
-        model="cox",
-        n_stars=6,
-        bbha_iterations=3,
-        cv_folds=4,
-        random_state=42,
+    args = build_arg_parser().parse_args(
+        [
+            "--app-name", "test-exp",
+            "--molecules-dataset", mol,
+            "--clinical-dataset", clin,
+            "--results-dir", str(results_dir),
+        ]
     )
-    base.update(over)
-    return argparse.Namespace(**base)
+    over = {
+        "n_stars": 6, "bbha_iterations": 3, "cv_folds": 4, "random_state": 42,
+        **over,
+    }
+    for name, value in over.items():
+        assert hasattr(args, name), name  # a parser option, not a typo
+        setattr(args, name, value)
+    return args
 
 
 def test_experiment_writes_all_artifacts(spark, tsvs, tmp_path):
@@ -93,6 +95,31 @@ def test_experiment_is_seed_deterministic(spark, tsvs, tmp_path):
     r2 = json.load(open(s2["result_json"]))
     assert r1["features"] == r2["features"]
     assert r1["best_metric"] == r2["best_metric"]
+
+
+def test_blind_search_runs_end_to_end(spark, tsvs, tmp_path):
+    # --algorithm blind_search: one pass of n_stars random subsets plus
+    # the all-features baseline, written in the same artifact shapes
+    out = tmp_path / "blind"
+    summary = run_experiment(spark, _args(tsvs, out, algorithm="blind_search"))
+    res = json.load(open(summary["result_json"]))
+    assert set(res) == {
+        "features",
+        "best_metric",
+        "n_iterations",
+        "execution_time",
+        "best_metric_with_all_features",
+    }
+    assert res["n_iterations"] == 1
+    metrics = spark.read.parquet(str(out / "metrics.parquet"))
+    coords = [(r.iteration, r.star_id) for r in metrics.collect()]
+    assert sorted(coords) == [(-1, -1)] + [(0, s) for s in range(6)]
+
+    from multiomix_aws_emr_spark.sources.sinks import read_model_artifact
+
+    model = read_model_artifact(summary["model_path"])
+    assert model["algorithm"] == "blind_search"
+    assert model["features"] == res["features"].split(" | ")
 
 
 def test_svm_model_runs_end_to_end(spark, tsvs, tmp_path):

@@ -1,3 +1,5 @@
+import functools
+
 import numpy as np
 import pytest
 
@@ -397,3 +399,83 @@ def test_cox_partial_loglik_efron_ties():
     assert _cox_partial_loglik_mean(beta, x, t_tied, e) > breslow(
         beta, x, t_tied, e
     )
+
+
+# Exact values of every fitness family on one seeded fixture, recorded at
+# the commit before the families shared one CV loop (``cv_mean_score``).
+# Widths: the empty subset, 3 and 8 features.
+_CV_PINS = {
+    "linear_cox": (-1.0, 0.9516212284735582, 0.9389378612878213),
+    "coxph": (-1.0, 0.9499710634570566, 0.9293184159309634),
+    "rank_svm": (-1.0, 0.9502778578467189, 0.862178932856048),
+    "survival_forest": (-1.0, 0.6705584641063971, 0.6824542880828367),
+    "kmeans/logrank": (-1.0, 0.5465239817644566, 0.4108940255732469),
+    "kmeans/concordance_index": (-1.0, 0.6085171753465124, 0.5701934614585359),
+    "kmeans/log_likelihood": (float("-inf"), -1.387389593558903, -1.43303062030282),
+    "spectral/logrank": (-1.0, 0.5071753756167005, 0.5828237791323034),
+    "spectral/concordance_index": (-1.0, 0.6472302477370283, 0.6129726208910667),
+    "spectral/log_likelihood": (
+        float("-inf"), -1.3179553432059192, -1.4024991097574697,
+    ),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_CV_PINS))
+def test_cv_fitness_exact_values(family):
+    from multiomix_aws_emr_spark.fs import fitness as F
+
+    rng = np.random.RandomState(0)
+    n = 60
+    x = rng.normal(size=(n, 8))
+    time = 10 + 2 * x[:, 0] + 2 * x[:, 1] - x[:, 2] + rng.normal(scale=0.5, size=n)
+    event = rng.uniform(size=n) < 0.75
+    ids = np.array([f"S{i}" for i in range(n)])
+    if "/" in family:
+        algorithm, scoring = family.split("/")
+        fn = functools.partial(
+            F.cv_clustering_logrank_fitness, algorithm=algorithm, scoring=scoring
+        )
+    else:
+        fn = getattr(F, f"cv_{family}_fitness")
+    got = tuple(fn(x[:, :w], time, event, ids, seed=3) for w in (0, 3, 8))
+    assert got == _CV_PINS[family]
+
+
+def test_sksurv_fold_loop_without_sksurv(monkeypatch):
+    """``make_fitness``'s fold loop, run with a stub estimator: folds with
+    fewer than 2 test rows are skipped, features reach the estimator
+    unstandardized, the result is the mean fold score, and an empty
+    subset or a data set with no scorable fold gives WORST_FITNESS."""
+    from multiomix_aws_emr_spark.fs import sksurv_backend
+
+    train_sizes = []
+
+    class Stub:
+        def fit(self, x, y):
+            train_sizes.append(len(x))
+            return self
+
+        def score(self, x, y):
+            return float(x[:, 0].sum())  # raw test-row values
+
+    monkeypatch.setattr(sksurv_backend, "make_estimator", lambda model, **kw: Stub())
+    monkeypatch.setattr(sksurv_backend, "_structured_y", lambda time, event: time)
+
+    cand = np.array([f"S{i}" for i in range(60)])
+    fold_of = deterministic_folds(cand, 3, 0)
+    # fold 0 gets 1 row (skipped), fold 1 rows 1..5, fold 2 rows 6..11
+    ids = np.concatenate(
+        [cand[fold_of == 0][:1], cand[fold_of == 1][:5], cand[fold_of == 2][:6]]
+    )
+    x = 100.0 + np.arange(24.0).reshape(12, 2)  # column 0: 100 + 2i
+    time, event = np.arange(12.0) + 1, np.ones(12, bool)
+    fit = sksurv_backend.make_fitness("svm", folds=3, seed=0)
+
+    # (sum of rows 1..5 = 530, rows 6..11 = 702) / 2
+    assert fit(x, time, event, ids) == 616.0
+    assert train_sizes == [7, 6]
+    assert fit(x[:, :0], time, event, ids) == WORST_FITNESS
+    # every row in fold 1: no fold has both 2 train and 2 test rows
+    ones = cand[fold_of == 1][:3]
+    assert fit(x[:3], time[:3], event[:3], ones) == WORST_FITNESS
+    assert train_sizes == [7, 6]
