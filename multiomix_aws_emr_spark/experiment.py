@@ -278,7 +278,6 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     )
     from multiomix_aws_emr_spark.sources.survival import (
         clean_wide,
-        long_to_wide,
         read_clinical_tsv,
         read_molecules_tsv,
     )
@@ -286,17 +285,17 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     t0 = _time.perf_counter()
     fitness, worst_fitness = _model_fitness(args)
 
-    molecules = read_molecules_tsv(spark, args.molecules_dataset)
-    wide = clean_wide(long_to_wide(molecules))
+    # The cleaned molecules matrix is the driver frame the metaheuristic
+    # broadcasts (the reference's object, core.py:167-169); clinical joins
+    # it on sample_id (inner), in sample order. reindex raises on a
+    # repeated clinical sample id rather than misaligning time/event.
+    x = clean_wide(read_molecules_tsv(spark, args.molecules_dataset))
     clinical = read_clinical_tsv(spark, args.clinical_dataset)
-
-    # The cleaned molecules matrix joins clinical on sample_id, then lands
-    # on the driver as the bounded pandas frame the metaheuristic needs
-    # (the reference broadcasts exactly this object, core.py:167-169).
-    joined = wide.join(clinical, "sample_id", "inner")
-    pdf = joined.toPandas().set_index("sample_id").sort_index()
-    time_col = pdf.pop("time").to_numpy(dtype=np.float64)
-    event_col = pdf.pop("event").to_numpy(dtype=bool)
+    ids = x.index.intersection(clinical.index).sort_values()
+    pdf = x.loc[ids].rename_axis("sample_id")
+    clinical = clinical.reindex(ids)
+    time_col = clinical["time"].to_numpy(dtype=np.float64)
+    event_col = clinical["event"].to_numpy(dtype=bool)
 
     if args.algorithm == "blind_search":
         result = bbha.run_blind_search(

@@ -97,6 +97,15 @@ def test_experiment_is_seed_deterministic(spark, tsvs, tmp_path):
     assert r1["best_metric"] == r2["best_metric"]
 
 
+def test_repeated_clinical_sample_id_rejected(spark, tsvs, tmp_path):
+    mol, clin = tsvs
+    header, first, *rest = open(clin).read().splitlines()
+    dup = tmp_path / "clinical.tsv"
+    dup.write_text("\n".join([header, first, *rest, first]) + "\n")
+    with pytest.raises(ValueError, match="duplicate labels"):
+        run_experiment(spark, _args((mol, str(dup)), tmp_path / "out"))
+
+
 def test_blind_search_runs_end_to_end(spark, tsvs, tmp_path):
     # --algorithm blind_search: one pass of n_stars random subsets plus
     # the all-features baseline, written in the same artifact shapes

@@ -57,11 +57,12 @@ def _pandas_reference_clean(mol: pd.DataFrame) -> pd.DataFrame:
 
 def test_molecules_roundtrip_and_clean(spark, fixtures):
     mol_path, _, mol, _ = fixtures
-    long = read_molecules_tsv(spark, mol_path)
-    assert long.columns == ["sample_id", "feature", "value"]
+    raw = read_molecules_tsv(spark, mol_path)
+    # the file's transpose: samples x features, in file order
+    assert list(raw.index) == list(mol.columns)
+    assert list(raw.columns) == list(mol.index)
 
-    wide = long_to_wide(long)
-    cleaned = clean_wide(wide).toPandas().set_index("sample_id").sort_index()
+    cleaned = clean_wide(raw).sort_index()
     cleaned = cleaned[sorted(cleaned.columns)]
 
     expected = _pandas_reference_clean(mol).sort_index()
@@ -76,10 +77,14 @@ def test_molecules_roundtrip_and_clean(spark, fixtures):
 
 def test_wide_long_roundtrip_lossless(spark, fixtures):
     mol_path, _, _, _ = fixtures
-    long = read_molecules_tsv(spark, mol_path)
-    wide = long_to_wide(clean_wide(long_to_wide(long)) .unpivot(
-        ids=["sample_id"], values=None,
-        variableColumnName="feature", valueColumnName="value"))
+    cleaned = clean_wide(read_molecules_tsv(spark, mol_path))
+    long = spark.createDataFrame(
+        cleaned.rename_axis(index="sample_id", columns="feature")
+        .stack()
+        .rename("value")
+        .reset_index()
+    )
+    wide = long_to_wide(long)
     # melt -> pivot -> melt -> pivot must be stable
     again = long_to_wide(wide_to_long(wide))
     a = wide.toPandas().set_index("sample_id").sort_index()
@@ -89,7 +94,73 @@ def test_wide_long_roundtrip_lossless(spark, fixtures):
 
 def test_clinical_reader(spark, fixtures):
     _, clin_path, _, clin = fixtures
-    out = read_clinical_tsv(spark, clin_path).toPandas().set_index("sample_id")
+    out = read_clinical_tsv(spark, clin_path)
     assert out["event"].dtype == bool
     assert out["time"].dtype == np.float64
     assert (out.sort_index()["time"] == clin.sort_index()["time"]).all()
+
+
+def _write_molecules(path, mat, features, samples):
+    mol = pd.DataFrame(mat, index=features, columns=samples)
+    mol.index.name = "feature_id"
+    mol.to_csv(path, sep="\t")
+    return mol
+
+
+def test_wide_input_at_paper_shape(spark, tmp_path):
+    """More features than `spark.sql.pivotMaxValues` (10,000), stored in
+    shuffled order: R3 drops the NaN column, R4 drops the row with an Inf
+    in a kept column and keeps the row whose only Inf sits in the dropped
+    column, and the columns come back in sorted feature-id order."""
+    rng = np.random.RandomState(3)
+    n_features, n_samples = 10_050, 20
+    features = [f"GENE_{i:05d}" for i in range(n_features)]
+    samples = [f"S{i:02d}" for i in range(n_samples)]
+    mat = rng.normal(size=(n_features, n_samples)).round(4)
+    mat[9_000, 4] = np.nan  # GENE_09000 dropped
+    mat[10_049, 11] = np.inf  # S11 dropped
+    mat[9_000, 15] = -np.inf  # S15 kept: its Inf is in GENE_09000
+    order = rng.permutation(n_features)
+    path = str(tmp_path / "wide.tsv")
+    mol = _write_molecules(path, mat[order], np.array(features)[order], samples)
+
+    cleaned = clean_wide(read_molecules_tsv(spark, path))
+    assert "GENE_09000" not in cleaned.columns
+    assert "S11" not in cleaned.index and "S15" in cleaned.index
+    assert list(cleaned.columns) == [f for f in features if f != "GENE_09000"]
+    expected = _pandas_reference_clean(mol)
+    pd.testing.assert_frame_equal(
+        cleaned.sort_index(), expected[sorted(expected.columns)].sort_index(),
+        check_names=False, check_exact=False, rtol=1e-9,
+    )
+
+
+def test_ingest_job_count_does_not_grow_with_width(spark, fixtures, tmp_path):
+    _, clin_path, _, clin = fixtures
+    rng = np.random.RandomState(5)
+    samples = list(clin.index)
+    counts = []
+    for n_features in (120, 10_050):
+        features = [f"GENE_{i:05d}" for i in range(n_features)]
+        path = str(tmp_path / f"mol{n_features}.tsv")
+        _write_molecules(
+            path, rng.normal(size=(n_features, len(samples))), features, samples
+        )
+        group = f"ingest-{n_features}"
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "survival ingest")
+        try:
+            clean_wide(read_molecules_tsv(spark, path))
+            read_clinical_tsv(spark, clin_path)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts[0] == counts[1] <= 4, counts
+
+
+def test_duplicate_feature_ids_rejected(spark, tmp_path):
+    features = ["GENE_A", "GENE_B", "GENE_A", "GENE_C", "GENE_C"]
+    path = str(tmp_path / "dup.tsv")
+    _write_molecules(path, np.ones((5, 3)), features, ["S0", "S1", "S2"])
+    with pytest.raises(ValueError, match=r"duplicate feature ids \['GENE_A', 'GENE_C'\]"):
+        read_molecules_tsv(spark, path)
