@@ -5,9 +5,14 @@ Re-founds the reference's core compute job
 
 - star population: a small driver-side list of (star_id, mask) pairs (D3);
   the reference's `sc.parallelize` + pinned `partitionBy` + `mapPartitions`
-  (`metaheuristics.py:248,297-299`, R7/R8/R9) becomes
-  ``createDataFrame`` + a planned ``bin_id`` column +
-  ``groupBy('bin_id').applyInPandas`` (Arrow-vectorized, SURVEY.md §4.2);
+  (`metaheuristics.py:248,297-299`, R7/R8/R9) becomes a planned bin per
+  star, grouped on the driver, and one ``mapInPandas`` job over
+  ``spark.range(k)`` in ``k`` partitions: one task per non-empty bin, no
+  exchange, so the bins really decide placement (a ``groupBy('bin_id')``
+  shuffle of KB-sized star rows is coalesced by AQE into one task);
+- the all-features baseline (`scripts/core.py:171-179`, R34) is one more
+  row of iteration 0's pass, star -1, so a run launches one evaluation
+  job per iteration;
 - the molecules matrix ships once per executor via ``sc.broadcast``
   (`scripts/core.py:167-169`, R12/P1 — unchanged, it is the right tool);
 - per-iteration driver loop: arg-best black-hole selection with the
@@ -88,7 +93,8 @@ class BBHAResult:
     execution_time: float
     history: list[dict] = field(default_factory=list)
     #: R34 (`scripts/core.py:171-179`): CV fitness of the all-features
-    #: mask, evaluated once before the search as the comparison baseline.
+    #: mask, evaluated once in iteration 0's pass as the comparison
+    #: baseline.
     baseline_fitness: Optional[float] = None
 
     def history_df(self, spark: SparkSession) -> DataFrame:
@@ -152,8 +158,8 @@ def _payload_handle(sc, payload: dict, use_broadcast: bool):
 
 
 def _make_evaluator(bc, fitness_fn: FitnessFn, worst_fitness: float = WORST_FITNESS):
-    """Grouped-map evaluator: one Arrow batch per bin, one fitness call per
-    star in the bin (the reference's mapPartitions body,
+    """Bin evaluator: one ``(star_id, mask)`` frame per bin, one fitness
+    call per star in the bin (the reference's mapPartitions body,
     `metaheuristics.py:214-222` + zero-feature guard `core.py:52-77`).
 
     ``worst_fitness`` is the zero-feature sentinel; callers whose fitness
@@ -200,12 +206,34 @@ _EVAL_SCHEMA = (
 
 
 def _evaluate(spark: SparkSession, evaluator, iteration: int, rows: list) -> list[dict]:
-    """One grouped-Arrow pass over ``(star_id, bin_id, mask)`` rows: one
-    Spark job, one bounded collect (P7). Returns the history rows
+    """One evaluation pass over ``(star_id, bin_id, mask)`` rows: one Spark
+    job with no exchange and one task per non-empty bin, then one bounded
+    collect (P7). The bins are grouped on the driver and ride in the task
+    closure with the bit-packed masks; ``spark.range(k)`` over ``k``
+    partitions gives each task exactly one bin id, so the bins decide
+    placement — the reference's pinned ``partitionBy``
+    (`metaheuristics.py:248,297-300`, R7–R9). Returns the history rows
     (``iteration`` plus the :data:`_EVAL_SCHEMA` fields) sorted by star
     id."""
-    sdf = spark.createDataFrame(rows, schema="star_id int, bin_id int, mask array<int>")
-    res = sdf.groupBy("bin_id").applyInPandas(evaluator, _EVAL_SCHEMA).collect()
+    star_ids = np.array([r[0] for r in rows], dtype=np.int32)
+    packed = np.packbits(np.array([r[2] for r in rows], dtype=bool), axis=1)
+    width = len(rows[0][2])
+    by_bin: dict[int, list[int]] = {}
+    for pos, (_, bin_id, _) in enumerate(rows):
+        by_bin.setdefault(bin_id, []).append(pos)
+    bins = list(by_bin.values())
+
+    def run(batches):
+        for batch in batches:
+            for i in batch["id"]:
+                pos = bins[i]
+                masks = np.unpackbits(packed[pos], axis=1, count=width)
+                yield evaluator(
+                    pd.DataFrame({"star_id": star_ids[pos], "mask": list(masks)})
+                )
+
+    k = len(bins)
+    res = spark.range(0, k, 1, k).mapInPandas(run, _EVAL_SCHEMA).collect()
     return [
         {"iteration": iteration, **r.asDict()}
         for r in sorted(res, key=lambda r: r.star_id)
@@ -216,13 +244,13 @@ def evaluate_all_features_baseline(
     spark: SparkSession, evaluator, n_features: int
 ) -> dict:
     """R34 (`scripts/core.py:171-179`): evaluate ``np.ones(n_features)``
-    once before the metaheuristic, through the SAME grouped-Arrow
-    evaluator the search uses (the reference routes it through the same
-    ``compute_cross_validation``), so the baseline is measured under
-    identical CV folds, seeding, and executor placement. One 1-row Spark
-    job; returned as a history-row dict with the reserved coordinates
-    ``iteration=-1, star_id=-1``."""
-    [row] = _evaluate(spark, evaluator, -1, [(-1, 0, [1] * n_features)])
+    through the SAME evaluator the search uses (the reference routes it
+    through the same ``compute_cross_validation``), so the baseline is
+    measured under identical CV folds and seeding. One 1-task Spark job;
+    returned as a history-row dict with the reserved coordinates
+    ``iteration=-1, star_id=-1``. :func:`run_bbha` does not call this: it
+    evaluates the same row inside iteration 0's pass."""
+    [row] = _evaluate(spark, evaluator, -1, [(-1, 0, np.ones(n_features, np.int32))])
     return row
 
 
@@ -262,7 +290,8 @@ def run_bbha(
     (n_features, exec_time) observations of completed iterations and,
     once ready, steers greedy bin-packing — iteration 0 (and any
     constant-width population) falls back to the sequential partitioner
-    (R8), the reference's own no-model behavior.
+    (R8), the reference's own no-model behavior. Each non-empty bin is
+    one task of the iteration's evaluation job.
 
     ``use_load_balancer=False`` (the reference's `--use-load-balancer
     false`, `scripts/parameters.py:91-93`) forces the sequential
@@ -314,9 +343,6 @@ def run_bbha(
     )
     evaluator = _make_evaluator(bc, fitness_fn, worst_fitness)
 
-    # R34: all-features baseline before the search (`core.py:171-179`).
-    baseline = evaluate_all_features_baseline(spark, evaluator, n_features)
-
     # Star initialization: star i from seed random_state * (i + 1)
     # (seed threading shape of metaheuristics.py:524-527).
     masks = [
@@ -327,15 +353,21 @@ def run_bbha(
 
     cost_model = RuntimeCostModel() if use_load_balancer else None
 
-    history: list[dict] = [baseline]
+    history: list[dict] = []
+    baseline: Optional[dict] = None
     bh_idx, bh_fitness = -1, -np.inf
     # improved variant: per-star personal bests (`metaheuristics.py:371-374`)
     best_masks = [m.copy() for m in masks]
     best_fitnesses = np.full(n_stars, -np.inf)
 
     for iteration in range(n_iterations):
+        # R34 (`core.py:171-179`): iteration 0's pass also evaluates the
+        # all-features baseline, as star -1, packed into a bin like a star.
+        stars = list(enumerate(masks))
+        if iteration == 0:
+            stars.insert(0, (-1, np.ones(n_features, dtype=np.int32)))
         bins, _ = plan_star_bins(
-            masks,
+            [m for _, m in stars],
             n_bins,
             cost_fn=cost_fn if use_load_balancer else None,
             cost_model=cost_model,
@@ -344,8 +376,11 @@ def run_bbha(
             spark,
             evaluator,
             iteration,
-            [(i, bins[i], [int(b) for b in masks[i]]) for i in range(n_stars)],
+            [(star_id, bins[k], m) for k, (star_id, m) in enumerate(stars)],
         )
+        if iteration == 0:
+            baseline = {**rows.pop(0), "iteration": -1}
+            history.append(baseline)
         history.extend(rows)
         fitnesses = np.array([r["fitness"] for r in rows])
         if cost_model is not None:
@@ -436,7 +471,7 @@ def run_bbha(
         n_iterations=n_iterations,
         execution_time=_time.perf_counter() - t_start,
         history=history,
-        baseline_fitness=baseline["fitness"],
+        baseline_fitness=None if baseline is None else baseline["fitness"],
     )
 
 

@@ -5,9 +5,10 @@ per-star runtime prediction fed into greedy bin-packing, then PINS
 partitions (`scripts/metaheuristics.py:156-166,277-298`, R30/R31/R8/P2).
 Catalyst has no hook for user-supplied per-row cost (AQE balances by data
 size, not UDF runtime), so this stays a planning step OUTSIDE the
-optimizer: compute a ``bin_id`` column, then execute with
-``groupBy('bin_id').applyInPandas`` — hash placement of bins is acceptable
-because bins are pre-balanced by cost.
+optimizer: the caller groups items by bin on the driver and runs one task
+per bin (``fs.bbha._evaluate``: ``mapInPandas`` over ``spark.range(k)``
+in ``k`` partitions, no exchange for AQE to coalesce), so the packing
+decides real placement.
 """
 
 from __future__ import annotations

@@ -170,3 +170,64 @@ def test_blind_search_picks_fewest_features_when_every_star_is_worst(spark, data
     assert r.best_fitness == float("-inf")
     assert (r.best_mask == random_mask(10, np.random.RandomState(84))).all()
     assert len(r.selected_features) == 2
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` under a job group; return its result and the group's
+    job ids."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _evaluator(dataset):
+    from multiomix_aws_emr_spark.fs.bbha import _ClosureValue, _make_evaluator
+
+    x, time, event = dataset
+    payload = {
+        "values": x.to_numpy(dtype=np.float64),
+        "sample_ids": x.index.to_numpy(),
+        "time": np.asarray(time, dtype=np.float64),
+        "event": np.asarray(event, dtype=bool),
+    }
+    return _make_evaluator(_ClosureValue(payload), cv_linear_cox_fitness)
+
+
+def test_evaluate_pass_is_one_job_with_one_task_per_bin(spark, dataset):
+    # The reference pins each bin to its own partition
+    # (`scripts/metaheuristics.py:248,297-300`): 9 stars over 4 bins run
+    # as one job whose only stage has 4 tasks, not a shuffle that AQE
+    # may coalesce into a single task.
+    from multiomix_aws_emr_spark.fs.bbha import _evaluate
+
+    masks = [random_mask(10, np.random.RandomState(s + 1)) for s in range(9)]
+    rows = [(s, s % 4, m.tolist()) for s, m in enumerate(masks)]
+    out, jobs = _jobs_in_group(
+        spark, "bbha-evaluate-placement",
+        lambda: _evaluate(spark, _evaluator(dataset), 2, rows),
+    )
+    assert [(r["iteration"], r["star_id"]) for r in out] == [(2, s) for s in range(9)]
+    assert [r["n_features"] for r in out] == [int(m.sum()) for m in masks]
+    assert len(jobs) == 1
+    tracker = spark.sparkContext.statusTracker()
+    [stage] = tracker.getJobInfo(jobs[0]).stageIds
+    assert tracker.getStageInfo(stage).numTasks == 4
+
+
+def test_baseline_rides_in_iteration_zero(spark, dataset):
+    # R34's all-features baseline is one more row of iteration 0's pass:
+    # n_iterations evaluation jobs in all, and the (-1, -1) row equals a
+    # standalone baseline evaluation.
+    from multiomix_aws_emr_spark.fs.bbha import evaluate_all_features_baseline
+
+    r, jobs = _jobs_in_group(spark, "bbha-baseline-fold", lambda: _run(spark, dataset))
+    assert len(jobs) == 3
+    alone = evaluate_all_features_baseline(
+        spark, _evaluator(dataset), dataset[0].shape[1]
+    )
+    key = lambda h: (h["iteration"], h["star_id"], h["fitness"], h["n_features"])  # noqa: E731
+    assert key(r.history[0]) == key(alone) == (-1, -1, r.baseline_fitness, 10)

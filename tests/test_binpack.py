@@ -120,7 +120,15 @@ def test_bbha_auto_cost_model_engages_after_first_iteration(spark):
         spark, x, time, event, n_stars=6, n_iterations=3, random_state=5,
         n_bins=1,
     )
-    assert r_auto.best_fitness == r_onebin.best_fitness
+    r_four = run_bbha(
+        spark, x, time, event, n_stars=6, n_iterations=3, random_state=5,
+        n_bins=4,
+    )
+    assert r_auto.best_fitness == r_onebin.best_fitness == r_four.best_fitness
     assert [h["fitness"] for h in r_auto.history] == [
         h["fitness"] for h in r_onebin.history
     ]
+    # bins decide which task runs a star, never what it computes
+    key = lambda h: (h["iteration"], h["star_id"], h["fitness"], h["n_features"])  # noqa: E731
+    assert [key(h) for h in r_four.history] == [key(h) for h in r_onebin.history]
+    assert (r_four.best_mask == r_onebin.best_mask).all()

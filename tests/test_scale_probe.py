@@ -8,6 +8,7 @@ determinism.  relational — consistent key-shifting (every join's fan-out
 preserved exactly, group sizes preserved per copy).  events — each user
 copy replays the identical event sequence.  embeddings — the per-copy
 sign flip is orthogonal: within-copy cosines and norms are preserved.
+survival — seeded inputs are stable and the BBHA job reports its phases.
 """
 
 import math
@@ -286,3 +287,28 @@ def test_core_scaling_speedup_summary_flags_flat_queries():
     # a flat sub-second shape -> both exempt (fixed overhead, not serial
     # bottleneck)
     assert flat == ["b"]
+
+
+# --- survival tier ---------------------------------------------------------
+
+
+def test_survival_tier_smoke(spark, tmp_path):
+    """The survival tier at smoke size: seeded inputs are byte-stable, and
+    one ``run_experiment --model svm`` reports its phases — an ingest of
+    at most 4 jobs and one evaluation job per BBHA iteration."""
+    from tools.scale_probe import probe_survival, write_survival_tsvs
+
+    a = write_survival_tsvs(str(tmp_path / "a"), 3, 40, 30)
+    b = write_survival_tsvs(str(tmp_path / "b"), 3, 40, 30)
+    for pa, pb in zip(a, b):
+        assert open(pa).read() == open(pb).read()
+
+    [rec] = probe_survival(
+        spark, str(tmp_path), shapes=((40, 30),), n_stars=3, n_iterations=2
+    )
+    assert rec["shape"] == "40x30"
+    assert rec["eval_jobs"] == 2
+    assert 1 <= rec["ingest_jobs"] <= 4
+    assert rec["evals"] == 3 * 2 + 1  # plus the all-features baseline
+    assert 0.0 <= rec["best_metric"] <= 1.0
+    assert rec["search_s"] <= rec["wall_s"]

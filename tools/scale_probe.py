@@ -46,8 +46,14 @@ Synthesis per tier (all JVM-side expressions):
   (near-dup structure intact) while vectors from different copies are
   decorrelated — duplicate pairs again grow linearly with volume.
 
+The survival tier is the paper's own job rather than a query set: seeded
+molecules/clinical TSVs at the multi-omics shapes in SURVIVAL_SHAPES, each
+run through ``experiment.run_experiment --model svm`` end to end. It
+reports ingest and search wall, Spark jobs per phase and the summed
+per-star fitness time, one JSON line per shape.
+
 Usage:
-  python tools/scale_probe.py [--tier documents|relational|events|embeddings|all]
+  python tools/scale_probe.py [--tier documents|relational|events|embeddings|survival|all]
                               [--replicas 10] [--src /root/testdata/sf0.1]
                               [--out-root /tmp/scale_probe]
 
@@ -441,9 +447,133 @@ def probe_tier(
     return superlinear
 
 
+#: survival tier: (samples, features) of the generated molecules matrix.
+SURVIVAL_SHAPES = ((300, 2_000), (100, 12_000))
+
+
+def write_survival_tsvs(
+    out_dir: str, seed: int, n_samples: int, n_features: int
+) -> tuple[str, str]:
+    """Seeded survival inputs in the reference's file layout: a molecules
+    TSV stored features x samples (feature id first) and a clinical TSV
+    (sample, event, time). Time falls with the sum of 4 planted features;
+    a quarter of the samples is censored. Returns the two paths."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    x = rng.normal(size=(n_samples, n_features))
+    planted = rng.choice(n_features, 4, replace=False)
+    risk = x[:, planted].sum(axis=1)
+    time_ = 100.0 * np.exp(-0.6 * risk + rng.normal(scale=0.3, size=n_samples))
+    event = (rng.random(n_samples) >= 0.25).astype(int)
+    samples = [f"S{i:04d}" for i in range(n_samples)]
+    os.makedirs(out_dir, exist_ok=True)
+    mol = os.path.join(out_dir, "molecules.tsv")
+    clin = os.path.join(out_dir, "clinical.tsv")
+    pd.DataFrame(
+        np.round(x.T, 6),
+        index=[f"GENE_{j:05d}" for j in range(n_features)],
+        columns=samples,
+    ).to_csv(mol, sep="\t", index_label="feature")
+    pd.DataFrame(
+        {"event": event, "time": np.round(time_, 4)}, index=samples
+    ).to_csv(clin, sep="\t", index_label="sample")
+    return mol, clin
+
+
+def _grouped(spark, module, name: str, group: str, spent: dict):
+    """Replace ``module.name`` with a wrapper that runs each call under
+    Spark job group ``group`` and adds its wall to ``spent[group]``.
+    Returns the undo. ``run_experiment`` resolves these names at call
+    time, so the wrapper sees every call."""
+    fn = getattr(module, name)
+    sc = spark.sparkContext
+
+    def wrapped(*args, **kwargs):
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        t0 = time.perf_counter()
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            spent[group] = spent.get(group, 0.0) + time.perf_counter() - t0
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+
+    setattr(module, name, wrapped)
+    return lambda: setattr(module, name, fn)
+
+
+def probe_survival(
+    spark,
+    out_root: str,
+    shapes=SURVIVAL_SHAPES,
+    n_stars: int = 8,
+    n_iterations: int = 2,
+    seed: int = 1,
+) -> list[dict]:
+    """Run ``run_experiment --model svm`` (3-fold CV) end to end on
+    seeded TSVs at each shape; print and return one record per shape."""
+    import pandas as pd
+
+    from multiomix_aws_emr_spark.experiment import build_arg_parser, run_experiment
+    from multiomix_aws_emr_spark.fs import bbha
+    from multiomix_aws_emr_spark.sources import survival
+
+    tracker = spark.sparkContext.statusTracker()
+    records = []
+    for n_samples, n_features in shapes:
+        shape = f"{n_samples}x{n_features}"
+        mol, clin = write_survival_tsvs(
+            os.path.join(out_root, "survival", shape), seed, n_samples, n_features
+        )
+        results = os.path.join(out_root, "survival", shape, "results")
+        args = build_arg_parser().parse_args(
+            ["--app-name", f"scale-probe-{shape}", "--molecules-dataset", mol,
+             "--clinical-dataset", clin, "--results-dir", results,
+             "--model", "svm", "--n-stars", str(n_stars),
+             "--bbha-iterations", str(n_iterations), "--cv-folds", "3",
+             "--random-state", str(seed)]
+        )
+        groups = {p: f"scale-probe-{shape}-{p}" for p in ("ingest", "search")}
+        spent: dict = {}
+        undo = [
+            _grouped(spark, survival, name, groups["ingest"], spent)
+            for name in ("read_molecules_tsv", "read_clinical_tsv", "clean_wide")
+        ] + [_grouped(spark, bbha, "run_bbha", groups["search"], spent)]
+        t0 = time.perf_counter()
+        try:
+            summary = run_experiment(spark, args)
+        finally:
+            for u in undo:
+                u()
+        wall = time.perf_counter() - t0
+        history = pd.read_parquet(os.path.join(results, "metrics.parquet"))
+        rec = {
+            "tier": "survival",
+            "shape": shape,
+            "stars": n_stars,
+            "iterations": n_iterations,
+            "wall_s": round(wall, 2),
+            "ingest_s": round(spent[groups["ingest"]], 2),
+            "search_s": round(spent[groups["search"]], 2),
+            "fitness_s": round(float(history["exec_time"].sum()), 2),
+            "ingest_jobs": len(tracker.getJobIdsForGroup(groups["ingest"])),
+            "eval_jobs": len(tracker.getJobIdsForGroup(groups["search"])),
+            "evals": len(history),
+            "best_metric": summary["best_metric"],
+            "baseline_metric": summary["baseline_metric"],
+        }
+        print(json.dumps(rec), flush=True)
+        records.append(rec)
+    return records
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--tier", default="all", choices=[*TIER_QUERIES, "all"])
+    ap.add_argument(
+        "--tier", default="all", choices=[*TIER_QUERIES, "survival", "all"]
+    )
     ap.add_argument("--replicas", type=int, default=10)
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--out-root", default="/tmp/scale_probe")
@@ -462,9 +592,12 @@ def main() -> int:
     spark = build_session(app_name="scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    tiers = list(TIER_QUERIES) if args.tier == "all" else [args.tier]
+    tiers = [*TIER_QUERIES, "survival"] if args.tier == "all" else [args.tier]
     superlinear: list[str] = []
     for tier in tiers:
+        if tier == "survival":
+            probe_survival(spark, args.out_root)
+            continue
         superlinear += probe_tier(
             spark, tier, args.src, args.out_root, args.replicas,
             sized=args.sized_partitions,
