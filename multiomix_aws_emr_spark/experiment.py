@@ -273,8 +273,8 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     """Ingest -> clean -> BBHA -> write artifacts. Returns result dict."""
     from multiomix_aws_emr_spark.fs import bbha
     from multiomix_aws_emr_spark.sources.sinks import (
+        write_metrics_parquet,
         write_model_artifact,
-        write_parquet,
     )
     from multiomix_aws_emr_spark.sources.survival import (
         clean_wide,
@@ -342,11 +342,10 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
     result_path = os.path.join(args.results_dir, "result.json")
     with open(result_path, "w") as fh:
         fh.write(result.to_result_json())
-    # tidy per-(iteration, star) metrics (replaces D6)
-    write_parquet(
-        result.history_df(spark),
-        os.path.join(args.results_dir, "metrics.parquet"),
-        partition_by=["iteration"],
+    # tidy per-(iteration, star) metrics (replaces D6), written from the
+    # driver's history rows like the other two artifacts: no Spark job
+    write_metrics_parquet(
+        result.history, os.path.join(args.results_dir, "metrics.parquet")
     )
     # model artifact by path (R25)
     model_path = write_model_artifact(

@@ -14,7 +14,8 @@ Re-founds the reference's core compute job
   row of iteration 0's pass, star -1, so a run launches one evaluation
   job per iteration;
 - the molecules matrix ships once per executor via ``sc.broadcast``
-  (`scripts/core.py:167-169`, R12/P1 — unchanged, it is the right tool);
+  (`scripts/core.py:167-169`, R12/P1 — unchanged, it is the right tool),
+  destroyed when the run ends so a shared session does not keep it;
 - per-iteration driver loop: arg-best black-hole selection with the
   fewer-features tie-break (`metaheuristics.py:647-681`, R14/R15), the
   Euclidean event-horizon test (`:683-694`, R16), the tanh position update
@@ -331,18 +332,6 @@ def run_bbha(
     if n_bins is None:
         n_bins = max(1, sc.defaultParallelism)  # R33 executor discovery analog
 
-    bc = _payload_handle(
-        sc,
-        {
-            "values": x.to_numpy(dtype=np.float64),
-            "sample_ids": x.index.to_numpy(),
-            "time": np.asarray(time_col, dtype=np.float64),
-            "event": np.asarray(event_col, dtype=bool),
-        },
-        use_broadcast,
-    )
-    evaluator = _make_evaluator(bc, fitness_fn, worst_fitness)
-
     # Star initialization: star i from seed random_state * (i + 1)
     # (seed threading shape of metaheuristics.py:524-527).
     masks = [
@@ -360,106 +349,125 @@ def run_bbha(
     best_masks = [m.copy() for m in masks]
     best_fitnesses = np.full(n_stars, -np.inf)
 
-    for iteration in range(n_iterations):
-        # R34 (`core.py:171-179`): iteration 0's pass also evaluates the
-        # all-features baseline, as star -1, packed into a bin like a star.
-        stars = list(enumerate(masks))
-        if iteration == 0:
-            stars.insert(0, (-1, np.ones(n_features, dtype=np.int32)))
-        bins, _ = plan_star_bins(
-            [m for _, m in stars],
-            n_bins,
-            cost_fn=cost_fn if use_load_balancer else None,
-            cost_model=cost_model,
-        )
-        rows = _evaluate(
-            spark,
-            evaluator,
-            iteration,
-            [(star_id, bins[k], m) for k, (star_id, m) in enumerate(stars)],
-        )
-        if iteration == 0:
-            baseline = {**rows.pop(0), "iteration": -1}
-            history.append(baseline)
-        history.extend(rows)
-        fitnesses = np.array([r["fitness"] for r in rows])
-        if cost_model is not None:
-            for r in rows:  # R30: train the width->time curve
-                cost_model.observe(r["n_features"], r["exec_time"])
-        improved = fitnesses > best_fitnesses
-        for i in np.nonzero(improved)[0]:
-            best_fitnesses[i] = fitnesses[i]
-            best_masks[i] = masks[i].copy()
+    bc = _payload_handle(
+        sc,
+        {
+            "values": x.to_numpy(dtype=np.float64),
+            "sample_ids": x.index.to_numpy(),
+            "time": np.asarray(time_col, dtype=np.float64),
+            "event": np.asarray(event_col, dtype=bool),
+        },
+        use_broadcast,
+    )
+    evaluator = _make_evaluator(bc, fitness_fn, worst_fitness)
+    try:
+        for iteration in range(n_iterations):
+            # R34 (`core.py:171-179`): iteration 0's pass also evaluates the
+            # all-features baseline, as star -1, packed into a bin like a star.
+            stars = list(enumerate(masks))
+            if iteration == 0:
+                stars.insert(0, (-1, np.ones(n_features, dtype=np.int32)))
+            bins, _ = plan_star_bins(
+                [m for _, m in stars],
+                n_bins,
+                cost_fn=cost_fn if use_load_balancer else None,
+                cost_model=cost_model,
+            )
+            rows = _evaluate(
+                spark,
+                evaluator,
+                iteration,
+                [(star_id, bins[k], m) for k, (star_id, m) in enumerate(stars)],
+            )
+            if iteration == 0:
+                baseline = {**rows.pop(0), "iteration": -1}
+                history.append(baseline)
+            history.extend(rows)
+            fitnesses = np.array([r["fitness"] for r in rows])
+            if cost_model is not None:
+                for r in rows:  # R30: train the width->time curve
+                    cost_model.observe(r["n_features"], r["exec_time"])
+            improved = fitnesses > best_fitnesses
+            for i in np.nonzero(improved)[0]:
+                best_fitnesses[i] = fitnesses[i]
+                best_masks[i] = masks[i].copy()
 
-        # Black-hole selection: arg-best with fewer-features tie-break
-        # (metaheuristics.py:647-681, R14/R15).
-        order = sorted(
-            range(n_stars),
-            key=lambda i: (-fitnesses[i], int(masks[i].sum()), i),
-        )
-        if bh_idx < 0 or fitnesses[order[0]] > bh_fitness or (
-            fitnesses[order[0]] == bh_fitness
-            and masks[order[0]].sum() < masks[bh_idx].sum()
-        ):
-            bh_idx, bh_fitness = order[0], float(fitnesses[order[0]])
-        bh_mask = masks[bh_idx].copy()
+            # Black-hole selection: arg-best with fewer-features tie-break
+            # (metaheuristics.py:647-681, R14/R15).
+            order = sorted(
+                range(n_stars),
+                key=lambda i: (-fitnesses[i], int(masks[i].sum()), i),
+            )
+            if bh_idx < 0 or fitnesses[order[0]] > bh_fitness or (
+                fitnesses[order[0]] == bh_fitness
+                and masks[order[0]].sum() < masks[bh_idx].sum()
+            ):
+                bh_idx, bh_fitness = order[0], float(fitnesses[order[0]])
+            bh_mask = masks[bh_idx].copy()
 
-        if iteration == n_iterations - 1:
-            break
+            if iteration == n_iterations - 1:
+                break
 
-        if variant == "improved":
-            # Improvement 1: reciprocal event horizon (`:441`).
-            safe = np.clip(fitnesses, 1e-9, None)
-            horizon = (1.0 / max(bh_fitness, 1e-9)) / float((1.0 / safe).sum())
-        else:
-            # Classic radius: f_bh / sum(f) (metaheuristics.py:684, R16);
-            # fitness clipped at 0 so worst sentinels don't flip signs.
-            total = float(np.clip(fitnesses, 0, None).sum()) or 1.0
-            horizon = max(bh_fitness, 0.0) / total
-
-        # Improvement 3 weights: iteration-decaying pull toward the black
-        # hole (d1) and the star's own best (d2) (`:453-456`).
-        w = 1.0 - iteration / n_iterations
-        d1, d2 = coeff_1 + w, coeff_2 + w
-
-        for i in range(n_stars):
-            if i == bh_idx:
-                continue
-            rand = loop_rng.random_sample(n_features)
             if variant == "improved":
-                rand2 = loop_rng.random_sample(n_features)
-                x_new = (
-                    masks[i]
-                    + d1 * rand * (bh_mask - masks[i])
-                    + d2 * rand2 * (best_masks[i] - masks[i])
-                )
+                # Improvement 1: reciprocal event horizon (`:441`).
+                safe = np.clip(fitnesses, 1e-9, None)
+                horizon = (1.0 / max(bh_fitness, 1e-9)) / float((1.0 / safe).sum())
             else:
-                # Position update (metaheuristics.py:696-705, R17):
-                # x_new = x + rand * (bh - x).
-                x_new = masks[i] + rand * (bh_mask - masks[i])
-            if binarization_threshold is None:
-                thr = loop_rng.random_sample(n_features)
-            else:
-                thr = binarization_threshold
-            masks[i] = (np.abs(np.tanh(x_new)) > thr).astype(np.int32)
+                # Classic radius: f_bh / sum(f) (metaheuristics.py:684, R16);
+                # fitness clipped at 0 so worst sentinels don't flip signs.
+                total = float(np.clip(fitnesses, 0, None).sum()) or 1.0
+                horizon = max(bh_fitness, 0.0) / total
 
-            captured = float(np.linalg.norm(bh_mask - masks[i])) < horizon
-            if variant == "improved" and captured:
-                # Improvement 2: capture toggles ONE random dimension
-                # (`:449-451`) instead of re-initializing the star.
-                masks[i][loop_rng.randint(0, n_features)] ^= 1
-                captured = False
-            # Classic event-horizon capture -> seeded re-initialization
-            # (metaheuristics.py:683-694, R16/R18); an all-zero mask
-            # re-randomizes in both variants (the zero subset is invalid
-            # by R13).
-            if captured or masks[i].sum() == 0:
-                masks[i] = random_mask(
-                    n_features,
-                    np.random.RandomState(
-                        random_state * (i + 1) + 1000 * (iteration + 1)
-                    ),
-                )
+            # Improvement 3 weights: iteration-decaying pull toward the black
+            # hole (d1) and the star's own best (d2) (`:453-456`).
+            w = 1.0 - iteration / n_iterations
+            d1, d2 = coeff_1 + w, coeff_2 + w
+
+            for i in range(n_stars):
+                if i == bh_idx:
+                    continue
+                rand = loop_rng.random_sample(n_features)
+                if variant == "improved":
+                    rand2 = loop_rng.random_sample(n_features)
+                    x_new = (
+                        masks[i]
+                        + d1 * rand * (bh_mask - masks[i])
+                        + d2 * rand2 * (best_masks[i] - masks[i])
+                    )
+                else:
+                    # Position update (metaheuristics.py:696-705, R17):
+                    # x_new = x + rand * (bh - x).
+                    x_new = masks[i] + rand * (bh_mask - masks[i])
+                if binarization_threshold is None:
+                    thr = loop_rng.random_sample(n_features)
+                else:
+                    thr = binarization_threshold
+                masks[i] = (np.abs(np.tanh(x_new)) > thr).astype(np.int32)
+
+                captured = float(np.linalg.norm(bh_mask - masks[i])) < horizon
+                if variant == "improved" and captured:
+                    # Improvement 2: capture toggles ONE random dimension
+                    # (`:449-451`) instead of re-initializing the star.
+                    masks[i][loop_rng.randint(0, n_features)] ^= 1
+                    captured = False
+                # Classic event-horizon capture -> seeded re-initialization
+                # (metaheuristics.py:683-694, R16/R18); an all-zero mask
+                # re-randomizes in both variants (the zero subset is invalid
+                # by R13).
+                if captured or masks[i].sum() == 0:
+                    masks[i] = random_mask(
+                        n_features,
+                        np.random.RandomState(
+                            random_state * (i + 1) + 1000 * (iteration + 1)
+                        ),
+                    )
+    finally:
+        # PySpark keeps a broadcast's payload in a file under the
+        # context's temp dir, and the executors keep its blocks, until
+        # it is destroyed: a shared session would hold one molecules
+        # matrix per finished run.
+        if use_broadcast:
+            bc.destroy()
 
     best_mask = masks[bh_idx]
     return BBHAResult(

@@ -2,16 +2,17 @@
 
 Re-founds the reference reader (`scripts/utils.py:26-63`) on Spark:
 
-- the molecules TSV is stored features x samples with the feature id in the
-  first column. It is read as stored: one CSV scan, one flat projection
-  casting every sample column to double, one Arrow transfer, and the
-  reference's own transpose (`utils.py:53`) on the driver, where the matrix
-  is broadcast to the evaluators anyway (`core.py:167-169`). The plan's size
-  depends on the number of samples, never on the number of features: at
-  60x120 this is 4 Spark jobs per experiment instead of the 14 an
-  unpivot/pivot/clean plan took, and it ingests 300x2,000, 100x12,000 and
-  500x20,000 matrices, where that plan hit a ``StackOverflowError`` (a
-  p-way AND filter) or ``spark.sql.pivotMaxValues`` (BASELINE.md).
+- each TSV is fetched as bytes by one Spark ``binaryFile`` job, so every
+  path the session's Hadoop file system can read works (local, ``file://``
+  and whatever ``s3a://``/``hdfs://`` the session is configured for), and
+  parsed on the driver by the reference's own parser, ``pd.read_csv(sep=
+  '\t', index_col=0)`` (`utils.py:53,59-62`). The matrix lands on the
+  driver anyway: it is broadcast to the evaluators (`core.py:167-169`).
+  One job per file at any width, where a CSV scan plus a cast projection
+  took two (BASELINE.md).
+- the molecules TSV is stored features x samples with the feature id in
+  the first column; the reader returns the reference's transpose
+  (`utils.py:53`), samples x features.
 - clinical TSV -> (event boolean, time double) indexed by sample_id
   (`utils.py:59-62`, R2).
 - clean_wide reproduces `clean_dataset` (`utils.py:26-35`) on that frame.
@@ -21,44 +22,102 @@ Re-founds the reference reader (`scripts/utils.py:26-63`) on Spark:
 
 from __future__ import annotations
 
+import io
+import os
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multiomix_aws_emr_spark.session import configure
+#: File suffix -> pandas codec, the suffixes ``pd.read_csv(path)`` infers.
+_COMPRESSION = {".gz": "gzip", ".bz2": "bz2", ".xz": "xz", ".zst": "zstd"}
+#: The value-cell spellings read as NaN; ids are never NA.
+_NA = ["", "NaN", "nan", "NA", "NULL", "null"]
+#: Spark's string -> boolean spellings (case-insensitive).
+_EVENT = {s: True for s in ("1", "t", "true", "y", "yes")} | {
+    s: False for s in ("0", "f", "false", "n", "no")
+}
+
+
+def _read_tsv(
+    spark: SparkSession, path: str, columns: dict[str, type] | None = None
+) -> pd.DataFrame:
+    """Fetch the one file ``path`` names as bytes (one Spark job) and parse
+    it with ``pd.read_csv(sep='\\t', index_col=0)``.
+
+    The first column is the index and stays a verbatim string (``0012``,
+    ``NA``). ``columns`` maps the other columns to read to their dtypes;
+    by default every other column is read as ``float64``. A float cell
+    reads ``inf``/``-inf``/``NaN`` as such and the :data:`_NA` spellings
+    (an empty cell among them) as NaN; any other non-number raises
+    ``ValueError``. Floats are parsed correctly rounded (``round_trip``),
+    as Spark's string cast did: pandas' default parser is one ulp off on
+    about a third of 17-digit values. Compression follows the file suffix
+    (:data:`_COMPRESSION`).
+
+    Spark's ``binaryFile`` source holds a file in one byte array, so a
+    file must be under 2 GiB; a 500 x 20,000 molecules TSV is about 100 MB.
+    """
+    # toArrow, not collect: the bytes cross in one Arrow batch, in about
+    # half collect()'s wall on a 100 MB file
+    files = (
+        spark.read.format("binaryFile").load(path).select("path", "content").toArrow()
+    )
+    if files.num_rows != 1:
+        raise ValueError(
+            f"{path}: expected exactly one file, matched {files.num_rows}"
+        )
+    name = files["path"][0].as_py()
+    content = files["content"][0].as_buffer()
+    compression = _COMPRESSION.get(os.path.splitext(name.lower())[1])
+    id_col, *value_cols = pd.read_csv(
+        io.BytesIO(content), sep="\t", nrows=0, compression=compression
+    ).columns
+    usecols = None if columns is None else [id_col, *columns]
+    if columns is None:
+        columns = dict.fromkeys(value_cols, np.float64)
+    floats = [c for c, t in columns.items() if t is np.float64]
+    return pd.read_csv(
+        io.BytesIO(content),
+        sep="\t",
+        index_col=0,
+        usecols=usecols,
+        compression=compression,
+        dtype={id_col: str, **columns},
+        keep_default_na=False,
+        na_values=dict.fromkeys(floats, _NA),
+        float_precision="round_trip",
+    )
 
 
 def read_molecules_tsv(spark: SparkSession, path: str) -> pd.DataFrame:
     """Molecules TSV (features x samples, `utils.py:53`) -> samples x
-    features doubles. Spark's string->double cast reads the ``inf``/``-inf``
-    /``NaN`` spellings pandas writes, and an empty cell becomes NaN; a
-    typed ``double`` CSV schema would read a line holding ``inf`` as all
-    NULL, turning an R4 row drop into R3 column drops."""
-    configure(spark)
-    raw = spark.read.csv(path, sep="\t", header=True)
-    feature_col, *sample_cols = raw.columns
-    pdf = raw.select(
-        feature_col, *[F.col(c).cast("double") for c in sample_cols]
-    ).toPandas()
-    ids = pdf[feature_col]
-    duplicated = sorted(ids[ids.duplicated()].unique())
+    features doubles, in file order (see :func:`_read_tsv` for the cell
+    spellings, the compression and the 2 GiB limit). Raises ``ValueError``
+    naming repeated feature ids."""
+    x = _read_tsv(spark, path)
+    duplicated = sorted(x.index[x.index.duplicated()].unique())
     if duplicated:
         raise ValueError(f"{path}: duplicate feature ids {duplicated}")
-    return pdf.set_index(feature_col).T
+    return x.T
 
 
 def read_clinical_tsv(spark: SparkSession, path: str) -> pd.DataFrame:
     """Clinical TSV -> (event bool, time double) indexed by sample_id
-    (`utils.py:59-62`: structured array 'event bool, time float')."""
-    configure(spark)
-    raw = spark.read.csv(path, sep="\t", header=True)
-    id_col = raw.columns[0]
-    return raw.select(
-        F.col(id_col).alias("sample_id"),
-        F.col("event").cast("boolean").alias("event"),
-        F.col("time").cast("double").alias("time"),
-    ).toPandas().set_index("sample_id")
+    (`utils.py:59-62`: structured array 'event bool, time float').
+    ``event`` takes Spark's boolean spellings (0/1, true/false, t/f,
+    yes/no, y/n, any case); any other value, an empty cell included,
+    raises ``ValueError``."""
+    raw = _read_tsv(spark, path, {"event": str, "time": np.float64})
+    event = raw["event"].str.strip().str.lower().map(_EVENT)
+    if event.isna().any():
+        bad = sorted(raw["event"][event.isna()].unique())
+        raise ValueError(f"{path}: event values {bad} are not booleans")
+    return pd.DataFrame(
+        {"event": event.astype(bool), "time": raw["time"]},
+        index=raw.index.rename("sample_id"),
+    )
 
 
 def long_to_wide(long: DataFrame, id_col: str = "sample_id") -> DataFrame:

@@ -4,6 +4,7 @@ deterministic, improves on noise, and the result JSON has the reference's
 shape (`scripts/core.py:277-285`)."""
 
 import json
+import os
 
 import numpy as np
 import pandas as pd
@@ -43,6 +44,15 @@ def test_bbha_deterministic(spark, dataset):
     assert (r1.best_mask == r2.best_mask).all()
     assert r1.best_fitness == r2.best_fitness
     assert r1.selected_features == r2.selected_features
+
+
+def test_run_destroys_its_broadcast(spark, dataset):
+    """PySpark keeps a broadcast's payload in a file under the context's
+    temp dir until the broadcast is destroyed; a run leaves none behind."""
+    temp_dir = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp_dir))
+    _run(spark, dataset)
+    assert len(os.listdir(temp_dir)) <= before
 
 
 def test_bbha_finds_signal(spark, dataset):

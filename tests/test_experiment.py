@@ -97,6 +97,41 @@ def test_experiment_is_seed_deterministic(spark, tsvs, tmp_path):
     assert r1["best_metric"] == r2["best_metric"]
 
 
+def test_experiment_job_budget(spark, tsvs, tmp_path):
+    """One byte-fetch job per TSV, one evaluation job per BBHA iteration,
+    and none for the artifacts: 2 + 3 jobs for 3 iterations."""
+    sc = spark.sparkContext
+    group = "experiment-job-budget"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        run_experiment(spark, _args(tsvs, tmp_path / "budget"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 + 3
+
+
+def test_metrics_rerun_replaces_dataset(spark, tsvs, tmp_path):
+    """A second run into the same results dir leaves only its own rows,
+    and Spark and pandas read the same typed rows back."""
+    out = tmp_path / "rerun"
+    run_experiment(spark, _args(tsvs, out))  # 6 stars x 3 iterations
+    run_experiment(spark, _args(tsvs, out, n_stars=4, bbha_iterations=2))
+    path = str(out / "metrics.parquet")
+    metrics = spark.read.parquet(path)
+    assert metrics.schema.simpleString() == (
+        "struct<star_id:int,fitness:double,n_features:int,exec_time:double,"
+        "hostname:string,iteration:int>"
+    )
+    rows = sorted(tuple(r) for r in metrics.collect())
+    assert sorted((r[5], r[0]) for r in rows) == sorted(
+        [(-1, -1)] + [(i, s) for i in range(2) for s in range(4)]
+    )
+    pdf = pd.read_parquet(path)
+    assert sorted(
+        zip(*(pdf[c].tolist() for c in metrics.columns))
+    ) == rows
+
+
 def test_repeated_clinical_sample_id_rejected(spark, tsvs, tmp_path):
     mol, clin = tsvs
     header, first, *rest = open(clin).read().splitlines()

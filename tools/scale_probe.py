@@ -49,8 +49,9 @@ Synthesis per tier (all JVM-side expressions):
 The survival tier is the paper's own job rather than a query set: seeded
 molecules/clinical TSVs at the multi-omics shapes in SURVIVAL_SHAPES, each
 run through ``experiment.run_experiment --model svm`` end to end. It
-reports ingest and search wall, Spark jobs per phase and the summed
-per-star fitness time, one JSON line per shape.
+reports the ingest, search and sink wall (the phases sum to about the
+experiment's wall), Spark jobs per phase and the summed per-star fitness
+time, one JSON line per shape.
 
 Usage:
   python tools/scale_probe.py [--tier documents|relational|events|embeddings|survival|all]
@@ -518,7 +519,7 @@ def probe_survival(
 
     from multiomix_aws_emr_spark.experiment import build_arg_parser, run_experiment
     from multiomix_aws_emr_spark.fs import bbha
-    from multiomix_aws_emr_spark.sources import survival
+    from multiomix_aws_emr_spark.sources import sinks, survival
 
     tracker = spark.sparkContext.statusTracker()
     records = []
@@ -535,12 +536,17 @@ def probe_survival(
              "--bbha-iterations", str(n_iterations), "--cv-folds", "3",
              "--random-state", str(seed)]
         )
-        groups = {p: f"scale-probe-{shape}-{p}" for p in ("ingest", "search")}
-        spent: dict = {}
+        groups = {
+            p: f"scale-probe-{shape}-{p}" for p in ("ingest", "search", "sink")
+        }
+        spent = dict.fromkeys(groups.values(), 0.0)
         undo = [
             _grouped(spark, survival, name, groups["ingest"], spent)
             for name in ("read_molecules_tsv", "read_clinical_tsv", "clean_wide")
-        ] + [_grouped(spark, bbha, "run_bbha", groups["search"], spent)]
+        ] + [_grouped(spark, bbha, "run_bbha", groups["search"], spent)] + [
+            _grouped(spark, sinks, name, groups["sink"], spent)
+            for name in ("write_metrics_parquet", "write_model_artifact")
+        ]
         t0 = time.perf_counter()
         try:
             summary = run_experiment(spark, args)
@@ -557,9 +563,11 @@ def probe_survival(
             "wall_s": round(wall, 2),
             "ingest_s": round(spent[groups["ingest"]], 2),
             "search_s": round(spent[groups["search"]], 2),
+            "sink_s": round(spent[groups["sink"]], 2),
             "fitness_s": round(float(history["exec_time"].sum()), 2),
             "ingest_jobs": len(tracker.getJobIdsForGroup(groups["ingest"])),
             "eval_jobs": len(tracker.getJobIdsForGroup(groups["search"])),
+            "sink_jobs": len(tracker.getJobIdsForGroup(groups["sink"])),
             "evals": len(history),
             "best_metric": summary["best_metric"],
             "baseline_metric": summary["baseline_metric"],
