@@ -210,6 +210,9 @@ def build_arg_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--use-broadcast", type=_tf, default=True, metavar="{true,false}",
+        help="accepted for reference CLI parity but UNUSED: the molecules "
+        "matrix is always broadcast (shipping it in each task's closure "
+        "measured slower, and PySpark broadcasts any command over 1 MB)",
     )
     p.add_argument(
         "--debug", type=_tf, default=False, metavar="{true,false}",
@@ -306,7 +309,6 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
             n_subsets=args.n_stars,
             random_state=args.random_state,
             fitness_fn=fitness,
-            use_broadcast=args.use_broadcast,
             worst_fitness=worst_fitness,
         )
     else:
@@ -323,7 +325,6 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
             coeff_1=args.coeff_1,
             coeff_2=args.coeff_2,
             use_load_balancer=args.use_load_balancer,
-            use_broadcast=args.use_broadcast,
             worst_fitness=worst_fitness,
         )
 

@@ -13,9 +13,17 @@ Re-founds the reference's core compute job
 - the all-features baseline (`scripts/core.py:171-179`, R34) is one more
   row of iteration 0's pass, star -1, so a run launches one evaluation
   job per iteration;
+- each evaluation task ends by releasing its reused Python worker's zip
+  importers (:func:`_release_zip_importers`): on CPython before 3.13 the
+  next task's ``importlib.invalidate_caches()`` would otherwise re-read
+  about 27k zip directory entries, a fixed cost larger than a star's
+  fitness at small shapes;
 - the molecules matrix ships once per executor via ``sc.broadcast``
   (`scripts/core.py:167-169`, R12/P1 — unchanged, it is the right tool),
-  destroyed when the run ends so a shared session does not keep it;
+  destroyed when the run ends so a shared session does not keep it. The
+  reference's ``--use-broadcast false`` (payload in each task closure) is
+  accepted and ignored: PySpark broadcasts any command over 1 MB itself,
+  and the closure path measured no faster;
 - per-iteration driver loop: arg-best black-hole selection with the
   fewer-features tie-break (`metaheuristics.py:647-681`, R14/R15), the
   Euclidean event-horizon test (`:683-694`, R16), the tanh position update
@@ -54,7 +62,9 @@ from __future__ import annotations
 
 import json
 import socket
+import sys
 import time as _time
+import zipimport
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -137,27 +147,6 @@ class BBHAResult:
         return json.dumps(payload)
 
 
-class _ClosureValue:
-    """Duck-typed stand-in for a Broadcast when ``use_broadcast=False``
-    (the reference's `--use-broadcast false` path, `scripts/core.py` /
-    `parameters.py:100-102`): the payload rides inside each task's
-    serialized closure instead of the torrent-distributed broadcast —
-    re-shipped per task rather than once per executor. Kept as an
-    explicit toggle for parity and for A/B-ing distribution cost; the
-    broadcast default is the right choice at any real scale."""
-
-    __slots__ = ("value",)
-
-    def __init__(self, value):
-        self.value = value
-
-
-def _payload_handle(sc, payload: dict, use_broadcast: bool):
-    """The evaluator's data handle: a real Broadcast, or the closure
-    wrapper when broadcast is disabled."""
-    return sc.broadcast(payload) if use_broadcast else _ClosureValue(payload)
-
-
 def _make_evaluator(bc, fitness_fn: FitnessFn, worst_fitness: float = WORST_FITNESS):
     """Bin evaluator: one ``(star_id, mask)`` frame per bin, one fitness
     call per star in the bin (the reference's mapPartitions body,
@@ -206,6 +195,26 @@ _EVAL_SCHEMA = (
 )
 
 
+def _release_zip_importers() -> None:
+    """Drop this process's cached zip importers and zip directories.
+
+    A reused PySpark worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``worker_util.setup_spark_files``). On CPython
+    before 3.13 that makes every ``zipimporter`` in
+    ``sys.path_importer_cache`` re-read its archive's whole directory:
+    ``pyspark.zip`` once per cached subpackage path, the Spark jar, py4j
+    and the shipped package zip, about 27k entries and 0.25 s of every
+    task on a 4-core host. With the importers gone the next task has
+    nothing to re-read; a later import builds a fresh importer and reads
+    its archive once, as CPython 3.13's lazy invalidation does. Loaded
+    modules keep their own loaders, so nothing already imported is
+    affected."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+    zipimport._zip_directory_cache.clear()
+
+
 def _evaluate(spark: SparkSession, evaluator, iteration: int, rows: list) -> list[dict]:
     """One evaluation pass over ``(star_id, bin_id, mask)`` rows: one Spark
     job with no exchange and one task per non-empty bin, then one bounded
@@ -213,7 +222,9 @@ def _evaluate(spark: SparkSession, evaluator, iteration: int, rows: list) -> lis
     closure with the bit-packed masks; ``spark.range(k)`` over ``k``
     partitions gives each task exactly one bin id, so the bins decide
     placement — the reference's pinned ``partitionBy``
-    (`metaheuristics.py:248,297-300`, R7–R9). Returns the history rows
+    (`metaheuristics.py:248,297-300`, R7–R9). Each task ends with
+    :func:`_release_zip_importers`, so the worker's next task starts
+    without re-reading zip directories. Returns the history rows
     (``iteration`` plus the :data:`_EVAL_SCHEMA` fields) sorted by star
     id."""
     star_ids = np.array([r[0] for r in rows], dtype=np.int32)
@@ -232,6 +243,7 @@ def _evaluate(spark: SparkSession, evaluator, iteration: int, rows: list) -> lis
                 yield evaluator(
                     pd.DataFrame({"star_id": star_ids[pos], "mask": list(masks)})
                 )
+        _release_zip_importers()
 
     k = len(bins)
     res = spark.range(0, k, 1, k).mapInPandas(run, _EVAL_SCHEMA).collect()
@@ -279,7 +291,6 @@ def run_bbha(
     coeff_1: float = 2.2,
     coeff_2: float = 0.1,
     use_load_balancer: bool = True,
-    use_broadcast: bool = True,
     worst_fitness: float = WORST_FITNESS,
 ) -> BBHAResult:
     """Run BBHA feature selection over a samples x features pandas frame.
@@ -297,12 +308,8 @@ def run_bbha(
     ``use_load_balancer=False`` (the reference's `--use-load-balancer
     false`, `scripts/parameters.py:91-93`) forces the sequential
     partitioner for every iteration — no cost model is trained and an
-    injected ``cost_fn`` is ignored. ``use_broadcast=False``
-    (`--use-broadcast false`) ships the molecules payload in each task
-    closure instead of a Broadcast (see :class:`_ClosureValue`). Both
-    default to the reference parser's defaults ('true'); results are
-    identical either way — the toggles trade distribution/packing cost
-    only.
+    injected ``cost_fn`` is ignored; it defaults to the reference
+    parser's default ('true') and results are identical either way.
 
     ``variant='improved'`` applies the three modifications of the improved
     BBHA the reference gates behind a flag (`metaheuristics.py:342-465`,
@@ -349,15 +356,13 @@ def run_bbha(
     best_masks = [m.copy() for m in masks]
     best_fitnesses = np.full(n_stars, -np.inf)
 
-    bc = _payload_handle(
-        sc,
+    bc = sc.broadcast(
         {
             "values": x.to_numpy(dtype=np.float64),
             "sample_ids": x.index.to_numpy(),
             "time": np.asarray(time_col, dtype=np.float64),
             "event": np.asarray(event_col, dtype=bool),
-        },
-        use_broadcast,
+        }
     )
     evaluator = _make_evaluator(bc, fitness_fn, worst_fitness)
     try:
@@ -466,8 +471,7 @@ def run_bbha(
         # context's temp dir, and the executors keep its blocks, until
         # it is destroyed: a shared session would hold one molecules
         # matrix per finished run.
-        if use_broadcast:
-            bc.destroy()
+        bc.destroy()
 
     best_mask = masks[bh_idx]
     return BBHAResult(
@@ -493,7 +497,6 @@ def run_blind_search(
     random_state: int = 42,
     n_bins: Optional[int] = None,
     fitness_fn: FitnessFn = cv_linear_cox_fitness,
-    use_broadcast: bool = True,
     worst_fitness: float = WORST_FITNESS,
 ) -> BBHAResult:
     """Blind (random) search: evaluate ``n_subsets`` seeded random feature
@@ -520,6 +523,5 @@ def run_blind_search(
         n_bins=n_bins,
         fitness_fn=fitness_fn,
         use_load_balancer=False,
-        use_broadcast=use_broadcast,
         worst_fitness=worst_fitness,
     )

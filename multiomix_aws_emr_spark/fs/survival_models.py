@@ -343,7 +343,9 @@ def cox_ph_fit(
         # step-halving keeps the ascent monotone on hard subsets: accept a
         # candidate only when its log-likelihood is FINITE and >= current
         # (a non-finite ll_c means the step overflowed — keep halving);
-        # if every halving fails, keep the previous beta unchanged.
+        # if every halving fails, keep the previous beta unchanged. A risk
+        # set whose exp(eta) sum underflowed to 0 would make ll_c
+        # non-finite, so it is rejected before taking log(0).
         accepted = False
         for _ in range(10):
             cand = beta + step
@@ -351,12 +353,13 @@ def cox_ph_fit(
             eta_c -= eta_c.max()
             w_c = np.exp(eta_c)
             d0_c = np.cumsum(w_c)[last_of_block][es]
-            ll_c = float((eta_c[es] - np.log(d0_c)).sum()) - 0.5 * ridge * float(
-                cand @ cand
-            )
-            if np.isfinite(ll_c) and ll_c >= ll:
-                accepted = True
-                break
+            if (d0_c > 0).all():
+                ll_c = float(
+                    (eta_c[es] - np.log(d0_c)).sum()
+                ) - 0.5 * ridge * float(cand @ cand)
+                if np.isfinite(ll_c) and ll_c >= ll:
+                    accepted = True
+                    break
             step = step / 2.0
         if not accepted:
             break

@@ -5,6 +5,7 @@ shape (`scripts/core.py:277-285`)."""
 
 import json
 import os
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -194,8 +195,10 @@ def _jobs_in_group(spark, group, fn):
     return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _evaluator(dataset):
-    from multiomix_aws_emr_spark.fs.bbha import _ClosureValue, _make_evaluator
+def _evaluator(dataset, fitness_fn=cv_linear_cox_fitness):
+    # the payload rides in the task closure; a broadcast is what run_bbha
+    # ships, and both expose it as ``.value``
+    from multiomix_aws_emr_spark.fs.bbha import _make_evaluator
 
     x, time, event = dataset
     payload = {
@@ -204,7 +207,7 @@ def _evaluator(dataset):
         "time": np.asarray(time, dtype=np.float64),
         "event": np.asarray(event, dtype=bool),
     }
-    return _make_evaluator(_ClosureValue(payload), cv_linear_cox_fitness)
+    return _make_evaluator(SimpleNamespace(value=payload), fitness_fn)
 
 
 def test_evaluate_pass_is_one_job_with_one_task_per_bin(spark, dataset):
@@ -241,3 +244,75 @@ def test_baseline_rides_in_iteration_zero(spark, dataset):
     )
     key = lambda h: (h["iteration"], h["star_id"], h["fitness"], h["n_features"])  # noqa: E731
     assert key(r.history[0]) == key(alone) == (-1, -1, r.baseline_fitness, 10)
+
+
+def _zip_importers():
+    import sys
+    import zipimport
+
+    return [
+        p for p, f in sys.path_importer_cache.items()
+        if isinstance(f, zipimport.zipimporter)
+    ]
+
+
+def test_release_zip_importers_rereads_archives_fresh(tmp_path, monkeypatch):
+    # Released importers must not come back from zipimport's directory
+    # cache either: a module added to the archive afterwards is found.
+    import importlib
+    import sys
+    import zipfile
+
+    from multiomix_aws_emr_spark.fs.bbha import _release_zip_importers
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zip_release_a.py", "X = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    assert importlib.import_module("zip_release_a").X == 1
+    assert archive in _zip_importers()
+
+    _release_zip_importers()
+    assert _zip_importers() == []
+
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("zip_release_a.py", "X = 1\n")
+        zf.writestr("zip_release_b.py", "Y = 2\n")
+    try:
+        assert importlib.import_module("zip_release_b").Y == 2
+    finally:
+        sys.modules.pop("zip_release_a", None)
+        sys.modules.pop("zip_release_b", None)
+
+
+def test_evaluation_tasks_leave_no_zip_importers(spark, dataset):
+    # A reused Python worker re-reads every cached zip directory at the
+    # start of each task; after an evaluation task there are none left.
+    from multiomix_aws_emr_spark.fs.bbha import _evaluate
+
+    evaluator = _evaluator(dataset, lambda *a: float(os.getpid()))
+    n = spark.sparkContext.defaultParallelism
+    rows = [(s, s % n, np.ones(10, np.int32)) for s in range(n)]
+    evaluated = {int(r["fitness"]) for r in _evaluate(spark, evaluator, 0, rows)}
+
+    # counted inline: the worker cannot import this test module, so it
+    # cannot unpickle a reference to _zip_importers
+    def report(batches):
+        import sys
+        import zipimport
+
+        for _ in batches:
+            pass
+        zips = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        yield pd.DataFrame({"pid": [os.getpid()], "zips": [zips]})
+
+    seen = (
+        spark.range(0, 2 * n, 1, 2 * n)
+        .mapInPandas(report, "pid long, zips long")
+        .collect()
+    )
+    reused = [r.zips for r in seen if r.pid in evaluated]
+    assert reused and set(reused) == {0}

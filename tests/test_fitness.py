@@ -1,4 +1,5 @@
 import functools
+import warnings
 
 import numpy as np
 import pytest
@@ -349,12 +350,14 @@ def test_log_likelihood_sentinel_is_neg_inf():
 def test_bbha_empty_star_uses_caller_sentinel():
     """`_make_evaluator(worst_fitness=...)` threads the scoring-aware
     sentinel to the R13 zero-feature guard (`scripts/core.py:52-77`)."""
+    from types import SimpleNamespace
+
     import pandas as pd
 
-    from multiomix_aws_emr_spark.fs.bbha import _ClosureValue, _make_evaluator
+    from multiomix_aws_emr_spark.fs.bbha import _make_evaluator
 
-    payload = _ClosureValue(
-        {
+    payload = SimpleNamespace(
+        value={
             "values": np.random.RandomState(0).normal(size=(8, 4)),
             "sample_ids": np.arange(8),
             "time": np.arange(8.0) + 1,
@@ -439,6 +442,25 @@ def test_cv_fitness_exact_values(family):
         fn = getattr(F, f"cv_{family}_fitness")
     got = tuple(fn(x[:, :w], time, event, ids, seed=3) for w in (0, 3, 8))
     assert got == _CV_PINS[family]
+
+
+@pytest.mark.parametrize(
+    "n, p, expected", [(60, 120, 0.4672969284626491), (300, 200, 0.5382094506268361)]
+)
+def test_coxph_step_halving_takes_no_log_of_zero(n, p, expected):
+    # Wide subsets drive a candidate step's risk-set sums to 0; such a
+    # step is halved without evaluating log(0). Values recorded at the
+    # commit that still emitted the RuntimeWarning.
+    from multiomix_aws_emr_spark.fs.fitness import cv_coxph_fitness
+
+    rng = np.random.RandomState(1)
+    x = rng.normal(size=(n, p))
+    time = np.abs(rng.normal(10, 3, n)) + 0.1
+    event = rng.uniform(size=n) < 0.7
+    ids = np.array([f"S{i}" for i in range(n)])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert cv_coxph_fitness(x, time, event, ids) == expected
 
 
 def test_sksurv_fold_loop_without_sksurv(monkeypatch):
