@@ -12,11 +12,12 @@ MIT) on idiomatic Spark SQL / DataFrame primitives:
 - ``operators`` — reusable dataflow operators (as-of join, dedup family,
                   similarity search, text analysis, multimodal plumbing).
 - ``functions`` — column-expression builders (vector math, projections).
-- ``plans``     — driver-side planning helpers (cost-model bin-packing, the
-                  reference's load-balancer mechanism).
+- ``plans``     — driver-side planning helpers (observed plan metrics,
+                  table statistics, the sketch cache).
 - ``streaming`` — Structured Streaming jobs (watermarked aggregations).
 - ``fs``        — feature-selection metaheuristics (BBHA) re-expressed as a
-                  driver loop over grouped Arrow UDF evaluation.
+                  driver loop with one ``mapInPandas`` evaluation job per
+                  iteration, one task per bin of stars.
 """
 
 __version__ = "0.1.0"

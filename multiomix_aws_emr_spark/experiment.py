@@ -207,6 +207,9 @@ def build_arg_parser() -> argparse.ArgumentParser:
     # general toggles (`scripts/parameters.py:91-108`)
     p.add_argument(
         "--use-load-balancer", type=_tf, default=True, metavar="{true,false}",
+        help="accepted for reference CLI parity but UNUSED: stars always go "
+        "to bins by the reference's sequential partitioner (its learned "
+        "runtime model with greedy bin packing measured no faster here)",
     )
     p.add_argument(
         "--use-broadcast", type=_tf, default=True, metavar="{true,false}",
@@ -324,7 +327,6 @@ def run_experiment(spark: SparkSession, args: argparse.Namespace) -> dict:
             variant=args.bbha_variant,
             coeff_1=args.coeff_1,
             coeff_2=args.coeff_2,
-            use_load_balancer=args.use_load_balancer,
             worst_fitness=worst_fitness,
         )
 

@@ -5,11 +5,15 @@ Re-founds the reference's core compute job
 
 - star population: a small driver-side list of (star_id, mask) pairs (D3);
   the reference's `sc.parallelize` + pinned `partitionBy` + `mapPartitions`
-  (`metaheuristics.py:248,297-299`, R7/R8/R9) becomes a planned bin per
-  star, grouped on the driver, and one ``mapInPandas`` job over
-  ``spark.range(k)`` in ``k`` partitions: one task per non-empty bin, no
-  exchange, so the bins really decide placement (a ``groupBy('bin_id')``
-  shuffle of KB-sized star rows is coalesced by AQE into one task);
+  (`metaheuristics.py:248,297-299`, R7/R8/R9) becomes contiguous bins by
+  the reference's sequential partitioner ``pos * n_bins // n_stars``
+  (`:290`, R8) and one ``mapInPandas`` job over ``spark.range(k)`` in
+  ``k`` partitions: one task per non-empty bin, no exchange, so the bins
+  really decide placement (a ``groupBy('bin_id')`` shuffle of KB-sized
+  star rows is coalesced by AQE into one task). The reference's learned
+  runtime model with greedy bin packing (R30/R31) is not kept: measured
+  here it placed stars no faster than the sequential bins, so
+  ``--use-load-balancer`` is accepted and ignored;
 - the all-features baseline (`scripts/core.py:171-179`, R34) is one more
   row of iteration 0's pass, star -1, so a run launches one evaluation
   job per iteration;
@@ -66,7 +70,7 @@ import sys
 import time as _time
 import zipimport
 from dataclasses import dataclass, field
-from typing import Callable, Optional
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -74,10 +78,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from multiomix_aws_emr_spark.fs.costmodel import (
-    RuntimeCostModel,
-    plan_star_bins,
-)
 from multiomix_aws_emr_spark.fs.fitness import (
     WORST_FITNESS,
     FitnessFn,
@@ -215,25 +215,28 @@ def _release_zip_importers() -> None:
     zipimport._zip_directory_cache.clear()
 
 
-def _evaluate(spark: SparkSession, evaluator, iteration: int, rows: list) -> list[dict]:
-    """One evaluation pass over ``(star_id, bin_id, mask)`` rows: one Spark
-    job with no exchange and one task per non-empty bin, then one bounded
-    collect (P7). The bins are grouped on the driver and ride in the task
-    closure with the bit-packed masks; ``spark.range(k)`` over ``k``
-    partitions gives each task exactly one bin id, so the bins decide
+def _evaluate(
+    spark: SparkSession, evaluator, iteration: int, stars: list, n_bins: int
+) -> list[dict]:
+    """One evaluation pass over ``(star_id, mask)`` pairs: one Spark job
+    with no exchange and one task per non-empty bin, then one bounded
+    collect (P7). Star ``pos`` goes to bin ``pos * n_bins // len(stars)``,
+    the reference's sequential partitioner (`metaheuristics.py:290`, R8),
+    so each bin is a contiguous range of positions. The ranges ride in the
+    task closure with the bit-packed masks; ``spark.range(k)`` over ``k``
+    partitions gives each task exactly one bin, so the bins decide
     placement — the reference's pinned ``partitionBy``
     (`metaheuristics.py:248,297-300`, R7–R9). Each task ends with
     :func:`_release_zip_importers`, so the worker's next task starts
     without re-reading zip directories. Returns the history rows
     (``iteration`` plus the :data:`_EVAL_SCHEMA` fields) sorted by star
     id."""
-    star_ids = np.array([r[0] for r in rows], dtype=np.int32)
-    packed = np.packbits(np.array([r[2] for r in rows], dtype=bool), axis=1)
-    width = len(rows[0][2])
-    by_bin: dict[int, list[int]] = {}
-    for pos, (_, bin_id, _) in enumerate(rows):
-        by_bin.setdefault(bin_id, []).append(pos)
-    bins = list(by_bin.values())
+    n = len(stars)
+    star_ids = np.array([s for s, _ in stars], dtype=np.int32)
+    packed = np.packbits(np.array([m for _, m in stars], dtype=bool), axis=1)
+    width = len(stars[0][1])
+    bin_of = np.arange(n) * n_bins // n
+    bins = [np.flatnonzero(bin_of == b) for b in np.unique(bin_of)]
 
     def run(batches):
         for batch in batches:
@@ -263,7 +266,7 @@ def evaluate_all_features_baseline(
     returned as a history-row dict with the reserved coordinates
     ``iteration=-1, star_id=-1``. :func:`run_bbha` does not call this: it
     evaluates the same row inside iteration 0's pass."""
-    [row] = _evaluate(spark, evaluator, -1, [(-1, 0, np.ones(n_features, np.int32))])
+    [row] = _evaluate(spark, evaluator, -1, [(-1, np.ones(n_features, np.int32))], 1)
     return row
 
 
@@ -285,31 +288,21 @@ def run_bbha(
     random_state: int = 42,
     binarization_threshold: Optional[float] = 0.6,
     n_bins: Optional[int] = None,
-    cost_fn: Optional[Callable[[np.ndarray], float]] = None,
     fitness_fn: FitnessFn = cv_linear_cox_fitness,
     variant: str = "classic",
     coeff_1: float = 2.2,
     coeff_2: float = 0.1,
-    use_load_balancer: bool = True,
     worst_fitness: float = WORST_FITNESS,
 ) -> BBHAResult:
     """Run BBHA feature selection over a samples x features pandas frame.
 
     ``x`` is broadcast once (bounded: the molecules matrix — the star
-    population, not the data, is what distributes). Load balancing
-    (R30/R31): an explicit ``cost_fn`` injects a predictor directly;
-    otherwise a :class:`RuntimeCostModel` self-fits on the
-    (n_features, exec_time) observations of completed iterations and,
-    once ready, steers greedy bin-packing — iteration 0 (and any
-    constant-width population) falls back to the sequential partitioner
-    (R8), the reference's own no-model behavior. Each non-empty bin is
-    one task of the iteration's evaluation job.
-
-    ``use_load_balancer=False`` (the reference's `--use-load-balancer
-    false`, `scripts/parameters.py:91-93`) forces the sequential
-    partitioner for every iteration — no cost model is trained and an
-    injected ``cost_fn`` is ignored; it defaults to the reference
-    parser's default ('true') and results are identical either way.
+    population, not the data, is what distributes). Every pass places its
+    stars in ``n_bins`` contiguous bins by the reference's sequential
+    partitioner (R8; default ``defaultParallelism``, the R33 executor
+    count), and each non-empty bin is one task of the iteration's
+    evaluation job. Bins decide which task runs a star, never what it
+    computes. ``n_stars`` and ``n_iterations`` must be at least 1.
 
     ``variant='improved'`` applies the three modifications of the improved
     BBHA the reference gates behind a flag (`metaheuristics.py:342-465`,
@@ -325,6 +318,10 @@ def run_bbha(
        binarization threshold draws a fresh uniform threshold per
        dimension, as the paper specifies.
     """
+    if n_stars < 1 or n_iterations < 1:
+        raise ValueError(
+            f"n_stars ({n_stars}) and n_iterations ({n_iterations}) must be >= 1"
+        )
     if variant not in ("classic", "improved"):
         raise ValueError("variant must be 'classic' or 'improved'")
     if variant == "improved":
@@ -347,8 +344,6 @@ def run_bbha(
     ]
     loop_rng = np.random.RandomState(random_state)
 
-    cost_model = RuntimeCostModel() if use_load_balancer else None
-
     history: list[dict] = []
     baseline: Optional[dict] = None
     bh_idx, bh_fitness = -1, -np.inf
@@ -368,30 +363,16 @@ def run_bbha(
     try:
         for iteration in range(n_iterations):
             # R34 (`core.py:171-179`): iteration 0's pass also evaluates the
-            # all-features baseline, as star -1, packed into a bin like a star.
+            # all-features baseline, as star -1, binned like a star.
             stars = list(enumerate(masks))
             if iteration == 0:
                 stars.insert(0, (-1, np.ones(n_features, dtype=np.int32)))
-            bins, _ = plan_star_bins(
-                [m for _, m in stars],
-                n_bins,
-                cost_fn=cost_fn if use_load_balancer else None,
-                cost_model=cost_model,
-            )
-            rows = _evaluate(
-                spark,
-                evaluator,
-                iteration,
-                [(star_id, bins[k], m) for k, (star_id, m) in enumerate(stars)],
-            )
+            rows = _evaluate(spark, evaluator, iteration, stars, n_bins)
             if iteration == 0:
                 baseline = {**rows.pop(0), "iteration": -1}
                 history.append(baseline)
             history.extend(rows)
             fitnesses = np.array([r["fitness"] for r in rows])
-            if cost_model is not None:
-                for r in rows:  # R30: train the width->time curve
-                    cost_model.observe(r["n_features"], r["exec_time"])
             improved = fitnesses > best_fitnesses
             for i in np.nonzero(improved)[0]:
                 best_fitnesses[i] = fitnesses[i]
@@ -510,8 +491,7 @@ def run_blind_search(
     `scripts/metaheuristics.py:524-527`), iteration 0's black hole is the
     arg-best with the fewer-features tie-break (`:670-681`, R15), and the
     loop ends before any position update. The all-features baseline
-    (R34) is reported as for BBHA. The load balancer is off — there is no
-    iteration history to train it on — so bins are sequential."""
+    (R34) is reported as for BBHA."""
     return run_bbha(
         spark,
         x,
@@ -522,6 +502,5 @@ def run_blind_search(
         random_state=random_state,
         n_bins=n_bins,
         fitness_fn=fitness_fn,
-        use_load_balancer=False,
         worst_fitness=worst_fitness,
     )

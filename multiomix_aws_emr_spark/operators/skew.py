@@ -4,10 +4,10 @@ AQE's skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`, on in
 the engine's conf baseline) handles most sort-merge-join skew at runtime
 by splitting oversized partitions. Salting remains the explicit tool for
 the cases AQE cannot rewrite: a broadcast-ineligible hot key feeding a
-shuffled hash join, skewed grouped execution feeding ``applyInPandas``
-(the BBHA fitness stage pins work by group — plans/binpack.py is the
-cost-model variant of the same idea), or engines/stages where AQE is
-disabled.
+shuffled hash join, skewed grouped execution feeding ``applyInPandas``,
+or engines/stages where AQE is disabled. (The BBHA fitness stage
+sidesteps both: ``fs/bbha._evaluate`` runs ``mapInPandas`` over one
+partition per bin of stars, with no exchange to skew.)
 
 Mechanics: the probe side scatters each row to one of ``n_salts``
 sub-keys; the build side replicates every row to all ``n_salts`` sub-keys.

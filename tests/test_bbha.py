@@ -98,10 +98,41 @@ def test_bbha_metrics_and_json(spark, dataset):
     assert doc["features"].count("|") == len(r.selected_features) - 1
 
 
-def test_bbha_with_cost_model_binpacking(spark, dataset):
-    # the reference's load-balancer path (R30/R31): cost ~ subset size
-    r = _run(spark, dataset, cost_fn=lambda m: 1.0 + float(m.sum()))
-    assert r.best_fitness > 0.7
+def test_bins_decide_where_never_what(spark, dataset):
+    # the number of bins changes which task runs a star, never what it
+    # computes: histories, best fitness and best mask are equal
+    runs = [_run(spark, dataset, n_bins=b) for b in (1, 3, 4)]
+    key = lambda h: (h["iteration"], h["star_id"], h["fitness"], h["n_features"])  # noqa: E731
+    one = runs[0]
+    for r in runs[1:]:
+        assert [key(h) for h in r.history] == [key(h) for h in one.history]
+        assert r.best_fitness == one.best_fitness
+        assert (r.best_mask == one.best_mask).all()
+
+
+@pytest.mark.parametrize(
+    "search, kw",
+    [
+        ("run_bbha", {"n_stars": 0}),
+        ("run_bbha", {"n_iterations": 0}),
+        ("run_blind_search", {"n_subsets": 0}),
+    ],
+    ids=["no-stars", "no-iterations", "blind-no-subsets"],
+)
+def test_empty_search_is_rejected_before_spark_work(spark, dataset, search, kw):
+    # no stars or no iterations is no search: rejected before the
+    # broadcast and the first evaluation job, not answered with a -inf
+    # "best" mask or an IndexError after iteration 0's job
+    from multiomix_aws_emr_spark.fs import bbha
+
+    x, time_col, event_col = dataset
+    group = f"bbha-empty-{search}-{'-'.join(kw)}"
+    with pytest.raises(ValueError, match="must be >= 1"):
+        _jobs_in_group(
+            spark, group,
+            lambda: getattr(bbha, search)(spark, x, time_col, event_col, **kw),
+        )
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_random_mask_seeded():
@@ -210,25 +241,53 @@ def _evaluator(dataset, fitness_fn=cv_linear_cox_fitness):
     return _make_evaluator(SimpleNamespace(value=payload), fitness_fn)
 
 
-def test_evaluate_pass_is_one_job_with_one_task_per_bin(spark, dataset):
-    # The reference pins each bin to its own partition
-    # (`scripts/metaheuristics.py:248,297-300`): 9 stars over 4 bins run
-    # as one job whose only stage has 4 tasks, not a shuffle that AQE
-    # may coalesce into a single task.
+def _evaluate_in_group(spark, dataset, group, n_stars, n_bins):
+    """One ``_evaluate`` pass whose fitness is the partition that ran the
+    star; returns the rows and the pass's stage task counts."""
     from multiomix_aws_emr_spark.fs.bbha import _evaluate
 
-    masks = [random_mask(10, np.random.RandomState(s + 1)) for s in range(9)]
-    rows = [(s, s % 4, m.tolist()) for s, m in enumerate(masks)]
+    # nested, so it pickles by value: the worker cannot import this module
+    def _partition_id(*_):
+        import pyspark
+
+        return float(pyspark.TaskContext.get().partitionId())
+
+    masks = [random_mask(10, np.random.RandomState(s + 1)) for s in range(n_stars)]
+    stars = list(enumerate(masks))
     out, jobs = _jobs_in_group(
-        spark, "bbha-evaluate-placement",
-        lambda: _evaluate(spark, _evaluator(dataset), 2, rows),
+        spark, group,
+        lambda: _evaluate(
+            spark, _evaluator(dataset, _partition_id), 2, stars, n_bins
+        ),
     )
-    assert [(r["iteration"], r["star_id"]) for r in out] == [(2, s) for s in range(9)]
+    assert [(r["iteration"], r["star_id"]) for r in out] == [
+        (2, s) for s in range(n_stars)
+    ]
     assert [r["n_features"] for r in out] == [int(m.sum()) for m in masks]
     assert len(jobs) == 1
     tracker = spark.sparkContext.statusTracker()
-    [stage] = tracker.getJobInfo(jobs[0]).stageIds
-    assert tracker.getStageInfo(stage).numTasks == 4
+    tasks = [
+        tracker.getStageInfo(st).numTasks
+        for st in tracker.getJobInfo(jobs[0]).stageIds
+    ]
+    return out, tasks
+
+
+def test_evaluate_pass_is_one_job_with_one_task_per_bin(spark, dataset):
+    # The reference pins each bin to its own partition
+    # (`scripts/metaheuristics.py:248,297-300`) and fills the bins by its
+    # sequential partitioner key * W // N (`:290`): 9 stars over 4 bins
+    # run as one job whose only stage has 4 tasks, not a shuffle that AQE
+    # may coalesce into a single task, and star s runs in partition
+    # s * 4 // 9.
+    out, tasks = _evaluate_in_group(spark, dataset, "bbha-evaluate-placement", 9, 4)
+    assert tasks == [4]
+    assert [int(r["fitness"]) for r in out] == [s * 4 // 9 for s in range(9)]
+
+    # fewer stars than bins: one task per star, no empty task
+    out, tasks = _evaluate_in_group(spark, dataset, "bbha-evaluate-sparse", 3, 4)
+    assert tasks == [3]
+    assert [int(r["fitness"]) for r in out] == [0, 1, 2]
 
 
 def test_baseline_rides_in_iteration_zero(spark, dataset):
@@ -292,8 +351,8 @@ def test_evaluation_tasks_leave_no_zip_importers(spark, dataset):
 
     evaluator = _evaluator(dataset, lambda *a: float(os.getpid()))
     n = spark.sparkContext.defaultParallelism
-    rows = [(s, s % n, np.ones(10, np.int32)) for s in range(n)]
-    evaluated = {int(r["fitness"]) for r in _evaluate(spark, evaluator, 0, rows)}
+    stars = [(s, np.ones(10, np.int32)) for s in range(n)]
+    evaluated = {int(r["fitness"]) for r in _evaluate(spark, evaluator, 0, stars, n)}
 
     # counted inline: the worker cannot import this test module, so it
     # cannot unpickle a reference to _zip_importers

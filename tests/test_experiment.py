@@ -333,8 +333,7 @@ def test_estimator_knobs_reach_dependency_free_fallback():
 
 def test_load_balancer_and_broadcast_toggles(spark, tsvs, tmp_path):
     """--use-load-balancer false / --use-broadcast false run end-to-end
-    and are result-identical to the defaults (the first trades packing
-    cost only and the second is parse-only,
+    and are result-identical to the defaults (both are parse-only,
     `scripts/parameters.py:91-102`)."""
     base = run_experiment(spark, _args(tsvs, tmp_path / "on"))
     off = run_experiment(
