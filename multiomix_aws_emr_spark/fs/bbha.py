@@ -215,14 +215,22 @@ def _release_zip_importers() -> None:
     zipimport._zip_directory_cache.clear()
 
 
+def sequential_bins(n: int, n_bins: int) -> list[np.ndarray]:
+    """The reference's sequential partitioner ``key * W // N``
+    (`metaheuristics.py:290`, R8): position ``pos`` of ``n`` goes to bin
+    ``pos * n_bins // n``. Returns the positions of each non-empty bin, in
+    bin order, so every bin is a contiguous range."""
+    bin_of = np.arange(n) * n_bins // max(n, 1)
+    return [np.flatnonzero(bin_of == b) for b in np.unique(bin_of)]
+
+
 def _evaluate(
     spark: SparkSession, evaluator, iteration: int, stars: list, n_bins: int
 ) -> list[dict]:
     """One evaluation pass over ``(star_id, mask)`` pairs: one Spark job
     with no exchange and one task per non-empty bin, then one bounded
-    collect (P7). Star ``pos`` goes to bin ``pos * n_bins // len(stars)``,
-    the reference's sequential partitioner (`metaheuristics.py:290`, R8),
-    so each bin is a contiguous range of positions. The ranges ride in the
+    collect (P7). Stars go to bins by :func:`sequential_bins`, so each
+    bin is a contiguous range of positions. The ranges ride in the
     task closure with the bit-packed masks; ``spark.range(k)`` over ``k``
     partitions gives each task exactly one bin, so the bins decide
     placement — the reference's pinned ``partitionBy``
@@ -235,8 +243,7 @@ def _evaluate(
     star_ids = np.array([s for s, _ in stars], dtype=np.int32)
     packed = np.packbits(np.array([m for _, m in stars], dtype=bool), axis=1)
     width = len(stars[0][1])
-    bin_of = np.arange(n) * n_bins // n
-    bins = [np.flatnonzero(bin_of == b) for b in np.unique(bin_of)]
+    bins = sequential_bins(n, n_bins)
 
     def run(batches):
         for batch in batches:
