@@ -334,23 +334,21 @@ def ps_pandas_api_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`scripts/core.py:80-291` is pandas end to end). ``to_spark()``
     hands the lazy plan back untouched; held to the standard DuckDB
     oracle like every other query, proving API choice doesn't change
-    semantics. Index-free conversion, no driver materialization."""
+    semantics. No driver materialization."""
     import pyspark.pandas as ps
 
     from multiomix_aws_emr_spark.sources.tables import load
 
     load(spark, sf_dir, "customer").createOrReplaceTempView("customer_ps")
-    pdf = ps.read_table("customer_ps")
-    agg = (
-        pdf.groupby("c_mktsegment")
-        .agg(
-            n=("c_custkey", "count"),
-            avg_bal=("c_acctbal", "mean"),
-            max_bal=("c_acctbal", "max"),
-        )
-        .reset_index()
+    # an explicit index column on the way in and out: the default
+    # sequence index and dropping the index each raise an advice warning
+    pdf = ps.read_table("customer_ps", index_col="c_name")
+    agg = pdf.groupby("c_mktsegment").agg(
+        n=("c_custkey", "count"),
+        avg_bal=("c_acctbal", "mean"),
+        max_bal=("c_acctbal", "max"),
     )
-    out = agg.to_spark()
+    out = agg.to_spark(index_col="c_mktsegment")
     return out.select(
         "c_mktsegment",
         F.col("n").cast("bigint").alias("n"),

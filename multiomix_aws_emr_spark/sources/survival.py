@@ -2,14 +2,15 @@
 
 Re-founds the reference reader (`scripts/utils.py:26-63`) on Spark:
 
-- each TSV is fetched as bytes by one Spark ``binaryFile`` job, so every
-  path the session's Hadoop file system can read works (local, ``file://``
-  and whatever ``s3a://``/``hdfs://`` the session is configured for), and
-  parsed on the driver by the reference's own parser, ``pd.read_csv(sep=
-  '\t', index_col=0)`` (`utils.py:53,59-62`). The matrix lands on the
-  driver anyway: it is broadcast to the evaluators (`core.py:167-169`).
-  One job per file at any width, where a CSV scan plus a cast projection
-  took two (BASELINE.md).
+- each TSV is copied on the driver through the session's Hadoop
+  ``FileSystem``, with no Spark job, so every path the session can read
+  works (local, ``file://`` and whatever ``s3a://``/``hdfs://`` the
+  session is configured for), and parsed on the driver by the
+  reference's own parser, ``pd.read_csv(sep='\t', index_col=0)``
+  (`utils.py:53,59-62`). The matrix lands on the driver anyway: it is
+  broadcast to the evaluators (`core.py:167-169`). Fetching the bytes
+  with a Spark job cost one job per file and about 7x the wall
+  (BASELINE.md).
 - the molecules TSV is stored features x samples with the feature id in
   the first column; the reader returns the reference's transpose
   (`utils.py:53`), samples x features.
@@ -22,8 +23,8 @@ Re-founds the reference reader (`scripts/utils.py:26-63`) on Spark:
 
 from __future__ import annotations
 
-import io
 import os
+import tempfile
 
 import numpy as np
 import pandas as pd
@@ -40,11 +41,40 @@ _EVENT = {s: True for s in ("1", "t", "true", "y", "yes")} | {
 }
 
 
+def _resolve(spark: SparkSession, path: str):
+    """(file system, status) of the one file ``path`` names, resolved as
+    Spark's file index does: a glob, or a directory whose visible files
+    (no path part under it starting with ``_`` or ``.``) are listed
+    recursively. The file system comes from the session's Hadoop conf, so
+    ``spark.hadoop.*`` settings apply. Anything but exactly one file
+    raises ``ValueError``."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    files = []
+    for status in fs.globStatus(hpath) or []:  # None: a missing plain path
+        if not status.isDirectory():
+            files.append(status)
+            continue
+        root = status.getPath().toUri().getPath().rstrip("/") + "/"
+        listing = fs.listFiles(status.getPath(), True)
+        while listing.hasNext():
+            leaf = listing.next()
+            parts = leaf.getPath().toUri().getPath()[len(root):].split("/")
+            if not any(p.startswith(("_", ".")) for p in parts):
+                files.append(leaf)
+    if len(files) != 1:
+        raise ValueError(f"{path}: expected exactly one file, matched {len(files)}")
+    return fs, files[0]
+
+
 def _read_tsv(
     spark: SparkSession, path: str, columns: dict[str, type] | None = None
 ) -> pd.DataFrame:
-    """Fetch the one file ``path`` names as bytes (one Spark job) and parse
-    it with ``pd.read_csv(sep='\\t', index_col=0)``.
+    """Copy the one file ``path`` names (see :func:`_resolve`) into a
+    private temporary directory on the driver, with no Spark job, and
+    parse it with ``pd.read_csv(sep='\\t', index_col=0)``; the copy is
+    removed whether or not the parse succeeds.
 
     The first column is the index and stays a verbatim string (``0012``,
     ``NA``). ``columns`` maps the other columns to read to their dtypes;
@@ -53,49 +83,47 @@ def _read_tsv(
     (an empty cell among them) as NaN; any other non-number raises
     ``ValueError``. Floats are parsed correctly rounded (``round_trip``),
     as Spark's string cast did: pandas' default parser is one ulp off on
-    about a third of 17-digit values. Compression follows the file suffix
-    (:data:`_COMPRESSION`).
-
-    Spark's ``binaryFile`` source holds a file in one byte array, so a
-    file must be under 2 GiB; a 500 x 20,000 molecules TSV is about 100 MB.
+    about a third of 17-digit values. Compression follows the resolved
+    file's suffix (:data:`_COMPRESSION`).
     """
-    # toArrow, not collect: the bytes cross in one Arrow batch, in about
-    # half collect()'s wall on a 100 MB file
-    files = (
-        spark.read.format("binaryFile").load(path).select("path", "content").toArrow()
-    )
-    if files.num_rows != 1:
-        raise ValueError(
-            f"{path}: expected exactly one file, matched {files.num_rows}"
-        )
-    name = files["path"][0].as_py()
-    content = files["content"][0].as_buffer()
+    fs, status = _resolve(spark, path)
+    name = status.getPath().toString()
     compression = _COMPRESSION.get(os.path.splitext(name.lower())[1])
-    id_col, *value_cols = pd.read_csv(
-        io.BytesIO(content), sep="\t", nrows=0, compression=compression
-    ).columns
-    usecols = None if columns is None else [id_col, *columns]
-    if columns is None:
-        columns = dict.fromkeys(value_cols, np.float64)
-    floats = [c for c, t in columns.items() if t is np.float64]
-    return pd.read_csv(
-        io.BytesIO(content),
-        sep="\t",
-        index_col=0,
-        usecols=usecols,
-        compression=compression,
-        dtype={id_col: str, **columns},
-        keep_default_na=False,
-        na_values=dict.fromkeys(floats, _NA),
-        float_precision="round_trip",
-    )
+    with tempfile.TemporaryDirectory() as tmp:
+        local = os.path.join(tmp, "copy")
+        jvm = spark._jvm
+        # the raw local file system writes no .crc beside the copy
+        fs.copyToLocalFile(
+            False,
+            status.getPath(),
+            jvm.org.apache.hadoop.fs.Path(jvm.java.io.File(local).toURI()),
+            True,
+        )
+        id_col, *value_cols = pd.read_csv(
+            local, sep="\t", nrows=0, compression=compression
+        ).columns
+        usecols = None if columns is None else [id_col, *columns]
+        if columns is None:
+            columns = dict.fromkeys(value_cols, np.float64)
+        floats = [c for c, t in columns.items() if t is np.float64]
+        return pd.read_csv(
+            local,
+            sep="\t",
+            index_col=0,
+            usecols=usecols,
+            compression=compression,
+            dtype={id_col: str, **columns},
+            keep_default_na=False,
+            na_values=dict.fromkeys(floats, _NA),
+            float_precision="round_trip",
+        )
 
 
 def read_molecules_tsv(spark: SparkSession, path: str) -> pd.DataFrame:
     """Molecules TSV (features x samples, `utils.py:53`) -> samples x
     features doubles, in file order (see :func:`_read_tsv` for the cell
-    spellings, the compression and the 2 GiB limit). Raises ``ValueError``
-    naming repeated feature ids."""
+    spellings and the compression). Raises ``ValueError`` naming repeated
+    feature ids."""
     x = _read_tsv(spark, path)
     duplicated = sorted(x.index[x.index.duplicated()].unique())
     if duplicated:

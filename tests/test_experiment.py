@@ -98,8 +98,8 @@ def test_experiment_is_seed_deterministic(spark, tsvs, tmp_path):
 
 
 def test_experiment_job_budget(spark, tsvs, tmp_path):
-    """One byte-fetch job per TSV, one evaluation job per BBHA iteration,
-    and none for the artifacts: 2 + 3 jobs for 3 iterations."""
+    """One evaluation job per BBHA iteration and none for the ingest or
+    the artifacts: 3 jobs for 3 iterations."""
     sc = spark.sparkContext
     group = "experiment-job-budget"
     sc.setLocalProperty("spark.jobGroup.id", group)
@@ -107,7 +107,7 @@ def test_experiment_job_budget(spark, tsvs, tmp_path):
         run_experiment(spark, _args(tsvs, tmp_path / "budget"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2 + 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
 
 
 def test_metrics_rerun_replaces_dataset(spark, tsvs, tmp_path):

@@ -15,6 +15,7 @@ that slips a plain ``F.udf`` into any hot path fails here by name.
 """
 
 import re
+import warnings
 
 import pytest
 
@@ -43,6 +44,18 @@ def test_oracle_parity(qid, spark, duck, sf_dir):
     rel = duck.sql(ORACLES[qid])
     problems = compare_results(sdf, rel)
     assert not problems, f"{qid}: " + "; ".join(problems)
+
+
+def test_pandas_api_query_raises_no_advice_warning(spark, sf_dir):
+    """ps_pandas_api_groupby names its index columns, so neither the
+    default-index nor the dropped-index advice fires."""
+    from pyspark.pandas.utils import PandasAPIOnSparkAdviceWarning
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        QUERIES["ps_pandas_api_groupby"](spark, sf_dir).collect()
+    advice = [w for w in caught if w.category is PandasAPIOnSparkAdviceWarning]
+    assert not advice, [str(w.message) for w in advice]
 
 
 @pytest.mark.parametrize("qid", sorted(set(QUERIES) - set(ORACLES)))

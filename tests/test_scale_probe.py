@@ -294,9 +294,8 @@ def test_core_scaling_speedup_summary_flags_flat_queries():
 
 def test_survival_tier_smoke(spark, tmp_path):
     """The survival tier at smoke size: seeded inputs are byte-stable, and
-    one ``run_experiment --model svm`` reports its phases — one ingest job
-    per TSV, one evaluation job per BBHA iteration and a sink with no
-    Spark job."""
+    one ``run_experiment --model svm`` reports its phases — an ingest and
+    a sink with no Spark job and one evaluation job per BBHA iteration."""
     from tools.scale_probe import probe_survival, write_survival_tsvs
 
     a = write_survival_tsvs(str(tmp_path / "a"), 3, 40, 30)
@@ -309,7 +308,7 @@ def test_survival_tier_smoke(spark, tmp_path):
     )
     assert rec["shape"] == "40x30"
     assert rec["eval_jobs"] == 2
-    assert rec["ingest_jobs"] == 2
+    assert rec["ingest_jobs"] == 0
     assert rec["sink_jobs"] == 0
     assert rec["evals"] == 3 * 2 + 1  # plus the all-features baseline
     assert 0.0 <= rec["best_metric"] <= 1.0

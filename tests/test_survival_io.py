@@ -1,6 +1,8 @@
 """Survival TSV ingest + clean vs a pandas reference implementing the
 reference repo's exact semantics (`scripts/utils.py:26-63`)."""
 
+import tempfile
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -155,7 +157,7 @@ def test_ingest_job_count_does_not_grow_with_width(spark, fixtures, tmp_path):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-    assert counts == [2, 2], counts  # one byte-fetch job per file
+    assert counts == [0, 0], counts  # the driver reads through Hadoop's FS
 
 
 def test_duplicate_feature_ids_rejected(spark, tmp_path):
@@ -214,6 +216,45 @@ def test_path_must_match_one_file(spark, fixtures, tmp_path):
     for reader in (read_molecules_tsv, read_clinical_tsv):
         with pytest.raises(ValueError, match="expected exactly one file, matched 2"):
             reader(spark, str(both))
+
+
+def test_path_forms_read_like_the_plain_path(spark, fixtures, tmp_path):
+    """A ``file://`` URI, a glob matching one file and a directory holding
+    one data file beside Spark's hidden ``_SUCCESS`` and ``.crc`` files
+    all read that file."""
+    mol_path, _, _, _ = fixtures
+    plain = read_molecules_tsv(spark, mol_path)
+    part = tmp_path / "part"
+    part.mkdir()
+    (part / "part-00000.tsv").write_bytes(open(mol_path, "rb").read())
+    (part / "_SUCCESS").write_text("")
+    (part / ".part-00000.tsv.crc").write_bytes(b"crc")
+    for form in (f"file://{mol_path}", mol_path[:-3] + "t?v", str(part)):
+        pd.testing.assert_frame_equal(read_molecules_tsv(spark, form), plain)
+
+
+def test_missing_path_matches_no_file(spark, tmp_path):
+    for reader in (read_molecules_tsv, read_clinical_tsv):
+        with pytest.raises(ValueError, match="expected exactly one file, matched 0"):
+            reader(spark, str(tmp_path / "absent.tsv"))
+
+
+def test_local_copy_is_removed(spark, fixtures, tmp_path, monkeypatch):
+    """The driver-side copy is gone after a good read and after reads that
+    raise: a non-boolean ``event``, and a non-number ``time`` that fails
+    inside ``pd.read_csv`` while the copy is open."""
+    _, clin_path, _, _ = fixtures
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    read_clinical_tsv(spark, clin_path)
+    assert list(scratch.iterdir()) == []
+    for row, error in (("maybe\t1", "are not booleans"), ("1\tsoon", "soon")):
+        bad = tmp_path / "bad.tsv"
+        bad.write_text(f"sample\tevent\ttime\nS0\t{row}\n")
+        with pytest.raises(ValueError, match=error):
+            read_clinical_tsv(spark, str(bad))
+        assert list(scratch.iterdir()) == []
 
 
 @pytest.mark.parametrize("spelled", [("1", "0"), ("true", "false"), ("TRUE", "False")])
